@@ -101,12 +101,12 @@ def main(argv=None):
     from pignlproc_spark.checkpoint import CheckpointManager
     from pignlproc_spark.operators import triples as T
     from pignlproc_spark.plans import pipeline
-    from pignlproc_spark.session import get_session
+    from pignlproc_spark.session import codegen_compiles, get_session
 
     spark = SparkSession.getActiveSession() or get_session(app_name="build-kg")
     ckpt = CheckpointManager(args.checkpoint) if args.checkpoint else None
 
-    t0 = time.time()
+    t0, compiles0 = time.time(), codegen_compiles(spark)
     if args.synth_sf is not None:
         res = pipeline.run_synth(spark, f"sf{args.synth_sf}", ckpt=ckpt)
     else:
@@ -186,7 +186,16 @@ def main(argv=None):
             tables.write_tsv(df, f"{args.out}/tsv/{name}")
 
     wall = time.time() - t0
-    print(json.dumps({"triples": n, "wall_s": round(wall, 1), "triples_per_sec": round(n / wall, 1), "outputs": outputs}))
+    report = {
+        "triples": n,
+        "wall_s": round(wall, 1),
+        "triples_per_sec": round(n / wall, 1),
+        # generated classes compiled during this run: near zero when the
+        # same session already ran these plans (codegen cache hits)
+        "codegen_compiles": codegen_compiles(spark) - compiles0,
+        "outputs": outputs,
+    }
+    print(json.dumps(report))
     res.unpersist()
     return 0
 

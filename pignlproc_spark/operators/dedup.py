@@ -587,7 +587,10 @@ def duplicate_spans(
 
     Pass a precomputed/materialized ``toks`` (doc_id, _toks) to share
     the tokenization pass with other consumers (strip_duplicate_spans
-    does — Spark reuses exchanges, not arbitrary subplans).
+    does — Spark reuses exchanges, not arbitrary subplans). A
+    caller-built ``toks`` must come through :func:`tokens_once` or a
+    checkpoint: a plain tokenizer projection is inlined into the window
+    lambda and re-tokenizes once per window element.
     """
     if toks is None:
         toks = df.select(F.col(id_col).alias("doc_id"), tokens_once(F.col(text_col)).alias("_toks"))
@@ -715,6 +718,9 @@ def contamination_spans(
     Scale shape identical to :func:`contamination`: broadcast eval-gram
     probe (corpus never shuffles for the join) + the tiny hit set
     through one per-doc window merge.
+
+    A caller-built ``toks`` (doc_id, _toks) must come through
+    :func:`tokens_once` or a checkpoint, as for :func:`duplicate_spans`.
     """
     if toks is None:
         toks = df.select(F.col(id_col).cast("bigint").alias("doc_id"), tokens_once(F.col(text_col)).alias("_toks"))

@@ -159,6 +159,10 @@ def test_window_operators_tokenize_once(spark):
         (4, lambda: textstats.bigram_surprisal(docs)),
         (3, lambda: textstats.collocations(docs)),
     ):
+        # both the transform(sequence/transform(slice match and the
+        # regexp_extract_all ceilings read Spark's plan rendering, which
+        # is version-specific (written against 4.1): a Spark upgrade that
+        # renders these expressions differently must re-derive them
         plan = build()._jdf.queryExecution().optimizedPlan().toString()
         inlined = [
             line

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from pignlproc_spark import synth
 from pignlproc_spark.operators import dedup
-from pignlproc_spark.session import get_session
+from pignlproc_spark.session import DEFAULT_CPUS, get_session
 
 
 def t(name, fn):
@@ -29,7 +29,7 @@ def t(name, fn):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     which = set(sys.argv[1:]) or {"tfcos", "neardup"}
     synth.generate(synth.sf_of_dir(sf_dir))
     spark = get_session(app_name="profile-hot", cpus=cpus)

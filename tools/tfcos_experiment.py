@@ -16,14 +16,14 @@ from pyspark.sql import functions as F
 from pignlproc_spark import synth
 from pignlproc_spark.operators import dedup
 from pignlproc_spark.plans import pipeline
-from pignlproc_spark.session import get_session
+from pignlproc_spark.session import DEFAULT_CPUS, get_session
 
 
 def main():
     sf_dir = "/root/testdata/sf0.1"
     synth.generate(synth.sf_of_dir(sf_dir))
-    spark = get_session(app_name="tfcos-exp", cpus=32)
-    spark.range(10000).repartition(32).select(F.sum("id")).collect()
+    spark = get_session(app_name="tfcos-exp")
+    spark.range(10000).repartition(DEFAULT_CPUS).select(F.sum("id")).collect()
     import tempfile
 
     pages_dir = tempfile.mkdtemp(prefix="tfcos_exp_")
