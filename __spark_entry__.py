@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pignlproc_spark import synth
 from pignlproc_spark.functions.extract import parse_pages
 from pignlproc_spark.functions.tokenize import STOPWORDS
-from pignlproc_spark.operators import dedup, linking, multimodal, similarity, textstats
+from pignlproc_spark.operators import dedup, linking, multimodal, textstats
 from pignlproc_spark.operators.canonicalize import expand_disambiguations, resolve_mapping
 from pignlproc_spark.plans import pipeline
 
@@ -441,7 +441,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs_explode_tokens=docs_explode_tokens,
     )
 
-    # ---- training-data ops (documents/embeddings) ----
+    # ---- training-data ops (documents) ----
     def docs_dedup_exact(spark, sf_dir):
         return dedup.exact_duplicates(_read(spark, sf_dir, "documents"))
 
@@ -563,75 +563,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def docs_tfidf_topk(spark, sf_dir):
         return textstats.tfidf_topk(_read(spark, sf_dir, "documents"), k=3)
 
-    def emb_dot_topk(spark, sf_dir):
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.dot_topk_quantized(emb, emb.where(F.col("vec_id") < 10), k=5)
-
-    def emb_near_dups(spark, sf_dir):
-        # all-pairs exact-integer mode (the oracle path; the scale path
-        # is n_planes-bucketed — tested in pytest)
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.embedding_near_duplicates(emb, min_cos_pct=40)
-
-    def emb_srp_topk_q(spark, sf_dir):
-        # SEARCH twin of emb_srp_pairs: banded integer-SRP bucket
-        # candidates ranked by the integer-cosine key — the rows-only
-        # float srp_lsh_topk upgraded to the hash-exact contract
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.srp_topk_q(emb, emb.where(F.col("vec_id") < 10), k=5, dim=64)
-
-    def emb_ivf_topk_q(spark, sf_dir):
-        # IVF tier with the hash-exact contract: all-integer codebook
-        # (floor-mean Lloyd step), integer-dot assignment + probes,
-        # integer-cosine ranking within probed cells
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.ivf_topk_q(
-            emb, emb.where(F.col("vec_id") < 10), k=5, n_centroids=8, nprobe=2
-        )
-
-    def emb_srp_pairs(spark, sf_dir):
-        # the BUCKETED ANN scale tier, oracle-pinned: banded integer
-        # SRP-LSH candidates (8 bands x 4 quantized hyperplanes, band
-        # equi-join — NO crossJoin, plan-asserted in test_plans.py)
-        # + exact integer cosine verify. Candidates ⊆ emb_near_dups.
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.srp_banded_pairs(emb, min_cos_pct=40, dim=64)
-
-    def emb_pq_adc_topk_q(spark, sf_dir):
-        # PQ-ADC tier with the hash-exact contract: all-integer
-        # subspace codebooks (squared-L2 argmin assignment, floor-mean
-        # Lloyd step), m=8 codes per vector, query-side exact-integer
-        # LUT, approximate dot = BIGINT sum of m LUT entries.
-        # Completes the ANN family: brute / SRP-LSH / IVF / PQ.
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.pq_adc_topk_q(
-            emb, emb.where(F.col("vec_id") < 10), k=5, m=8, ks=4
-        )
-
-    def emb_ivfpq_topk_q(spark, sf_dir):
-        # the PRODUCTION ANN configuration, hash-exact end to end:
-        # IVF restricts the scan (integer-dot probes), PQ compresses it
-        # (m=8 codes + exact-integer query LUT); non-residual variant
-        # so both codebooks replay independently in SQL
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.ivfpq_topk_q(
-            emb, emb.where(F.col("vec_id") < 10), k=5,
-            n_centroids=8, nprobe=2, m=8, ks=4,
-        )
-
-    def emb_ivfpq_residual_topk_q(spark, sf_dir):
-        # CLASSICAL IVFADC, hash-exact: PQ codebooks trained on the
-        # exact-integer residuals v_q - centroid_q[cluster]; the
-        # inner-product ranking decomposes as <q,c> (per-(query,cell)
-        # base term) + BIGINT sum of m residual-LUT entries. Measured
-        # recall gain over the raw-vector tier: BASELINE.md "ANN
-        # retrieval quality"
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.ivfpq_residual_topk_q(
-            emb, emb.where(F.col("vec_id") < 10), k=5,
-            n_centroids=8, nprobe=2, m=8, ks=4,
-        )
-
     def docs_quality_classifier(spark, sf_dir):
         # CCLogReg v1: bit-deterministic distributed training of a
         # hashed bag-of-words quality classifier (hard-sigmoid GD,
@@ -654,22 +585,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("doc_id").cast("bigint").alias("doc_id"), F.col("y").alias("label")
             ),
             "doc_id",
-        )
-
-    def emb_semantic_keep(spark, sf_dir):
-        # SemDeDup-style end-to-end verdict: integer-exact cosine pairs
-        # -> transitive clusters -> min-id survivor per cluster
-        # (all-pairs oracle mode; the SRP-bucketed path is pytest-pinned)
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.semantic_dedup_keep(emb, min_cos_pct=40)
-
-    def emb_semantic_keep_banded(spark, sf_dir):
-        # the 100-TB SemDeDup configuration, hash-exact END TO END:
-        # banded integer-SRP candidate pairs (no cross join) → exact
-        # integer cosine verify → transitive closure → min-id keep
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.semantic_dedup_keep(
-            emb, min_cos_pct=40, bands=8, band_planes=4, dim=64
         )
 
     def docs_lang_id(spark, sf_dir):
@@ -1215,45 +1130,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return domain_quota(synth.pages_for(spark, sf_dir), k=40)
 
-    def events_cohort_retention(spark, sf_dir):
-        # retention triangle: cohort = user's first active day; count
-        # distinct users per (cohort, day offset) — one (user, day)
-        # distinct pass, min-day aggregate, co-partitioned join back
-        from pignlproc_spark.operators import temporal
-
-        return temporal.cohort_retention(_read(spark, sf_dir, "events"))
-
-    def events_funnel(spark, sf_dir):
-        # ordered view -> click -> purchase funnel (earliest-completion
-        # chain; per-user aggregates joined stepwise, no event-level
-        # self-join)
-        from pignlproc_spark.operators import temporal
-
-        return temporal.funnel(
-            _read(spark, sf_dir, "events"), ["view", "click", "purchase"]
-        )
-
-    def events_hourly_rollup(spark, sf_dir):
-        # temporal rollup on the crawl/event timestamp: hour bucket as
-        # epoch seconds (TZ pinned UTC both engines), exact-int value
-        # quantization (floor of an IEEE double is reproducible; SUM of
-        # raw doubles is not)
-        e = _read(spark, sf_dir, "events")
-        return (
-            e.select(
-                F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).cast("bigint").alias("hour_epoch"),
-                "event_type",
-                "user_id",
-                F.floor(F.col("value") * 100).cast("bigint").alias("_v"),
-            )
-            .groupBy("hour_epoch", "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("_v").cast("bigint").alias("value_c_sum"),
-                F.countDistinct("user_id").cast("bigint").alias("n_users"),
-            )
-        )
-
     def events_sessionize(spark, sf_dir):
         # gap-based sessionization (30-min inactivity closes a session):
         # the batch form of a session window, via lag/cumsum — exact
@@ -1311,10 +1187,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         web_canonical_urls=web_canonical_urls,
         web_domain_stats=web_domain_stats,
         web_domain_quota=web_domain_quota,
-        events_cohort_retention=events_cohort_retention,
-        events_funnel=events_funnel,
         web_url_dedup=web_url_dedup,
-        events_hourly_rollup=events_hourly_rollup,
         events_sessionize=events_sessionize,
         docs_stratified_sample=docs_stratified_sample,
         docs_global_token_stats=docs_global_token_stats,
@@ -1443,22 +1316,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     # ---- rows-only checks (non-SQL-expressible / float paths) ----
-    def emb_cosine_topk(spark, sf_dir):
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.cosine_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
-
-    def emb_cosine_topk_q(spark, sf_dir):
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.cosine_topk_quantized(emb, emb.where(F.col("vec_id") < 10), k=5)
-
-    def emb_srp_lsh_topk(spark, sf_dir):
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.srp_lsh_topk(emb, emb.where(F.col("vec_id") < 10), k=5, dim=64)
-
-    def emb_ivf_topk(spark, sf_dir):
-        emb = _read(spark, sf_dir, "embeddings")
-        return similarity.ivf_topk(emb, emb.where(F.col("vec_id") < 10), k=5, n_centroids=16, nprobe=4)
-
     def media_features(spark, sf_dir):
         return multimodal.extract_media_features(multimodal.fake_media_df(spark, 64)).drop("feature")
 
@@ -1547,16 +1404,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs_mix_temperature=docs_mix_temperature,
         docs_quality_gate=docs_quality_gate,
         docs_tfidf_topk=docs_tfidf_topk,
-        emb_dot_topk=emb_dot_topk,
-        emb_near_dups=emb_near_dups,
-        emb_srp_pairs=emb_srp_pairs,
-        emb_srp_topk_q=emb_srp_topk_q,
-        emb_ivf_topk_q=emb_ivf_topk_q,
-        emb_pq_adc_topk_q=emb_pq_adc_topk_q,
-        emb_ivfpq_topk_q=emb_ivfpq_topk_q,
-        emb_ivfpq_residual_topk_q=emb_ivfpq_residual_topk_q,
-        emb_semantic_keep=emb_semantic_keep,
-        emb_semantic_keep_banded=emb_semantic_keep_banded,
         docs_quality_classifier=docs_quality_classifier,
         docs_lang_id=docs_lang_id,
         docs_quality=docs_quality,
@@ -1564,10 +1411,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs_token_counts=docs_token_counts,
         docs_bpe_pieces=docs_bpe_pieces,
         docs_corpus_filter=docs_corpus_filter,
-        emb_cosine_topk=emb_cosine_topk,
-        emb_cosine_topk_q=emb_cosine_topk_q,
-        emb_srp_lsh_topk=emb_srp_lsh_topk,
-        emb_ivf_topk=emb_ivf_topk,
         media_features=media_features,
         media_stats_real=media_stats_real,
         media_audio_frames=media_audio_frames,
@@ -1806,45 +1649,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exc = hi.exceptAll(lo).select("o_orderpriority", F.lit("except_all").alias("tag"))
         return inter.unionByName(exc)
 
-    def tpch_price_band_join(spark, sf_dir):
-        # interval join via the bucketed equi-join reformulation (no
-        # NestedLoop/cartesian); non-uniform bands, exact cent prices
-        from pignlproc_spark.operators.intervals import interval_join
-
-        bands = [
-            ("t1", 0, 50_000_00),
-            ("t2", 50_000_00, 120_000_00),
-            ("t3", 120_000_00, 210_000_00),
-            ("t4", 210_000_00, 330_000_00),
-            ("t5", 330_000_00, 1_000_000_00),
-        ]
-        iv = spark.createDataFrame(bands, "band string, lo long, hi long")
-        o = _read(spark, sf_dir, "orders").select(
-            F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("price_c")
-        )
-        j = interval_join(o, iv, "price_c", bucket_width=10_000_00)
-        return j.groupBy("band").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum("price_c").cast("bigint").alias("sum_price_c"),
-        )
-
-    def events_session_native(spark, sf_dir):
-        # native session_window sessionization; the oracle is the
-        # lag/cumsum formulation (boundary semantics probed + frozen:
-        # exact-gap merges, end = last event + gap)
-        from pignlproc_spark.operators.temporal import session_windows
-
-        e = _read(spark, sf_dir, "events").select(
-            "user_id", F.col("ts").cast("timestamp").alias("ts")
-        )
-        s = session_windows(e, key="user_id", ts_col="ts", gap="30 minutes")
-        return s.select(
-            "user_id",
-            F.unix_micros("session_start").alias("start_us"),
-            F.unix_micros("session_end").alias("end_us"),
-            "n_events",
-        )
-
     def events_user_mode(spark, sf_dir):
         # per-group mode with frozen (cnt DESC, type ASC) tie-break
         from pyspark.sql import Window as W
@@ -1874,60 +1678,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return stats.kcore_members(_pipeline(spark, sf_dir).mentions, k=3)
 
-    def events_attribution_join(spark, sf_dir):
-        # attribution/funnel join: every purchase paired with the same
-        # user's clicks in the preceding 30 minutes (the many-match
-        # sibling of the as-of join; streaming parity in pytest)
-        from pignlproc_spark.operators.temporal import attribution_join
-
-        e = _read(spark, sf_dir, "events")
-        j = attribution_join(
-            e.where(F.col("event_type") == "purchase"),
-            e.where(F.col("event_type") == "click"),
-            lookback="30 minutes",
-        )
-        return j.select(
-            F.col("k").cast("bigint").alias("user_id"),
-            F.col("l_event_id").cast("bigint").alias("purchase_id"),
-            F.unix_micros(F.col("l_ts").cast("timestamp")).alias("purchase_ts_us"),
-            F.col("r_event_id").cast("bigint").alias("click_id"),
-            F.unix_micros(F.col("r_ts").cast("timestamp")).alias("click_ts_us"),
-        )
-
-    def events_user_ewma(spark, sf_dir):
-        # rows-only: float smoothing (exact pytest vs the recurrence);
-        # the engine's one stateless grouped-map applyInPandas — the
-        # per-group-sequential case the escape hatch exists for
-        from pignlproc_spark.operators.temporal import user_ewma
-
-        return user_ewma(_read(spark, sf_dir, "events"), alpha=0.3)
-
-    def events_asof_join(spark, sf_dir):
-        # backward as-of join (each click to the user's latest error at
-        # or before it) via the union-and-window formulation — one hash
-        # shuffle on user_id, no range join; exact-int columns
-        from pignlproc_spark.operators.temporal import asof_join
-
-        e = _read(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            # ts is TIMESTAMP_NTZ; session TZ is pinned UTC so the cast
-            # is identity and matches DuckDB's naive epoch_us
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-            "event_type",
-        )
-        clicks = e.where(F.col("event_type") == "click").drop("event_type")
-        errors = e.where(F.col("event_type") == "error").drop("event_type")
-        out = asof_join(clicks, errors, on="user_id", ts_col="ts_us", right_cols=["event_id"], suffix="_err")
-        return out.select(
-            "event_id",
-            "user_id",
-            "ts_us",
-            F.col("event_id_err").alias("err_event_id"),
-            F.col("ts_us_err").alias("err_ts_us"),
-            (F.col("ts_us") - F.col("ts_us_err")).alias("lag_us"),
-        )
-
     def docs_positional_index(spark, sf_dir):
         # positional inverted index; the driver-checkable projection
         # keeps exact ints (full positions array covered by pytest)
@@ -1942,50 +1692,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def docs_collocations(spark, sf_dir):
         return textstats.collocations(_read(spark, sf_dir, "documents"), min_count=2, k=100)
-
-    def events_tumbling(spark, sf_dir):
-        # native tumbling windows (F.window): 15-minute fixed buckets
-        # per event_type. Epoch-aligned starts are frozen semantics, so
-        # the oracle is pure integer epoch arithmetic; counts + the
-        # quantized value sum ride one partial/final aggregate
-        from pignlproc_spark.operators.temporal import tumbling_windows
-
-        e = _read(spark, sf_dir, "events").select(
-            "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("_v"),
-        )
-        t = tumbling_windows(
-            e,
-            "ts",
-            "15 minutes",
-            keys=("event_type",),
-            value_exprs=[F.sum("_v").cast("bigint").alias("value_c_sum")],
-        )
-        return t.select(
-            "event_type",
-            F.unix_micros("window_start").alias("start_us"),
-            F.unix_micros("window_end").alias("end_us"),
-            F.col("n_events").alias("cnt"),
-            "value_c_sum",
-        )
-
-    def events_sliding(spark, sf_dir):
-        # overlapping windows (30 min sliding by 15): each event lands
-        # in exactly duration/slide = 2 windows via Catalyst's Expand
-        # projection — never a self-join or range join
-        from pignlproc_spark.operators.temporal import tumbling_windows
-
-        e = _read(spark, sf_dir, "events").select(
-            "event_type", F.col("ts").cast("timestamp").alias("ts")
-        )
-        t = tumbling_windows(e, "ts", "30 minutes", slide="15 minutes", keys=("event_type",))
-        return t.select(
-            "event_type",
-            F.unix_micros("window_start").alias("start_us"),
-            F.unix_micros("window_end").alias("end_us"),
-            F.col("n_events").alias("cnt"),
-        )
 
     def events_grouping_sets(spark, sf_dir):
         # explicit GROUPING SETS ((event_type), (day), ()) — the two
@@ -2068,46 +1774,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dedup can't express (remixed docs score low while passing
         # near-dup); exact integers, gram-level two-phase aggregate
         return textstats.novelty_score(_read(spark, sf_dir, "documents"), n=3)
-
-    def docs_hll_tokens(spark, sf_dir):
-        # CCHll v1 approximate distinct-token count per lang: md5-hash
-        # HLL, 256 registers, integer-exact harmonic sum, ONE IEEE
-        # division — oracle-exact down to the estimate (the sketch
-        # Spark's own approx_count_distinct can't reproduce outside
-        # the JVM). At 100 TB the distinct items never shuffle — only
-        # ≤ groups × 256 register rows do (map-side partial MAX)
-        from pignlproc_spark.functions.tokenize import tokens_col
-        from pignlproc_spark.operators import sketches
-
-        toks = _read(spark, sf_dir, "documents").select(
-            "lang",
-            F.explode(tokens_col(F.col("text"), apply_stoplist=False)).alias("token"),
-        )
-        return sketches.hll_distinct(toks, "token", ("lang",))
-
-    def docs_cms_tokens(spark, sf_dir):
-        # CCCms v1 count-min point-frequency: a 4×4096 integer-SUM
-        # sketch of ALL token occurrences, probed with the distinct
-        # tokens of every 101st doc; exact_count shown beside est_count
-        # so the one-sided guarantee (est ≥ exact, ≤ e·N/4096 over) is
-        # visible in the result. At 100 TB only ≤ 4×4096 register rows
-        # shuffle (map-side partial SUM); the probe lookup broadcasts
-        # the register table — oracle-exact down to every estimate
-        from pignlproc_spark.functions.tokenize import tokens_col
-        from pignlproc_spark.operators import sketches
-
-        toks = _read(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.explode(tokens_col(F.col("text"), apply_stoplist=False)).alias("token"),
-        )
-        probes = toks.where(F.col("doc_id") % 101 == 0).select("token").distinct()
-        est = sketches.cms_lookup(sketches.cms_registers(toks, "token"), probes, "token")
-        exact = (
-            toks.join(F.broadcast(probes), "token", "semi")
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).cast("long").alias("exact_count"))
-        )
-        return est.join(exact, "token").select("token", "exact_count", "est_count")
 
     def docs_line_dedup(spark, sf_dir):
         # CCNet-style corpus-wide line dedup: the documents table is
@@ -2215,45 +1881,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return stats.label_propagation(_pipeline(spark, sf_dir).mentions, rounds=4)
 
-    def docs_bpe_vocab(spark, sf_dir):
-        # distributed BPE tokenizer induction (CCBpe v1): 10 learned
-        # merges over the corpus word-frequency table; oracle = 10-round
-        # unrolled materialized-CTE replay with list_reduce merge-apply
-        from pignlproc_spark.operators import bpe
-
-        return bpe.learn_bpe(_read(spark, sf_dir, "documents"), n_merges=10).merges
-
-    def docs_bpe_encode(spark, sf_dir):
-        # per-doc CCBpe encoding as a relational join against the
-        # learned word→pieces dictionary (broadcast); corpus stays JVM-side
-        from pignlproc_spark.operators import bpe
-
-        d = _read(spark, sf_dir, "documents")
-        return bpe.encode_corpus(d, bpe.learn_bpe(d, n_merges=10))
-
-    def docs_bpe_vocab_batched(spark, sf_dir):
-        # CCBpeB v1 — the LATENCY scale tier of BPE induction: up to 8
-        # merges accepted per driver round under the frozen within-
-        # round symbol-disjointness rule (~4x fewer sequential Spark
-        # jobs than the 1-merge rounds of docs_bpe_vocab); oracle =
-        # the same rule replayed (recursive-CTE greedy selection +
-        # multi-pair list_reduce fold per unrolled round)
-        from pignlproc_spark.operators import bpe
-
-        return bpe.learn_bpe_batched(
-            _read(spark, sf_dir, "documents"), n_merges=10, batch=8, window=32
-        ).merges
-
     q.update(
-        docs_bpe_vocab=docs_bpe_vocab,
-        docs_bpe_vocab_batched=docs_bpe_vocab_batched,
-        docs_bpe_encode=docs_bpe_encode,
         docs_chunk_windows=docs_chunk_windows,
         kg_incremental_merge=kg_incremental_merge,
         kg_label_propagation=kg_label_propagation,
         docs_novelty=docs_novelty,
-        docs_hll_tokens=docs_hll_tokens,
-        docs_cms_tokens=docs_cms_tokens,
         docs_surprisal=docs_surprisal,
         docs_bigram_surprisal=docs_bigram_surprisal,
         docs_dsir_weights=docs_dsir_weights,
@@ -2276,8 +1908,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tpch_set_ops=tpch_set_ops,
         tpch_set_ops_all=tpch_set_ops_all,
         tpch_customers_with_big_orders=tpch_customers_with_big_orders,
-        tpch_price_band_join=tpch_price_band_join,
-        events_session_native=events_session_native,
         events_rollup=events_rollup,
         events_pivot=events_pivot,
         events_running_window=events_running_window,
@@ -2285,13 +1915,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         kg_sf_fuzzy_pairs=kg_sf_fuzzy_pairs,
         events_value_ntile=events_value_ntile,
         events_user_mode=events_user_mode,
-        events_asof_join=events_asof_join,
-        events_user_ewma=events_user_ewma,
-        events_attribution_join=events_attribution_join,
         docs_positional_index=docs_positional_index,
         docs_collocations=docs_collocations,
-        events_tumbling=events_tumbling,
-        events_sliding=events_sliding,
         events_cube=events_cube,
         events_grouping_sets=events_grouping_sets,
         docs_simhash_pairs=docs_simhash_pairs,
@@ -2313,53 +1938,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the bucket; cumulative window runs over the bucket table only
         return textstats.vocab_growth(_read(spark, sf_dir, "documents"), bucket_docs=50)
 
-    def _planted_triples(spark, sf_dir):
-        # shared defect-planting base for the integrity queries: the
-        # md5-bucket selector of kg_incremental_merge (% 50) marks
-        # deterministic rows the oracle re-derives from golden_triples
-        from pignlproc_spark.operators.textstats import hash_bucket
-
-        t = _pipeline(spark, sf_dir).triples
-        h = hash_bucket(F.concat_ws("|", "subj", "pred", "obj"), 50)
-        return t, t.withColumn("_h", h)
-
-    def kg_graph_audit(spark, sf_dir):
-        # post-materialization KG QA (integrity.graph_audit) over the
-        # pipeline triples with four planted defect families: self-
-        # loops w/ weight 0 (kg:linksTo, h=0), functional violations
-        # (kg:uriCount second object, h=1), exact duplicate triples
-        # (kg:mentions, h=2), NULL objects (kg:annotatedCount, h=4)
-        # — each check provably fires
-        from pignlproc_spark.operators import integrity
-
-        t, th = _planted_triples(spark, sf_dir)
-        loops = th.where((F.col("pred") == "kg:linksTo") & (F.col("_h") == 0)).select(
-            "subj", "pred", F.col("subj").alias("obj"), F.lit(0).cast("long").alias("weight")
-        )
-        fviol = th.where((F.col("pred") == "kg:uriCount") & (F.col("_h") == 1)).select(
-            "subj", "pred", F.concat(F.col("obj"), F.lit("_v2")).alias("obj"), "weight"
-        )
-        dups = th.where((F.col("pred") == "kg:mentions") & (F.col("_h") == 2)).select(
-            "subj", "pred", "obj", "weight"
-        )
-        nulls = th.where((F.col("pred") == "kg:annotatedCount") & (F.col("_h") == 4)).select(
-            "subj", "pred", F.lit(None).cast("string").alias("obj"), "weight"
-        )
-        return integrity.graph_audit(
-            t.unionByName(loops).unionByName(fviol).unionByName(dups).unionByName(nulls)
-        )
-
-    def kg_dangling_refs(spark, sf_dir):
-        # referential-integrity check: kg:mentions objects that no
-        # kg:uriCount row defines, with planted ghost targets (h=3)
-        from pignlproc_spark.operators import integrity
-
-        t, th = _planted_triples(spark, sf_dir)
-        ghosts = th.where((F.col("pred") == "kg:mentions") & (F.col("_h") == 3)).select(
-            "subj", "pred", F.concat(F.col("obj"), F.lit("_ghost")).alias("obj"), "weight"
-        )
-        return integrity.dangling_refs(t.unionByName(ghosts))
-
     def web_host_split(spark, sf_dir):
         # leakage-safe train/valid/test assignment at host granularity
         # (split = frozen md5 bucket of the host string; 80/10/10)
@@ -2370,8 +1948,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(
         docs_count_of_counts=docs_count_of_counts,
         docs_vocab_growth=docs_vocab_growth,
-        kg_graph_audit=kg_graph_audit,
-        kg_dangling_refs=kg_dangling_refs,
         web_host_split=web_host_split,
     )
     return q
@@ -3344,38 +2920,6 @@ def oracle_sql() -> dict[str, str]:
       FROM {g('pages')}
     ) WHERE rank <= 40
     """
-    o["events_funnel"] = """
-    WITH s1 AS (
-      SELECT user_id AS u, min(ts) AS t FROM events WHERE event_type = 'view' GROUP BY 1
-    ), s2 AS (
-      SELECT e.user_id AS u, min(e.ts) AS t FROM events e JOIN s1 ON e.user_id = s1.u
-      WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1
-    ), s3 AS (
-      SELECT e.user_id AS u, min(e.ts) AS t FROM events e JOIN s2 ON e.user_id = s2.u
-      WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1
-    )
-    SELECT 1::INT AS step_idx, 'view' AS step, count(*)::BIGINT AS n_users FROM s1
-    UNION ALL
-    SELECT 2::INT, 'click', count(*)::BIGINT FROM s2
-    UNION ALL
-    SELECT 3::INT, 'purchase', count(*)::BIGINT FROM s3
-    """
-    o["events_cohort_retention"] = """
-    WITH ud AS (
-      SELECT DISTINCT user_id AS u, epoch(date_trunc('day', ts))::BIGINT AS d FROM events
-    ), firsts AS (
-      SELECT u, min(d) AS cohort_epoch FROM ud GROUP BY u
-    )
-    SELECT cohort_epoch, ((d - cohort_epoch) // 86400)::BIGINT AS day_offset,
-           count(*)::BIGINT AS n_users
-    FROM ud JOIN firsts USING (u) GROUP BY 1, 2
-    """
-    o["events_hourly_rollup"] = """
-    SELECT epoch(date_trunc('hour', ts))::BIGINT AS hour_epoch, event_type,
-           count(*) AS cnt, sum(floor(value * 100))::BIGINT AS value_c_sum,
-           count(DISTINCT user_id)::BIGINT AS n_users
-    FROM events GROUP BY 1, 2
-    """
     o["events_sessionize"] = """
     WITH o AS (
       SELECT user_id, ts, event_id, floor(epoch(ts))::BIGINT AS ep,
@@ -3654,498 +3198,6 @@ def oracle_sql() -> dict[str, str]:
            sum(tf * doc_freq)::BIGINT AS sum_doc_freq
     FROM tf JOIN dfreq USING (tok) GROUP BY doc_id
     """
-    o["emb_dot_topk"] = """
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings WHERE vec_id < 10
-    ), tv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), scored AS (
-      SELECT q.vec_id AS query_id, t.vec_id AS neighbor_id,
-             list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * t.v[i]))::BIGINT AS dot_q
-      FROM qv q CROSS JOIN tv t WHERE q.vec_id != t.vec_id
-    )
-    SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id, dot_q, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY dot_q DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 5
-    """
-    o["emb_cosine_topk_q"] = """
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings WHERE vec_id < 10
-    ), q AS (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS norm_q2 FROM qv
-      WHERE list_sum(list_transform(v, x -> x * x)) > 0
-    ), tv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), t AS (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS norm_n2 FROM tv
-      WHERE list_sum(list_transform(v, x -> x * x)) > 0
-    ), scored AS (
-      SELECT q.vec_id AS query_id, t.vec_id AS neighbor_id,
-             list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * t.v[i]))::BIGINT AS dot_q,
-             q.norm_q2, t.norm_n2
-      FROM q CROSS JOIN t WHERE q.vec_id != t.vec_id
-    )
-    SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-           dot_q, norm_q2, norm_n2, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY dot_q / (sqrt(norm_q2::DOUBLE) * sqrt(norm_n2::DOUBLE)) DESC, neighbor_id ASC
-      ) AS rank
-      FROM scored
-    ) WHERE rank <= 5
-    """
-    o["emb_near_dups"] = """
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), n AS (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS nrm FROM qv
-    ), p AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]))::BIGINT AS dot_q,
-             a.nrm AS norm_a, b.nrm AS norm_b
-      FROM n a JOIN n b ON a.vec_id < b.vec_id
-    )
-    SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, dot_q, norm_a, norm_b
-    FROM p WHERE dot_q > 0 AND 10000 * dot_q * dot_q >= 1600 * norm_a * norm_b
-    """
-    # emb_srp_pairs: the BUCKETED scale tier — banded integer SRP-LSH
-    # (the same seeded plane integers are spliced as literals into both
-    # engines, so bucket codes agree bit-for-bit) + the emb_near_dups
-    # exact-integer cosine verify. Candidate join is band+code equality
-    # — the oracle replays the bucketing, not a cross product.
-    from pignlproc_spark.operators.similarity import srp_planes_q as _srp_pl
-
-    _srp_r = 4
-    _srp_rows = ", ".join(
-        f"({i}, [{', '.join(str(x) for x in p)}]::BIGINT[])"
-        for i, p in enumerate(_srp_pl(64, 32))
-    )
-    o["emb_srp_pairs"] = f"""
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), n AS (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS nrm FROM qv
-    ), pl AS (
-      SELECT * FROM (VALUES {_srp_rows}) AS t(pid, p)
-    ), sg AS (
-      SELECT n.vec_id, pl.pid // {_srp_r} AS band,
-             CASE WHEN list_sum(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * pl.p[i])) >= 0
-                  THEN (1::BIGINT << (pl.pid % {_srp_r})) ELSE 0 END AS bit
-      FROM n CROSS JOIN pl
-    ), code AS (
-      SELECT vec_id, band, sum(bit)::BIGINT AS code FROM sg GROUP BY 1, 2
-    ), cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM code a JOIN code b ON a.band = b.band AND a.code = b.code AND a.vec_id < b.vec_id
-    ), p AS (
-      SELECT c.id_a, c.id_b,
-             list_sum(list_transform(range(1, len(na.v) + 1), i -> na.v[i] * nb.v[i]))::BIGINT AS dot_q,
-             na.nrm AS norm_a, nb.nrm AS norm_b
-      FROM cand c JOIN n na ON na.vec_id = c.id_a JOIN n nb ON nb.vec_id = c.id_b
-    )
-    SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, dot_q, norm_a, norm_b
-    FROM p WHERE dot_q > 0 AND 10000 * dot_q * dot_q >= 1600 * norm_a * norm_b
-    """
-    # emb_srp_topk_q: the SEARCH twin — same banded bucketing (same
-    # plane literals), candidates where the query (vec_id < 10) shares
-    # ANY band code with a corpus vector, ranked by the integer-cosine
-    # key of emb_cosine_topk_q.
-    o["emb_srp_topk_q"] = f"""
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), n AS (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS nrm FROM qv
-      WHERE list_sum(list_transform(v, x -> x * x)) > 0
-    ), pl AS (
-      SELECT * FROM (VALUES {_srp_rows}) AS t(pid, p)
-    ), sg AS (
-      SELECT n.vec_id, pl.pid // {_srp_r} AS band,
-             CASE WHEN list_sum(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * pl.p[i])) >= 0
-                  THEN (1::BIGINT << (pl.pid % {_srp_r})) ELSE 0 END AS bit
-      FROM n CROSS JOIN pl
-    ), code AS (
-      SELECT vec_id, band, sum(bit)::BIGINT AS code FROM sg GROUP BY 1, 2
-    ), cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, t.vec_id AS neighbor_id
-      FROM code q JOIN code t ON q.band = t.band AND q.code = t.code
-      WHERE q.vec_id < 10 AND q.vec_id != t.vec_id
-    ), scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_sum(list_transform(range(1, len(nq.v) + 1), i -> nq.v[i] * nt.v[i]))::BIGINT AS dot_q,
-             nq.nrm AS norm_q2, nt.nrm AS norm_n2
-      FROM cand c JOIN n nq ON nq.vec_id = c.query_id JOIN n nt ON nt.vec_id = c.neighbor_id
-    )
-    SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-           dot_q, norm_q2, norm_n2, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY dot_q / (sqrt(norm_q2::DOUBLE) * sqrt(norm_n2::DOUBLE)) DESC, neighbor_id ASC
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
-    """
-    # emb_ivf_topk_q: all-integer IVF replay — seeds = 8 lowest-id
-    # quantized vectors, one Lloyd step (integer-dot argmax assignment,
-    # per-dim floor(sum/count) means — floor of an exact-int ratio via
-    # IEEE double is engine-identical), integer-dot probe top-2 cells,
-    # integer-cosine ranking within probed cells.
-    o["emb_ivf_topk_q"] = """
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), n AS MATERIALIZED (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS nrm FROM qv
-      WHERE list_sum(list_transform(v, x -> x * x)) > 0
-    ), seeds AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, v
-      FROM qv ORDER BY vec_id LIMIT 8
-    ), d0 AS MATERIALIZED (
-      SELECT q.vec_id, s.cidx,
-             list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * s.v[i]))::BIGINT AS dot
-      FROM qv q CROSS JOIN seeds s
-    ), a0 AS MATERIALIZED (
-      SELECT vec_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM d0
-      ) WHERE rn = 1
-    ), m1 AS MATERIALIZED (
-      SELECT a.cidx, u.s['dim'] AS dim,
-             floor(sum(u.s['val'])::DOUBLE / count(*))::BIGINT AS m
-      FROM a0 a JOIN qv q ON q.vec_id = a.vec_id,
-           unnest(list_transform(range(1, len(q.v) + 1), i -> {'dim': i, 'val': q.v[i]})) AS u(s)
-      GROUP BY 1, 2
-    ), cents AS MATERIALIZED (
-      SELECT s.cidx, coalesce(c.v, s.v) AS v
-      FROM seeds s LEFT JOIN (SELECT cidx, list(m ORDER BY dim) AS v FROM m1 GROUP BY cidx) c
-      USING (cidx)
-    ), d1 AS MATERIALIZED (
-      SELECT t.vec_id, c.cidx,
-             list_sum(list_transform(range(1, len(t.v) + 1), i -> t.v[i] * c.v[i]))::BIGINT AS dot
-      FROM n t CROSS JOIN cents c
-    ), a1 AS MATERIALIZED (
-      SELECT vec_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM d1
-      ) WHERE rn = 1
-    ), pr AS MATERIALIZED (
-      SELECT vec_id AS query_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM d1 WHERE vec_id < 10
-      ) WHERE rn <= 2
-    ), scored AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id,
-             list_sum(list_transform(range(1, len(nq.v) + 1), i -> nq.v[i] * nt.v[i]))::BIGINT AS dot_q,
-             nq.nrm AS norm_q2, nt.nrm AS norm_n2
-      FROM pr p JOIN a1 a USING (cidx)
-      JOIN n nq ON nq.vec_id = p.query_id JOIN n nt ON nt.vec_id = a.vec_id
-      WHERE p.query_id != a.vec_id
-    )
-    SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-           dot_q, norm_q2, norm_n2, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY dot_q / (sqrt(norm_q2::DOUBLE) * sqrt(norm_n2::DOUBLE)) DESC, neighbor_id ASC
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
-    """
-    # emb_pq_adc_topk_q: full PQ replay — seeds = 4 lowest-id quantized
-    # vectors sliced into 8 subspaces of 8 dims, one Lloyd step
-    # (integer squared-L2 argmin assignment with ties to the lowest
-    # codeword, per-dim floor(sum/count) means), corpus re-encoded to
-    # (sub, code), query LUT = exact integer partial dots, approximate
-    # dot = BIGINT sum of the 8 LUT entries. All hashed columns
-    # integers; ranking key is an integer.
-    o["emb_pq_adc_topk_q"] = """
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), seeds AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, v
-      FROM qv ORDER BY vec_id LIMIT 4
-    ), subs AS (SELECT unnest(range(0, 8))::INT AS sub
-    ), sc0 AS MATERIALIZED (
-      SELECT m.sub, s.cidx, list_transform(range(1, 9), i -> s.v[m.sub * 8 + i]) AS sv
-      FROM seeds s CROSS JOIN subs m
-    ), d0 AS MATERIALIZED (
-      SELECT q.vec_id, c.sub, c.cidx,
-             list_sum(list_transform(range(1, 9), i ->
-               (q.v[c.sub * 8 + i] - c.sv[i]) * (q.v[c.sub * 8 + i] - c.sv[i])))::BIGINT AS dist
-      FROM qv q CROSS JOIN sc0 c
-    ), a0 AS MATERIALIZED (
-      SELECT vec_id, sub, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist ASC, cidx ASC) AS rn
-        FROM d0
-      ) WHERE rn = 1
-    ), m1 AS MATERIALIZED (
-      -- pre-project the subvector, THEN lateral-unnest with a
-      -- len()-dependent range: DuckDB 1.0 fails to bind outer tables
-      -- in a lateral whose list_transform range is a pure constant
-      SELECT x.sub, x.cidx, u.s['dim'] AS dim,
-             floor(sum(u.s['val'])::DOUBLE / count(*))::BIGINT AS mval
-      FROM (
-        SELECT a.sub, a.cidx, list_transform(range(1, 9), i -> q.v[a.sub * 8 + i]) AS sv8
-        FROM a0 a JOIN qv q ON q.vec_id = a.vec_id
-      ) x, unnest(list_transform(range(1, len(x.sv8) + 1), i -> {'dim': i, 'val': x.sv8[i]})) AS u(s)
-      GROUP BY 1, 2, 3
-    ), cents AS MATERIALIZED (
-      SELECT s0.sub, s0.cidx, coalesce(c.sv, s0.sv) AS sv
-      FROM sc0 s0 LEFT JOIN (
-        SELECT sub, cidx, list(mval ORDER BY dim) AS sv FROM m1 GROUP BY 1, 2
-      ) c USING (sub, cidx)
-    ), d1 AS MATERIALIZED (
-      SELECT t.vec_id, c.sub, c.cidx,
-             list_sum(list_transform(range(1, 9), i ->
-               (t.v[c.sub * 8 + i] - c.sv[i]) * (t.v[c.sub * 8 + i] - c.sv[i])))::BIGINT AS dist
-      FROM qv t CROSS JOIN cents c
-    ), codes AS MATERIALIZED (
-      SELECT vec_id, sub, cidx AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist ASC, cidx ASC) AS rn
-        FROM d1
-      ) WHERE rn = 1
-    ), lut AS MATERIALIZED (
-      SELECT q.vec_id AS query_id, c.sub, c.cidx AS code,
-             list_sum(list_transform(range(1, 9), i -> q.v[c.sub * 8 + i] * c.sv[i]))::BIGINT AS part
-      FROM qv q CROSS JOIN cents c WHERE q.vec_id < 10
-    ), scored AS (
-      SELECT l.query_id, co.vec_id AS neighbor_id, sum(l.part)::BIGINT AS adc_q
-      FROM codes co JOIN lut l ON l.sub = co.sub AND l.code = co.code
-      WHERE l.query_id != co.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-           adc_q, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_q DESC, neighbor_id ASC
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
-    """
-    # emb_ivfpq_topk_q: BOTH codebook trainings replayed (the IVF
-    # chain of emb_ivf_topk_q without the norm filter — ADC needs no
-    # norms — plus the PQ chain of emb_pq_adc_topk_q), then probes ×
-    # cell-restricted codes × query LUT; approximate dot = BIGINT sum.
-    o["emb_ivfpq_topk_q"] = """
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), iseeds AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, v
-      FROM qv ORDER BY vec_id LIMIT 8
-    ), id0 AS MATERIALIZED (
-      SELECT q.vec_id, s.cidx,
-             list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * s.v[i]))::BIGINT AS dot
-      FROM qv q CROSS JOIN iseeds s
-    ), ia0 AS MATERIALIZED (
-      SELECT vec_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM id0
-      ) WHERE rn = 1
-    ), im1 AS MATERIALIZED (
-      SELECT a.cidx, u.s['dim'] AS dim,
-             floor(sum(u.s['val'])::DOUBLE / count(*))::BIGINT AS m
-      FROM ia0 a JOIN qv q ON q.vec_id = a.vec_id,
-           unnest(list_transform(range(1, len(q.v) + 1), i -> {'dim': i, 'val': q.v[i]})) AS u(s)
-      GROUP BY 1, 2
-    ), icents AS MATERIALIZED (
-      SELECT s.cidx, coalesce(c.v, s.v) AS v
-      FROM iseeds s LEFT JOIN (SELECT cidx, list(m ORDER BY dim) AS v FROM im1 GROUP BY cidx) c
-      USING (cidx)
-    ), id1 AS MATERIALIZED (
-      SELECT t.vec_id, c.cidx,
-             list_sum(list_transform(range(1, len(t.v) + 1), i -> t.v[i] * c.v[i]))::BIGINT AS dot
-      FROM qv t CROSS JOIN icents c
-    ), ia1 AS MATERIALIZED (
-      SELECT vec_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM id1
-      ) WHERE rn = 1
-    ), ipr AS MATERIALIZED (
-      SELECT vec_id AS query_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM id1 WHERE vec_id < 10
-      ) WHERE rn <= 2
-    ), pseeds AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, v
-      FROM qv ORDER BY vec_id LIMIT 4
-    ), psubs AS (SELECT unnest(range(0, 8))::INT AS sub
-    ), psc0 AS MATERIALIZED (
-      SELECT m.sub, s.cidx, list_transform(range(1, 9), i -> s.v[m.sub * 8 + i]) AS sv
-      FROM pseeds s CROSS JOIN psubs m
-    ), pd0 AS MATERIALIZED (
-      SELECT q.vec_id, c.sub, c.cidx,
-             list_sum(list_transform(range(1, 9), i ->
-               (q.v[c.sub * 8 + i] - c.sv[i]) * (q.v[c.sub * 8 + i] - c.sv[i])))::BIGINT AS dist
-      FROM qv q CROSS JOIN psc0 c
-    ), pa0 AS MATERIALIZED (
-      SELECT vec_id, sub, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist ASC, cidx ASC) AS rn
-        FROM pd0
-      ) WHERE rn = 1
-    ), pm1 AS MATERIALIZED (
-      SELECT x.sub, x.cidx, u.s['dim'] AS dim,
-             floor(sum(u.s['val'])::DOUBLE / count(*))::BIGINT AS mval
-      FROM (
-        SELECT a.sub, a.cidx, list_transform(range(1, 9), i -> q.v[a.sub * 8 + i]) AS sv8
-        FROM pa0 a JOIN qv q ON q.vec_id = a.vec_id
-      ) x, unnest(list_transform(range(1, len(x.sv8) + 1), i -> {'dim': i, 'val': x.sv8[i]})) AS u(s)
-      GROUP BY 1, 2, 3
-    ), pcents AS MATERIALIZED (
-      SELECT s0.sub, s0.cidx, coalesce(c.sv, s0.sv) AS sv
-      FROM psc0 s0 LEFT JOIN (
-        SELECT sub, cidx, list(mval ORDER BY dim) AS sv FROM pm1 GROUP BY 1, 2
-      ) c USING (sub, cidx)
-    ), pd1 AS MATERIALIZED (
-      SELECT t.vec_id, c.sub, c.cidx,
-             list_sum(list_transform(range(1, 9), i ->
-               (t.v[c.sub * 8 + i] - c.sv[i]) * (t.v[c.sub * 8 + i] - c.sv[i])))::BIGINT AS dist
-      FROM qv t CROSS JOIN pcents c
-    ), pcodes AS MATERIALIZED (
-      SELECT vec_id, sub, cidx AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist ASC, cidx ASC) AS rn
-        FROM pd1
-      ) WHERE rn = 1
-    ), lut AS MATERIALIZED (
-      SELECT q.vec_id AS query_id, c.sub, c.cidx AS code,
-             list_sum(list_transform(range(1, 9), i -> q.v[c.sub * 8 + i] * c.sv[i]))::BIGINT AS part
-      FROM qv q CROSS JOIN pcents c WHERE q.vec_id < 10
-    ), scored AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id, sum(l.part)::BIGINT AS adc_q
-      FROM ipr p
-      JOIN ia1 a ON a.cidx = p.cidx
-      JOIN pcodes co ON co.vec_id = a.vec_id
-      JOIN lut l ON l.query_id = p.query_id AND l.sub = co.sub AND l.code = co.code
-      WHERE p.query_id != a.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-           adc_q, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_q DESC, neighbor_id ASC
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
-    """
-    # emb_ivfpq_residual_topk_q: the CLASSICAL IVFADC replay — the IVF
-    # chain of emb_ivfpq_topk_q, then exact-integer residuals
-    # rv = v - icents[cluster], the PQ chain retrained ON the
-    # residuals, and the ranking key <q,c> + sum(residual-LUT): the
-    # base term is constant within a (query, cluster) group, folded
-    # with min() on both engines.
-    o["emb_ivfpq_residual_topk_q"] = """
-    WITH qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), iseeds AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, v
-      FROM qv ORDER BY vec_id LIMIT 8
-    ), id0 AS MATERIALIZED (
-      SELECT q.vec_id, s.cidx,
-             list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * s.v[i]))::BIGINT AS dot
-      FROM qv q CROSS JOIN iseeds s
-    ), ia0 AS MATERIALIZED (
-      SELECT vec_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM id0
-      ) WHERE rn = 1
-    ), im1 AS MATERIALIZED (
-      SELECT a.cidx, u.s['dim'] AS dim,
-             floor(sum(u.s['val'])::DOUBLE / count(*))::BIGINT AS m
-      FROM ia0 a JOIN qv q ON q.vec_id = a.vec_id,
-           unnest(list_transform(range(1, len(q.v) + 1), i -> {'dim': i, 'val': q.v[i]})) AS u(s)
-      GROUP BY 1, 2
-    ), icents AS MATERIALIZED (
-      SELECT s.cidx, coalesce(c.v, s.v) AS v
-      FROM iseeds s LEFT JOIN (SELECT cidx, list(m ORDER BY dim) AS v FROM im1 GROUP BY cidx) c
-      USING (cidx)
-    ), id1 AS MATERIALIZED (
-      SELECT t.vec_id, c.cidx,
-             list_sum(list_transform(range(1, len(t.v) + 1), i -> t.v[i] * c.v[i]))::BIGINT AS dot
-      FROM qv t CROSS JOIN icents c
-    ), ia1 AS MATERIALIZED (
-      SELECT vec_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM id1
-      ) WHERE rn = 1
-    ), ipr AS MATERIALIZED (
-      SELECT vec_id AS query_id, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cidx ASC) AS rn
-        FROM id1 WHERE vec_id < 10
-      ) WHERE rn <= 2
-    ), res AS MATERIALIZED (
-      SELECT t.vec_id, a.cidx AS cluster,
-             list_transform(range(1, len(t.v) + 1), i -> t.v[i] - c.v[i]) AS rv
-      FROM qv t JOIN ia1 a USING (vec_id) JOIN icents c ON c.cidx = a.cidx
-    ), pseeds AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, rv AS v
-      FROM res ORDER BY vec_id LIMIT 4
-    ), psubs AS (SELECT unnest(range(0, 8))::INT AS sub
-    ), psc0 AS MATERIALIZED (
-      SELECT m.sub, s.cidx, list_transform(range(1, 9), i -> s.v[m.sub * 8 + i]) AS sv
-      FROM pseeds s CROSS JOIN psubs m
-    ), pd0 AS MATERIALIZED (
-      SELECT q.vec_id, c.sub, c.cidx,
-             list_sum(list_transform(range(1, 9), i ->
-               (q.rv[c.sub * 8 + i] - c.sv[i]) * (q.rv[c.sub * 8 + i] - c.sv[i])))::BIGINT AS dist
-      FROM res q CROSS JOIN psc0 c
-    ), pa0 AS MATERIALIZED (
-      SELECT vec_id, sub, cidx FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist ASC, cidx ASC) AS rn
-        FROM pd0
-      ) WHERE rn = 1
-    ), pm1 AS MATERIALIZED (
-      SELECT x.sub, x.cidx, u.s['dim'] AS dim,
-             floor(sum(u.s['val'])::DOUBLE / count(*))::BIGINT AS mval
-      FROM (
-        SELECT a.sub, a.cidx, list_transform(range(1, 9), i -> q.rv[a.sub * 8 + i]) AS sv8
-        FROM pa0 a JOIN res q ON q.vec_id = a.vec_id
-      ) x, unnest(list_transform(range(1, len(x.sv8) + 1), i -> {'dim': i, 'val': x.sv8[i]})) AS u(s)
-      GROUP BY 1, 2, 3
-    ), pcents AS MATERIALIZED (
-      SELECT s0.sub, s0.cidx, coalesce(c.sv, s0.sv) AS sv
-      FROM psc0 s0 LEFT JOIN (
-        SELECT sub, cidx, list(mval ORDER BY dim) AS sv FROM pm1 GROUP BY 1, 2
-      ) c USING (sub, cidx)
-    ), pd1 AS MATERIALIZED (
-      SELECT t.vec_id, c.sub, c.cidx,
-             list_sum(list_transform(range(1, 9), i ->
-               (t.rv[c.sub * 8 + i] - c.sv[i]) * (t.rv[c.sub * 8 + i] - c.sv[i])))::BIGINT AS dist
-      FROM res t CROSS JOIN pcents c
-    ), pcodes AS MATERIALIZED (
-      SELECT vec_id, sub, cidx AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist ASC, cidx ASC) AS rn
-        FROM pd1
-      ) WHERE rn = 1
-    ), lut AS MATERIALIZED (
-      SELECT q.vec_id AS query_id, c.sub, c.cidx AS code,
-             list_sum(list_transform(range(1, 9), i -> q.v[c.sub * 8 + i] * c.sv[i]))::BIGINT AS part
-      FROM qv q CROSS JOIN pcents c WHERE q.vec_id < 10
-    ), qbase AS MATERIALIZED (
-      SELECT p.query_id, p.cidx,
-             list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i]))::BIGINT AS base
-      FROM ipr p JOIN qv q ON q.vec_id = p.query_id JOIN icents c ON c.cidx = p.cidx
-    ), scored AS (
-      SELECT p.query_id, r.vec_id AS neighbor_id,
-             (sum(l.part) + min(b.base))::BIGINT AS adc_q
-      FROM ipr p
-      JOIN res r ON r.cluster = p.cidx
-      JOIN pcodes co ON co.vec_id = r.vec_id
-      JOIN lut l ON l.query_id = p.query_id AND l.sub = co.sub AND l.code = co.code
-      JOIN qbase b ON b.query_id = p.query_id AND b.cidx = p.cidx
-      WHERE p.query_id != r.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-           adc_q, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_q DESC, neighbor_id ASC
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
-    """
     # docs_quality_classifier: CCLogReg v1 training replayed as
     # unrolled materialized-CTE rounds. Cross-engine exactness rests
     # on: integer weight/gradient state, integer sums only across
@@ -4194,78 +3246,6 @@ def oracle_sql() -> dict[str, str]:
       SELECT f.doc_id, sum(f.cnt * w.w_q)::BIGINT AS score_q
       FROM fb f JOIN w{_lr_rounds} w USING (bucket) GROUP BY 1
     ) s JOIN lab l USING (doc_id)
-    """
-
-    # emb_semantic_keep: the emb_near_dups pair predicate + recursive-
-    # CTE transitive closure + min-id keep (the docs_dedup_keep shape
-    # over the integer-exact cosine graph)
-    o["emb_semantic_keep"] = """
-    WITH RECURSIVE qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), n AS (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS nrm FROM qv
-    ), p AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM n a JOIN n b ON a.vec_id < b.vec_id
-      WHERE list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) > 0
-        AND 10000 * list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]))
-                  * list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]))
-            >= 1600 * a.nrm * b.nrm
-    ), sym AS (
-      SELECT id_a AS u, id_b AS v FROM p
-      UNION SELECT id_b, id_a FROM p
-    ), reach(u, l) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-      UNION
-      SELECT s.v, r.l FROM reach r JOIN sym s ON s.u = r.u
-    ), comp AS (SELECT u AS did, min(l) AS component_id FROM reach GROUP BY u)
-    SELECT e.vec_id::BIGINT AS vec_id,
-           coalesce(c.component_id, e.vec_id)::BIGINT AS component_id,
-           (coalesce(c.component_id, e.vec_id) = e.vec_id)::INT AS keep
-    FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.did
-    """
-
-    # emb_semantic_keep_banded: same closure + keep shape, but the
-    # pair graph is the BANDED integer-SRP candidate set (emb_srp_pairs
-    # bucketing, shared plane literals) — the scale tier end to end.
-    o["emb_semantic_keep_banded"] = f"""
-    WITH RECURSIVE qv AS (
-      SELECT vec_id, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS v
-      FROM embeddings
-    ), n AS (
-      SELECT vec_id, v, list_sum(list_transform(v, x -> x * x))::BIGINT AS nrm FROM qv
-    ), pl AS (
-      SELECT * FROM (VALUES {_srp_rows}) AS t(pid, p)
-    ), sg AS (
-      SELECT n.vec_id, pl.pid // {_srp_r} AS band,
-             CASE WHEN list_sum(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * pl.p[i])) >= 0
-                  THEN (1::BIGINT << (pl.pid % {_srp_r})) ELSE 0 END AS bit
-      FROM n CROSS JOIN pl
-    ), code AS (
-      SELECT vec_id, band, sum(bit)::BIGINT AS code FROM sg GROUP BY 1, 2
-    ), cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM code a JOIN code b ON a.band = b.band AND a.code = b.code AND a.vec_id < b.vec_id
-    ), p AS (
-      SELECT c.id_a, c.id_b FROM cand c
-      JOIN n na ON na.vec_id = c.id_a JOIN n nb ON nb.vec_id = c.id_b
-      WHERE list_sum(list_transform(range(1, len(na.v) + 1), i -> na.v[i] * nb.v[i])) > 0
-        AND 10000 * list_sum(list_transform(range(1, len(na.v) + 1), i -> na.v[i] * nb.v[i]))
-                  * list_sum(list_transform(range(1, len(na.v) + 1), i -> na.v[i] * nb.v[i]))
-            >= 1600 * na.nrm * nb.nrm
-    ), sym AS (
-      SELECT id_a AS u, id_b AS v FROM p
-      UNION SELECT id_b, id_a FROM p
-    ), reach(u, l) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-      UNION
-      SELECT s.v, r.l FROM reach r JOIN sym s ON s.u = r.u
-    ), comp AS (SELECT u AS did, min(l) AS component_id FROM reach GROUP BY u)
-    SELECT e.vec_id::BIGINT AS vec_id,
-           coalesce(c.component_id, e.vec_id)::BIGINT AS component_id,
-           (coalesce(c.component_id, e.vec_id) = e.vec_id)::INT AS keep
-    FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.did
     """
 
     o["docs_lang_id"] = _langid_sql()
@@ -4423,34 +3403,6 @@ def oracle_sql() -> dict[str, str]:
            coalesce(n_kept, 0)::BIGINT AS n_kept,
            coalesce(clean_text, '') AS clean_text
     FROM documents d LEFT JOIN n_all USING (doc_id) LEFT JOIN kept USING (doc_id)
-    """
-    # CCHll v1 — the oracle renders the full sketch chain (registers
-    # CTE + integer harmonic sum + the single IEEE division) from the
-    # SAME frozen constants as the Spark operator
-    from pignlproc_spark.operators.sketches import hll_distinct_sql
-
-    o["docs_hll_tokens"] = hll_distinct_sql(
-        f"SELECT lang, unnest({_tok_sql('text', stop=False)}) AS token FROM documents",
-        "token",
-        ("lang",),
-    )
-    # CCCms v1 — registers, probe lookup and the exact side rendered
-    # from the SAME frozen constants as the Spark operator
-    from pignlproc_spark.operators.sketches import cms_lookup_sql
-
-    _cms_toks = (
-        f"SELECT doc_id, unnest({_tok_sql('text', stop=False)}) AS token "
-        "FROM documents"
-    )
-    o["docs_cms_tokens"] = f"""
-    WITH toks AS ({_cms_toks}),
-    probes AS (SELECT DISTINCT token FROM toks WHERE doc_id % 101 = 0),
-    est AS ({cms_lookup_sql("SELECT token FROM toks", "SELECT token FROM probes", "token")}),
-    exact AS (
-      SELECT token, count(*)::BIGINT AS exact_count
-      FROM toks JOIN probes USING (token) GROUP BY token
-    )
-    SELECT token, exact_count, est_count FROM est JOIN exact USING (token)
     """
     o["web_fetch_schedule"] = f"""
     WITH ph AS (
@@ -4889,34 +3841,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT o_orderpriority, 'except_all' AS tag
     FROM (SELECT * FROM hi EXCEPT ALL SELECT * FROM lo)
     """
-    o["tpch_price_band_join"] = """
-    WITH iv(band, lo, hi) AS (VALUES
-      ('t1', 0, 5000000), ('t2', 5000000, 12000000),
-      ('t3', 12000000, 21000000), ('t4', 21000000, 33000000),
-      ('t5', 33000000, 100000000)
-    ), o AS (SELECT floor(o_totalprice * 100)::BIGINT AS price_c FROM orders)
-    SELECT band, count(*)::BIGINT AS n_orders, sum(price_c)::BIGINT AS sum_price_c
-    FROM o JOIN iv ON o.price_c >= iv.lo AND o.price_c < iv.hi
-    GROUP BY band
-    """
-    o["events_session_native"] = """
-    WITH e AS (
-      SELECT user_id::BIGINT AS user_id, epoch_us(ts)::BIGINT AS ts_us, event_id
-      FROM events
-    ), w AS (
-      SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev
-      FROM e
-    ), s AS (
-      SELECT *, sum(CASE WHEN prev IS NULL OR ts_us - prev > 1800000000 THEN 1 ELSE 0 END)
-                OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM w
-    )
-    SELECT user_id, min(ts_us)::BIGINT AS start_us,
-           (max(ts_us) + 1800000000)::BIGINT AS end_us,
-           count(*)::BIGINT AS n_events
-    FROM s GROUP BY user_id, sid
-    """
     o["events_rollup"] = """
     SELECT coalesce(event_type, 'ALL') AS event_type,
            coalesce(epoch(date_trunc('hour', ts))::BIGINT, -1) AS hour_epoch,
@@ -4953,43 +3877,6 @@ def oracle_sql() -> dict[str, str]:
       FROM events GROUP BY user_id, event_type
     ) WHERE rn = 1
     """
-    o["events_attribution_join"] = """
-    SELECT l.user_id::BIGINT AS user_id, l.event_id::BIGINT AS purchase_id,
-           epoch_us(l.ts)::BIGINT AS purchase_ts_us,
-           r.event_id::BIGINT AS click_id, epoch_us(r.ts)::BIGINT AS click_ts_us
-    FROM events l JOIN events r
-      ON l.user_id = r.user_id
-     AND l.event_type = 'purchase' AND r.event_type = 'click'
-     AND r.ts <= l.ts AND r.ts >= l.ts - INTERVAL 30 MINUTE
-    """
-    o["events_asof_join"] = """
-    WITH c AS (
-      SELECT event_id::BIGINT AS event_id, user_id::BIGINT AS user_id,
-             epoch_us(ts)::BIGINT AS ts_us
-      FROM events WHERE event_type = 'click'
-    ), e AS (
-      SELECT event_id::BIGINT AS event_id, user_id::BIGINT AS user_id,
-             epoch_us(ts)::BIGINT AS ts_us
-      FROM events WHERE event_type = 'error'
-    ), u AS (
-      SELECT user_id, ts_us, 0 AS side, event_id,
-             struct_pack(ts := ts_us, id := event_id) AS ref
-      FROM e
-      UNION ALL
-      SELECT user_id, ts_us, 1 AS side, event_id, NULL AS ref FROM c
-    ), w AS (
-      SELECT *, last_value(ref IGNORE NULLS) OVER (
-        PARTITION BY user_id
-        ORDER BY ts_us, side, event_id
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-      ) AS m
-      FROM u
-    )
-    SELECT event_id, user_id, ts_us,
-           m.id AS err_event_id, m.ts AS err_ts_us,
-           (ts_us - m.ts)::BIGINT AS lag_us
-    FROM w WHERE side = 1
-    """
     o["docs_positional_index"] = f"""
     WITH t AS (SELECT doc_id::BIGINT AS doc_id, {_tok_sql('text', stop=False)} AS l FROM documents)
     SELECT tok AS token, doc_id, count(*)::BIGINT AS tf,
@@ -5023,22 +3910,6 @@ def oracle_sql() -> dict[str, str]:
     LIMIT 100
     """
 
-    o["events_tumbling"] = """
-    SELECT event_type,
-           (epoch_us(ts) // 900000000 * 900000000)::BIGINT AS start_us,
-           (epoch_us(ts) // 900000000 * 900000000 + 900000000)::BIGINT AS end_us,
-           count(*)::BIGINT AS cnt,
-           sum(floor(value * 100))::BIGINT AS value_c_sum
-    FROM events GROUP BY 1, 2, 3
-    """
-    o["events_sliding"] = """
-    SELECT event_type,
-           ((epoch_us(ts) // 900000000 - i) * 900000000)::BIGINT AS start_us,
-           ((epoch_us(ts) // 900000000 - i) * 900000000 + 1800000000)::BIGINT AS end_us,
-           count(*)::BIGINT AS cnt
-    FROM events CROSS JOIN (VALUES (0), (1)) AS off(i)
-    GROUP BY 1, 2, 3
-    """
     o["events_grouping_sets"] = """
     SELECT coalesce(event_type, 'ALL') AS event_type,
            coalesce(epoch(date_trunc('day', ts))::BIGINT, -1) AS day_epoch,
@@ -5231,166 +4102,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT uri, lbl AS community FROM l{_lp_rounds}
     """
 
-    # docs_bpe_vocab / docs_bpe_encode: CCBpe v1 learning unrolled as
-    # materialized CTE rounds (the k-core/PageRank/LPA trick). Each
-    # round: freq-weighted adjacent-pair counts → 1-row argmax →
-    # greedy left-to-right merge-apply via a list_reduce string fold
-    # (chr(31) separators; symbols are tokenizer output, letters and
-    # digits only, so the separator can never occur inside one — the
-    # same accumulator spec as operators/bpe._apply_merge).
-    _bpe_rounds = 10
-    _bpe = [
-        f"w AS MATERIALIZED (SELECT tok AS word, count(*)::BIGINT AS freq FROM"
-        f" (SELECT unnest({_tok_sql('text', stop=False)}) AS tok FROM documents) GROUP BY tok)",
-        "s0 AS MATERIALIZED (SELECT word, freq, string_split(word, '') AS syms FROM w)",
-    ]
-    for i in range(_bpe_rounds):
-        _bpe.append(
-            f"p{i} AS MATERIALIZED (SELECT string_split(pr, chr(31))[1] AS l,"
-            f" string_split(pr, chr(31))[2] AS r, sum(freq)::BIGINT AS cnt FROM"
-            f" (SELECT freq, unnest(list_transform(range(1, len(syms)),"
-            f" j -> syms[j] || chr(31) || syms[j+1])) AS pr FROM s{i}) GROUP BY 1, 2)"
-        )
-        _bpe.append(
-            f"b{i} AS MATERIALIZED (SELECT l, r, cnt FROM p{i}"
-            f" ORDER BY cnt DESC, l ASC, r ASC LIMIT 1)"
-        )
-        _bpe.append(
-            f"s{i + 1} AS MATERIALIZED (SELECT word, freq,"
-            f" string_split(list_reduce(list_prepend('', s.syms),"
-            f" (acc, x) -> CASE WHEN ends_with(acc, chr(31) || b.l) AND x = b.r"
-            f" THEN acc || x ELSE acc || chr(31) || x END), chr(31))[2:] AS syms"
-            f" FROM s{i} s CROSS JOIN b{i} b)"
-        )
-    _bpe_merges = " UNION ALL ".join(
-        f"SELECT {i + 1}::INT AS rank, l AS lhs, r AS rhs, cnt AS pair_freq FROM b{i}"
-        for i in range(_bpe_rounds)
-    )
-    o["docs_bpe_vocab"] = f"""
-    WITH {', '.join(_bpe)}
-    {_bpe_merges}
-    """
-    o["docs_bpe_encode"] = f"""
-    WITH {', '.join(_bpe)},
-    tok AS (
-      SELECT doc_id, unnest(toks) AS tok, unnest(range(1, len(toks) + 1)) AS ord
-      FROM (SELECT doc_id, {_tok_sql('text', stop=False)} AS toks FROM documents)
-    ),
-    j AS (
-      SELECT t.doc_id, t.ord, len(s.syms)::BIGINT AS n,
-             array_to_string(s.syms, ' ') AS enc
-      FROM tok t JOIN s{_bpe_rounds} s ON t.tok = s.word
-    )
-    SELECT doc_id::BIGINT AS doc_id, sum(n)::BIGINT AS n_pieces,
-           md5(string_agg(enc, ' ' ORDER BY ord)) AS pieces_md5
-    FROM j GROUP BY doc_id
-    """
-
-    # docs_bpe_vocab_batched: CCBpeB v1 replay. Per unrolled round:
-    # pair counts → top-window ranking → the frozen greedy acceptance
-    # (recursive CTE walking ranks, carrying the used-symbol set
-    # {l, r, l||r} as a chr(31)-joined string, capped at
-    # min(batch, merges remaining)) → ONE multi-pair list_reduce fold
-    # (accepted pairs are symbol-disjoint, so the combined pass equals
-    # sequential application — operators/bpe.py spec block).
-    _bb_n, _bb_batch, _bb_window, _bb_rounds = 10, 8, 32, 10
-    _bb = [
-        f"w AS MATERIALIZED (SELECT tok AS word, count(*)::BIGINT AS freq FROM"
-        f" (SELECT unnest({_tok_sql('text', stop=False)}) AS tok FROM documents) GROUP BY tok)",
-        "bs0 AS MATERIALIZED (SELECT word, freq, string_split(word, '') AS syms FROM w)",
-        f"accu0 AS MATERIALIZED (SELECT 0::BIGINT AS rank, ''::VARCHAR AS l,"
-        f" ''::VARCHAR AS r, 0::BIGINT AS cnt WHERE FALSE)",
-    ]
-    for i in range(_bb_rounds):
-        _bb.append(
-            f"bp{i} AS MATERIALIZED (SELECT string_split(pr, chr(31))[1] AS l,"
-            f" string_split(pr, chr(31))[2] AS r, sum(freq)::BIGINT AS cnt FROM"
-            f" (SELECT freq, unnest(list_transform(range(1, len(syms)),"
-            f" j -> syms[j] || chr(31) || syms[j+1])) AS pr FROM bs{i}) GROUP BY 1, 2)"
-        )
-        _bb.append(
-            f"bt{i} AS MATERIALIZED (SELECT l, r, cnt, row_number() OVER"
-            f" (ORDER BY cnt DESC, l ASC, r ASC) AS rk FROM bp{i}"
-            f" QUALIFY rk <= {_bb_window})"
-        )
-        _bb.append(
-            f"bcap{i} AS MATERIALIZED (SELECT least({_bb_batch},"
-            f" {_bb_n} - (SELECT count(*) FROM accu{i})) AS cap)"
-        )
-        # the greedy scan is ONE list_reduce over the ranked window —
-        # a recursive CTE here re-evaluated its whole upstream chain
-        # (tokenize + pair counts) per iteration in the replay engine
-        # (~0.5 s x 32 ranks x rounds). State string layout:
-        #   "<cap>\x1c<used \x1f-joined>\x1c<accepted \x1d-joined>"
-        # with each element/accepted entry "l\x1er\x1ecnt".
-        _st = "string_split(acc, chr(28))"
-        _el = "string_split(x, chr(30))"
-        _used = f"string_split({_st}[2], chr(31))"
-        _nacc = (
-            f"(CASE WHEN {_st}[3] = '' THEN 0"
-            f" ELSE len(string_split({_st}[3], chr(29))) END)"
-        )
-        _bb.append(
-            f"btl{i} AS MATERIALIZED (SELECT coalesce(list("
-            f" l || chr(30) || r || chr(30) || cnt ORDER BY rk),"
-            f" []::VARCHAR[]) AS lst FROM bt{i})"
-        )
-        _bb.append(
-            f"bsel{i} AS MATERIALIZED (SELECT list_reduce("
-            f" list_prepend((SELECT cap FROM bcap{i})::VARCHAR || chr(28) || chr(28), lst),"
-            f" (acc, x) -> CASE WHEN {_nacc} < {_st}[1]::INT"
-            f"  AND NOT list_contains({_used}, {_el}[1])"
-            f"  AND NOT list_contains({_used}, {_el}[2])"
-            f"  AND NOT list_contains({_used}, {_el}[1] || {_el}[2])"
-            f" THEN {_st}[1] || chr(28)"
-            f"  || {_st}[2] || chr(31) || {_el}[1] || chr(31) || {_el}[2]"
-            f"  || chr(31) || {_el}[1] || {_el}[2] || chr(28)"
-            f"  || CASE WHEN {_st}[3] = '' THEN x"
-            f"     ELSE {_st}[3] || chr(29) || x END"
-            f" ELSE acc END) AS st FROM btl{i})"
-        )
-        _bb.append(
-            f"ba{i} AS MATERIALIZED (SELECT ai,"
-            f" string_split(e, chr(30))[1] AS l,"
-            f" string_split(e, chr(30))[2] AS r,"
-            f" string_split(e, chr(30))[3]::BIGINT AS cnt FROM ("
-            f" SELECT unnest(string_split(string_split(st, chr(28))[3], chr(29))) AS e,"
-            f" unnest(range(1, len(string_split(string_split(st, chr(28))[3], chr(29))) + 1)) AS ai"
-            f" FROM bsel{i} WHERE string_split(st, chr(28))[3] != ''))"
-        )
-        _bb.append(
-            f"bap{i} AS MATERIALIZED (SELECT coalesce(list("
-            f" {{'ml': l, 'mr': r}} ORDER BY ai),"
-            f" []::STRUCT(ml VARCHAR, mr VARCHAR)[]) AS prs FROM ba{i})"
-        )
-        _bb.append(
-            f"accu{i + 1} AS MATERIALIZED (SELECT * FROM accu{i} UNION ALL"
-            f" SELECT ai + (SELECT count(*) FROM accu{i}) AS rank, l, r, cnt FROM ba{i})"
-        )
-        # the multi-pair match is a STATICALLY UNROLLED OR over the ≤
-        # batch accepted slots (a nested list_filter lambda measured
-        # ~250x slower in the replay); FALSE AND NULL = FALSE keeps
-        # absent slots inert, and no-op rounds skip the fold entirely
-        _match = " OR ".join(
-            f"(len(ap.prs) >= {j} AND ends_with(acc, chr(31) || ap.prs[{j}].ml)"
-            f" AND x = ap.prs[{j}].mr)"
-            for j in range(1, _bb_batch + 1)
-        )
-        _bb.append(
-            f"bs{i + 1} AS MATERIALIZED (SELECT word, freq,"
-            f" CASE WHEN len(ap.prs) = 0 THEN s.syms ELSE"
-            f" string_split(list_reduce(list_prepend('', s.syms),"
-            f" (acc, x) -> CASE WHEN {_match}"
-            f" THEN acc || x ELSE acc || chr(31) || x END), chr(31))[2:]"
-            f" END AS syms"
-            f" FROM bs{i} s CROSS JOIN bap{i} ap)"
-        )
-    o["docs_bpe_vocab_batched"] = f"""
-    WITH {', '.join(_bb)}
-    SELECT rank::INT AS rank, l AS lhs, r AS rhs, cnt AS pair_freq
-    FROM accu{_bb_rounds}
-    """
-
     o["docs_count_of_counts"] = f"""
     WITH tok AS (
       SELECT unnest({_tok_sql('text', stop=False)}) AS token FROM documents
@@ -5422,55 +4133,6 @@ def oracle_sql() -> dict[str, str]:
     FROM pb LEFT JOIN nt USING (bucket)
     """
 
-    # kg_graph_audit / kg_dangling_refs: the planting selector is the
-    # kg_incremental_merge md5-bucket formula with modulus 50
-    _plant = "('0x' || substr(md5(subj || '|' || pred || '|' || obj), 1, 4))::BIGINT % 50"
-    o["kg_graph_audit"] = f"""
-    WITH base AS (SELECT subj, pred, obj, weight FROM {g('golden_triples')}),
-    h AS (SELECT *, {_plant} AS hh FROM base),
-    a AS (
-      SELECT subj, pred, obj, weight FROM base
-      UNION ALL SELECT subj, pred, subj AS obj, 0::BIGINT AS weight
-        FROM h WHERE pred = 'kg:linksTo' AND hh = 0
-      UNION ALL SELECT subj, pred, obj || '_v2' AS obj, weight
-        FROM h WHERE pred = 'kg:uriCount' AND hh = 1
-      UNION ALL SELECT subj, pred, obj, weight
-        FROM h WHERE pred = 'kg:mentions' AND hh = 2
-      UNION ALL SELECT subj, pred, NULL AS obj, weight
-        FROM h WHERE pred = 'kg:annotatedCount' AND hh = 4
-    ), ps AS (
-      SELECT pred, subj, count(*)::BIGINT AS n,
-             (count(DISTINCT obj)
-              + max(CASE WHEN obj IS NULL THEN 1 ELSE 0 END))::BIGINT AS n_obj,
-             sum(CASE WHEN subj = obj THEN 1 ELSE 0 END)::BIGINT AS selfs,
-             sum(CASE WHEN weight <= 0 OR weight IS NULL THEN 1 ELSE 0 END)::BIGINT AS bad,
-             sum(CASE WHEN obj IS NULL THEN 1 ELSE 0 END)::BIGINT AS nulls
-      FROM a GROUP BY 1, 2
-    )
-    SELECT pred, sum(n)::BIGINT AS n_triples, count(*)::BIGINT AS n_subj,
-           max(n)::BIGINT AS max_fanout, sum(selfs)::BIGINT AS n_self_loops,
-           sum(bad)::BIGINT AS n_bad_weight, sum(nulls)::BIGINT AS n_null_obj,
-           sum(n - n_obj)::BIGINT AS n_dup_triples,
-           sum(CASE WHEN pred IN ('kg:uriCount', 'kg:annotatedCount', 'kg:totalCount')
-                         AND n_obj > 1 THEN 1 ELSE 0 END)::BIGINT AS n_functional_violations
-    FROM ps GROUP BY pred
-    """
-
-    o["kg_dangling_refs"] = f"""
-    WITH base AS (SELECT subj, pred, obj, weight FROM {g('golden_triples')}),
-    h AS (SELECT *, {_plant} AS hh FROM base),
-    refs_in AS (
-      SELECT obj FROM base WHERE pred = 'kg:mentions'
-      UNION ALL SELECT obj || '_ghost' AS obj FROM h WHERE pred = 'kg:mentions' AND hh = 3
-    ), refs AS (
-      SELECT obj, count(*)::BIGINT AS n_refs FROM refs_in GROUP BY obj
-    )
-    SELECT r.obj, r.n_refs FROM refs r
-    WHERE NOT EXISTS (
-      SELECT 1 FROM base d WHERE d.pred = 'kg:uriCount' AND d.subj = r.obj
-    )
-    """
-
     _hb100 = "(('0x' || substr(md5(host), 1, 4))::BIGINT % 100)"
     o["web_host_split"] = f"""
     WITH hosts AS (
@@ -5486,7 +4148,7 @@ def oracle_sql() -> dict[str, str]:
     FROM hosts
     """
 
-    # emb_cosine_topk / emb_srp_lsh_topk / media_features /
-    # ner_opennlp_sentences: intentionally no oracle (float ordering /
-    # format-rendering paths) → driver records rows-only checks.
+    # media_features / ner_opennlp_sentences / kg_entity_pagerank:
+    # intentionally no oracle (float ordering / format-rendering paths)
+    # → driver records rows-only checks.
     return o

@@ -10,9 +10,10 @@ Layout (SURVEY.md §7.1):
 - ``sources``    — page/NTriples/wikidump readers (J1–J4)
 - ``functions``  — scalar/batch functions: extract (J5), sentences
   (J6/J7), uri encode (J11), tokenize (J14), ngrams (J12), text QC
-- ``operators``  — relational building blocks: mentions, linking,
-  canonicalize (P12), stats (pair/uri/sf/token counts), triples,
-  dedup, similarity, top-k (J13/P15)
+- ``operators``  — relational building blocks: mentions, linking
+  (candidate top-k, J13/P15), canonicalize (P12), stats
+  (pair/uri/sf/token counts), triples, and the curation core
+  (textstats quality filter and packing, dedup)
 - ``plans``      — end-to-end pipeline orchestration + checkpoint/lineage
 - ``streaming``  — structured-streaming ingest variant
 """

@@ -42,7 +42,7 @@ preserves the hash layout; a checkpoint would not). Each round is then
 
 int64 headroom: per-bucket gradient sums are bounded by
 ``n_rows·max_cnt·G_SCALE``; at 10¹² docs drop ``G_SCALE`` (the
-contract is explicit, like similarity's overflow guard).
+contract is explicit, like tf_cosine_pairs' overflow guard).
 
 Reference parity: pignlproc has no trainer — "beyond the reference"
 (COVERAGE.md), composing the engine's frozen tokenizer + hash-bucket

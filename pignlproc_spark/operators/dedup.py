@@ -275,8 +275,7 @@ def tf_cosine_pairs(
 ) -> DataFrame:
     """(id_a, id_b, dot, norm_a, norm_b) — pairs whose *tf-weighted*
     token-vector cosine is ≥ min_cos_pct/100, in exact integer
-    arithmetic (same cross-multiplied test as
-    :func:`similarity.embedding_near_duplicates`):
+    arithmetic (a cross-multiplied test, no division or square root):
 
         cos ≥ τ  ⟺  dot > 0 ∧ 10⁴·dot² ≥ (100τ)²·‖a‖²·‖b‖²
 
@@ -657,7 +656,7 @@ def strip_duplicate_spans(
     pass through unchanged.
     """
     # lazy checkpoint: materializes (once) at the FIRST action, not at
-    # plan-construction time — dump_plans/explain must stay free. The
+    # plan-construction time — explain must stay free. The
     # blocks live until the RDD is GC'd (localCheckpoint has no
     # explicit release); at cluster scale this is a checkpoint table.
     toks = df.select(

@@ -8,13 +8,9 @@ import re
 import __spark_entry__ as e
 
 EXPECTED_ROWS_ONLY = {
-    "emb_cosine_topk",
-    "emb_srp_lsh_topk",
-    "emb_ivf_topk",
     "media_features",
     "ner_opennlp_sentences",
     "kg_entity_pagerank",
-    "events_user_ewma",
 }
 
 

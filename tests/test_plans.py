@@ -280,51 +280,6 @@ def test_containment_join_is_equi_not_cartesian(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_srp_pairs_bucket_join_no_cartesian(spark):
-    # the oracle-pinned ANN scale tier (emb_srp_pairs): candidates must
-    # come from the band+code equi-join — a cartesian/NestedLoop would
-    # be the brute-force tier leaking back into the 100-TB path
-    from pignlproc_spark.operators import similarity
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 5) - 2.0, 1.0, 0.5, -0.25]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    plan = plan_of(
-        similarity.srp_banded_pairs(
-            emb, min_cos_pct=80, bands=4, band_planes=2, dim=4, materialize=False
-        )
-    )
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the oracle-pinned ANN search tiers share the contract: bucket /
-    # cell equi-joins plus broadcast-literal codebooks, never a product
-    ivf = plan_of(
-        similarity.ivf_topk_q(emb, emb.where(F.col("vec_id") < 3), k=3, n_centroids=2, nprobe=1)
-    )
-    assert "CartesianProduct" not in ivf and "NestedLoop" not in ivf
-    assert "BatchEvalPython" not in ivf and "ArrowEvalPython" not in ivf
-    # PQ-ADC: scoring must be a broadcast equi-join of the query LUT
-    # onto the code projection — never a product over raw vectors
-    pq = plan_of(
-        similarity.pq_adc_topk_q(emb, emb.where(F.col("vec_id") < 3), k=3, m=2, ks=2)
-    )
-    assert "CartesianProduct" not in pq and "NestedLoop" not in pq
-    assert "BroadcastHashJoin" in pq
-    assert "BatchEvalPython" not in pq and "ArrowEvalPython" not in pq
-    # residual IVFADC inherits the whole contract: the residual is a
-    # projection (zip_with against the centroid literal), scoring is
-    # still ONE broadcast (cluster, sub, code) equi-join
-    res = plan_of(
-        similarity.ivfpq_residual_topk_q(
-            emb, emb.where(F.col("vec_id") < 3), k=3, n_centroids=2, nprobe=1, m=2, ks=2
-        )
-    )
-    assert "CartesianProduct" not in res and "NestedLoop" not in res
-    assert "BroadcastHashJoin" in res
-    assert "BatchEvalPython" not in res and "ArrowEvalPython" not in res
-
-
 def test_rarity_score_one_scan_no_join(spark):
     # doc_freq rides a window over the token partitioning: ONE scan of
     # the corpus, no df-rollup-and-rejoin (which would tokenize twice)
@@ -335,20 +290,6 @@ def test_rarity_score_one_scan_no_join(spark):
     assert plan.count("Scan ") == 1
     assert "Join" not in plan
     assert "Window" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_attribution_join_no_cartesian(spark):
-    # the lookback bound must ride the equi-join as a predicate, never
-    # force a NestedLoop/cartesian plan
-    import datetime as dt
-
-    from pignlproc_spark.operators.temporal import attribution_join
-
-    rows = [(i, i % 3, dt.datetime(2024, 1, 1, 0, i)) for i in range(12)]
-    df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    plan = plan_of(attribution_join(df, df, on="user_id"))
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 

@@ -221,93 +221,6 @@ def test_maintain_stats_first_batch_crash_replay(spark, tmp_path, monkeypatch):
         counts.maintain_mention_stats(m, legacy, batch_id=1, compact_every=0)
 
 
-def test_streaming_exact_dedup_stateful(spark, tmp_path):
-    """applyInPandasWithState ledger: duplicates are flagged against
-    ALL history — within a batch, across micro-batches, and across a
-    checkpointed restart (state store persistence)."""
-    from pignlproc_spark.streaming.dedup import streaming_exact_dedup
-
-    in_dir = tmp_path / "docs_in"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ck")
-
-    def arrive(name, rows):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(in_dir / name))
-
-    def drain(phase):
-        out_dir = str(tmp_path / f"out_{phase}")
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir) + "/*")
-        )
-        q = (
-            streaming_exact_dedup(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(f"{out_dir}/batch={bid}")
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {r.doc_id: r for r in spark.read.parquet(out_dir).collect()}
-
-    # phase 1: doc 3 duplicates doc 1 (same batch-or-later micro-batch)
-    arrive("a", [(1, "alpha text"), (2, "beta text")])
-    arrive("b", [(3, "alpha text"), (4, "gamma text")])
-    got = drain("dedup1")
-    assert not got[1].is_duplicate and got[1].keep_id == 1
-    assert not got[2].is_duplicate and not got[4].is_duplicate
-    assert got[3].is_duplicate and got[3].keep_id == 1
-
-    # phase 2 (restart, same checkpoint): new file duplicating OLD
-    # content — state must remember doc 1 across the restart
-    arrive("c", [(5, "alpha text"), (6, "delta text")])
-    got2 = drain("dedup2")
-    assert set(got2) == {5, 6}  # only the new arrivals re-emit
-    assert got2[5].is_duplicate and got2[5].keep_id == 1
-    assert not got2[6].is_duplicate and got2[6].keep_id == 6
-
-
-def test_streaming_exact_dedup_transform_with_state(spark, tmp_path):
-    """Spark-4 stateful API variant: same ledger semantics on
-    transformWithStateInPandas (RocksDB-backed state store). Skipped
-    where google.protobuf (the state-server wire format) is absent."""
-    pytest.importorskip("google.protobuf")
-    from pignlproc_spark.streaming.dedup import streaming_exact_dedup_tws
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    spark.createDataFrame(
-        [(1, "alpha text"), (2, "beta text"), (3, "alpha text")], "doc_id long, text string"
-    ).coalesce(1).write.parquet(str(in_dir / "a"))
-    out_dir = str(tmp_path / "out")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir) + "/*")
-    )
-    q = (
-        streaming_exact_dedup_tws(stream)
-        .writeStream.foreachBatch(
-            lambda df, bid: df.write.mode("overwrite").parquet(f"{out_dir}/batch={bid}")
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.doc_id: r for r in spark.read.parquet(out_dir).collect()}
-    assert not got[1].is_duplicate and got[1].keep_id == 1
-    assert not got[2].is_duplicate
-    assert got[3].is_duplicate and got[3].keep_id == 1
-
-
 def test_windowed_counts_stream(spark, staged_pages, tmp_path):
     stream = ingest.mention_stream(ingest.read_page_stream(spark, staged_pages))
     counts = ingest.windowed_uri_counts(stream, window="30 minutes", watermark="1 hour")
@@ -449,190 +362,6 @@ def test_incremental_near_dup_crash_window(spark, tmp_path, monkeypatch):
     sigs = neardup._read_facts(spark, f"{root}/signatures", neardup.SIGS_SCHEMA)
     assert sigs.select("doc_id").distinct().count() == 3  # docs 1, 2, 3
     assert sigs.count() == sigs.distinct().count()  # appended exactly once each
-
-
-def test_tumbling_windows_stream_parity(spark, tmp_path):
-    """Native tumbling windows on a stream: the append-mode emissions
-    equal the batch operator for windows closed before the final
-    watermark (state for emitted windows is evicted)."""
-    import datetime as dt
-
-    from pignlproc_spark.operators.temporal import tumbling_windows
-
-    base = dt.datetime(2024, 1, 1)
-    s = lambda sec: base + dt.timedelta(seconds=sec)
-    rows = [
-        (1, "a", s(0)), (2, "a", s(100)), (3, "b", s(950)), (4, "a", s(1900)),
-        # sentinel far in the future pushes the watermark past every
-        # other window's end so append mode emits them all
-        (99, "z", s(10**6)),
-    ]
-    schema = "event_id long, k string, ts timestamp"
-    src = tmp_path / "ev_src"
-    spark.createDataFrame(rows, schema).write.parquet(str(src))
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = (
-        tumbling_windows(stream, "ts", "15 minutes", keys=("k",), watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("tumbling_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_tumb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.k, r.window_start, r.window_end, r.n_events)
-        for r in spark.sql("select * from tumbling_stream").collect()
-    }
-    batch = tumbling_windows(spark.createDataFrame(rows, schema), "ts", "15 minutes", keys=("k",))
-    watermark = s(10**6 - 3600)
-    want = {
-        (r.k, r.window_start, r.window_end, r.n_events)
-        for r in batch.collect()
-        if r.window_end < watermark
-    }
-    assert want and got == want
-
-
-def test_session_windows_stream_parity(spark, tmp_path):
-    """Native session windows on a stream (watermark evicts closed
-    sessions): the append-mode emissions equal the batch operator's
-    sessions that closed before the final watermark."""
-    import datetime as dt
-
-    from pignlproc_spark.operators.temporal import session_windows
-
-    base = dt.datetime(2024, 1, 1)
-    s = lambda sec: base + dt.timedelta(seconds=sec)
-    rows = [
-        (1, 1, s(0)), (2, 1, s(600)), (3, 1, s(4000)),
-        (4, 2, s(100)), (5, 2, s(2200)),
-        # sentinel far in the future pushes the watermark past every
-        # other session's end so append mode emits them all
-        (99, 9, s(10**6)),
-    ]
-    src = tmp_path / "events_src"
-    spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp").write.parquet(str(src))
-    stream = spark.readStream.schema("event_id long, user_id long, ts timestamp").parquet(str(src))
-    q = (
-        session_windows(stream, key="user_id", ts_col="ts", gap="30 minutes", watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("sessions_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("select * from sessions_stream").collect()
-    }
-    batch = session_windows(
-        spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp"),
-        key="user_id", ts_col="ts", gap="30 minutes",
-    )
-    watermark = s(10**6 - 3600)
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in batch.collect()
-        if r.session_end < watermark
-    }
-    assert want and got == want
-
-
-def test_attribution_join_stream_parity(spark, tmp_path):
-    """Stream-stream inner join: with the watermark pushed past every
-    event, the streamed emissions equal the batch attribution join."""
-    import datetime as dt
-
-    from pignlproc_spark.operators.temporal import attribution_join
-
-    base = dt.datetime(2024, 1, 1)
-    s = lambda sec: base + dt.timedelta(seconds=sec)
-    # user 1: two clicks inside the 10-minute lookback of purchase 100,
-    # one click outside it; user 2: click AFTER the purchase (no match)
-    left_rows = [(100, 1, s(1200)), (200, 2, s(600)), (999, 9, s(10**6))]
-    right_rows = [(10, 1, s(700)), (11, 1, s(1100)), (12, 1, s(100)),
-                  (20, 2, s(700)), (998, 9, s(10**6))]
-    lsch = "event_id long, user_id long, ts timestamp"
-    lsrc, rsrc = tmp_path / "attr_l", tmp_path / "attr_r"
-    spark.createDataFrame(left_rows, lsch).write.parquet(str(lsrc))
-    spark.createDataFrame(right_rows, lsch).write.parquet(str(rsrc))
-
-    batch = attribution_join(
-        spark.read.parquet(str(lsrc)), spark.read.parquet(str(rsrc)), lookback="10 minutes"
-    )
-    want = sorted((r.k, r.l_event_id, r.r_event_id) for r in batch.collect())
-    assert want == [(1, 100, 10), (1, 100, 11), (9, 999, 998)]  # click 12 too old, user 2 none
-
-    q = (
-        attribution_join(
-            spark.readStream.schema(lsch).parquet(str(lsrc)),
-            spark.readStream.schema(lsch).parquet(str(rsrc)),
-            lookback="10 minutes",
-            watermark="1 hour",
-        )
-        .writeStream.format("memory")
-        .queryName("attr_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_attr"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.k, r.l_event_id, r.r_event_id)
-        for r in spark.sql("SELECT * FROM attr_stream").collect()
-    )
-    assert got == want
-
-
-def test_attribution_join_left_outer_stream(spark, tmp_path):
-    """left_outer stream-stream join: unmatched purchases emit with
-    NULL click columns once the watermark passes their window."""
-    import datetime as dt
-
-    from pignlproc_spark.operators.temporal import attribution_join
-
-    base = dt.datetime(2024, 1, 1)
-    s = lambda sec: base + dt.timedelta(seconds=sec)
-    left_rows = [(100, 1, s(1200)), (200, 2, s(600)), (999, 9, s(10**6))]
-    right_rows = [(10, 1, s(1100)), (998, 9, s(10**6))]
-    sch = "event_id long, user_id long, ts timestamp"
-    lsrc, rsrc = tmp_path / "attro_l", tmp_path / "attro_r"
-    spark.createDataFrame(left_rows, sch).write.parquet(str(lsrc))
-    spark.createDataFrame(right_rows, sch).write.parquet(str(rsrc))
-
-    q = (
-        attribution_join(
-            spark.readStream.schema(sch).parquet(str(lsrc)),
-            spark.readStream.schema(sch).parquet(str(rsrc)),
-            lookback="10 minutes",
-            watermark="10 minutes",
-            how="left_outer",
-        )
-        .writeStream.format("memory")
-        .queryName("attro_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_attro"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.k, r.l_event_id): r.r_event_id
-        for r in spark.sql("SELECT * FROM attro_stream").collect()
-    }
-    assert got[(1, 100)] == 10  # matched pair
-    # purchase 200 had no click: emitted with NULL right side after the
-    # watermark (pushed far past it by the sentinel events)
-    assert (2, 200) in got and got[(2, 200)] is None
-    with __import__("pytest").raises(ValueError):
-        attribution_join(
-            spark.read.parquet(str(lsrc)), spark.read.parquet(str(rsrc)), how="full"
-        )
 
 
 def test_warc_stream_ingest_exactly_once(spark, synth_dir, tmp_path):

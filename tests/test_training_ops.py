@@ -1,11 +1,10 @@
 """Training-data operators: dedup (exact / MinHash-LSH / SimHash /
-Jaccard), similarity search, text stats, multimodal plumbing, graph
-write layout."""
+Jaccard), text stats, multimodal plumbing, graph write layout."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from pignlproc_spark.operators import dedup, multimodal, similarity, textstats, triples
+from pignlproc_spark.operators import dedup, multimodal, textstats, triples
 
 
 @pytest.fixture(scope="module")
@@ -226,221 +225,6 @@ def test_simhash_similarity_property(spark, docs):
     assert 0 <= h[0] < (1 << 16)
 
 
-@pytest.fixture(scope="module")
-def vecs(spark):
-    import math
-
-    rows = []
-    for i in range(40):
-        angle = (i % 8) / 8.0 * math.pi
-        rows.append((i, [float(round(math.cos(angle), 3)), float(round(math.sin(angle), 3)), float(i % 3)]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_dot_topk_quantized(spark, vecs):
-    out = similarity.dot_topk_quantized(vecs, vecs.where(F.col("vec_id") == 0), k=3)
-    rows = sorted(out.collect(), key=lambda r: r.rank)
-    assert len(rows) == 3
-    assert rows[0].dot_q >= rows[1].dot_q >= rows[2].dot_q
-    assert all(r.query_id == 0 and r.neighbor_id != 0 for r in rows)
-
-
-def test_cosine_vs_quantized_agree(spark, vecs):
-    q = vecs.where(F.col("vec_id") == 5)
-    cos = {r.rank: r.neighbor_id for r in similarity.cosine_topk(vecs, q, k=3).collect()}
-    assert len(cos) == 3  # float path runs and ranks
-
-    srp = similarity.srp_lsh_topk(vecs, q, k=3, dim=3, n_planes=2)
-    rows = srp.collect()
-    assert rows and all(r.query_id == 5 for r in rows)
-
-
-def test_cosine_topk_quantized_corrects_magnitude_bias(spark):
-    # b points almost exactly along q but is short; a is long and off-axis.
-    # Raw dot ranks a first (5.0 vs 1.0); cosine ranks b first (0.995 vs 0.707).
-    rows = [
-        (0, [1.0, 0.0]),  # query
-        (1, [5.0, 5.0]),  # a: big norm, 45 degrees off
-        (2, [1.0, 0.1]),  # b: small norm, nearly parallel
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = emb.where(F.col("vec_id") == 0)
-    by_dot = {r.rank: r.neighbor_id for r in similarity.dot_topk_quantized(emb, q, k=2).collect()}
-    by_cos = {r.rank: r.neighbor_id for r in similarity.cosine_topk_quantized(emb, q, k=2).collect()}
-    assert by_dot[1] == 1 and by_cos[1] == 2
-    # zero-norm vectors are excluded from both sides, not NaN-ranked
-    with_zero = emb.union(spark.createDataFrame([(3, [0.0, 0.0])], emb.schema))
-    out = similarity.cosine_topk_quantized(with_zero, with_zero, k=10).collect()
-    assert all(r.query_id != 3 and r.neighbor_id != 3 for r in out)
-
-
-def test_embedding_near_duplicates(spark):
-    # planted cluster: 0/1 identical, 2 a scaled copy (cos=1), 3 close,
-    # 4 orthogonal, 5 antiparallel (dot<0 must never pair)
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0]),
-        (2, [2.0, 0.0, 0.0]),
-        (3, [0.95, 0.05, 0.0]),
-        (4, [0.0, 1.0, 0.0]),
-        (5, [-1.0, 0.0, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {(r.id_a, r.id_b) for r in similarity.embedding_near_duplicates(emb, min_cos_pct=90).collect()}
-    assert {(0, 1), (0, 2), (1, 2)} <= got
-    assert (0, 3) in got and (0, 4) not in got
-    assert not any(5 in p for p in got)
-
-    # cosine invariance to magnitude: identical-direction pairs satisfy
-    # the integer identity exactly (10^4 dot^2 == pct^2 na nb at cos=1
-    # requires pct=100 to still pass)
-    exact = {(r.id_a, r.id_b) for r in similarity.embedding_near_duplicates(emb, min_cos_pct=100).collect()}
-    assert {(0, 1), (0, 2), (1, 2)} <= exact and (0, 3) not in exact
-
-    # SRP-bucketed scale path: candidates subset of brute force, and
-    # identical vectors always share every bucket
-    srp = {(r.id_a, r.id_b) for r in similarity.embedding_near_duplicates(emb, min_cos_pct=90, n_planes=4).collect()}
-    assert srp <= got and (0, 1) in srp
-
-    # overflow guard: magnitudes whose squared test would wrap int64
-    # must raise, not silently compare garbage
-    big = spark.createDataFrame(
-        [(0, [4.0e6, 0.0]), (1, [4.0e6, 1.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="overflow"):
-        similarity.embedding_near_duplicates(big, min_cos_pct=90)
-
-
-def test_srp_banded_pairs(spark):
-    """Banded integer-SRP scale tier (the oracle-pinned bucketed ANN):
-    verified pairs ⊆ the all-pairs brute set with IDENTICAL values
-    (candidates-⊆-verify LSH contract), identical-direction vectors
-    always share every band code (recall 1 on exact dups), antiparallel
-    never pairs, and the overflow guard carries over."""
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [2.0, 0.0, 0.0, 0.0]),
-        (3, [0.95, 0.05, 0.0, 0.0]),
-        (4, [0.0, 1.0, 0.0, 0.0]),
-        (5, [-1.0, 0.0, 0.0, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    brute = {
-        (r.id_a, r.id_b): (r.dot_q, r.norm_a, r.norm_b)
-        for r in similarity.embedding_near_duplicates(emb, min_cos_pct=90).collect()
-    }
-    spark.catalog.clearCache()  # isolate the leak assertion below
-    srp = {
-        (r.id_a, r.id_b): (r.dot_q, r.norm_a, r.norm_b)
-        for r in similarity.srp_banded_pairs(
-            emb, min_cos_pct=90, bands=4, band_planes=3
-        ).collect()
-    }
-    assert set(srp) <= set(brute)
-    for k, v in srp.items():
-        assert brute[k] == v  # same integer dot/norm values, not re-derived
-    assert {(0, 1), (0, 2), (1, 2)} <= set(srp)
-    assert not any(5 in k for k in srp)
-    # the persisted quantized projection must be released on return —
-    # a leaked entry accumulates a corpus-sized cache per invocation
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    assert jcm.isEmpty(), "srp_banded_pairs leaked its persisted projection"
-    big = spark.createDataFrame(
-        [(0, [4.0e6, 0.0]), (1, [4.0e6, 1.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="overflow"):
-        similarity.srp_banded_pairs(big, min_cos_pct=90, bands=2, band_planes=2)
-
-
-def test_srp_topk_q_candidates_and_values(spark):
-    """srp_topk_q (the oracle-pinned bucketed ANN search tier): every
-    returned neighbor carries the SAME integer dot/norms the brute
-    cosine_topk_quantized computes for that pair, identical-direction
-    vectors are always candidates, and per-query rank order is the
-    brute order restricted to the candidate set."""
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.9, 0.1, 0.0, 0.0]),
-        (3, [0.0, 1.0, 0.0, 0.0]),
-        (4, [-1.0, 0.0, 0.0, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    brute = {
-        (r.query_id, r.neighbor_id): (r.dot_q, r.norm_q2, r.norm_n2)
-        for r in similarity.cosine_topk_quantized(emb, emb, k=10).collect()
-    }
-    got = similarity.srp_topk_q(emb, emb, k=10, bands=4, band_planes=2).collect()
-    assert got
-    for r in got:
-        assert brute[(r.query_id, r.neighbor_id)] == (r.dot_q, r.norm_q2, r.norm_n2)
-    by_q = {}
-    for r in sorted(got, key=lambda r: (r.query_id, r.rank)):
-        by_q.setdefault(r.query_id, []).append(r.neighbor_id)
-    assert 1 in by_q[0]  # identical vector always shares every band code
-    # rank order within candidates == brute order filtered to candidates
-    brute_rank = {}
-    for r in similarity.cosine_topk_quantized(emb, emb, k=10).collect():
-        brute_rank.setdefault(r.query_id, []).append((r.rank, r.neighbor_id))
-    for qid, neigh in by_q.items():
-        expect = [n for _, n in sorted(brute_rank[qid]) if n in set(neigh)]
-        assert neigh == expect, qid
-
-
-def test_ivf_topk_q_full_probe_equals_brute(spark):
-    """With nprobe == n_centroids the integer-IVF tier degenerates to
-    the exact brute ranking — the candidates-only contract's upper
-    end. With nprobe=1 results are a subset carrying identical values."""
-    import random
-
-    rng = random.Random(5)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = emb.where(F.col("vec_id") < 6)
-    brute = [
-        (r.query_id, r.neighbor_id, r.dot_q, r.norm_q2, r.norm_n2, r.rank)
-        for r in similarity.cosine_topk_quantized(emb, q, k=4)
-        .orderBy("query_id", "rank")
-        .collect()
-    ]
-    full = [
-        (r.query_id, r.neighbor_id, r.dot_q, r.norm_q2, r.norm_n2, r.rank)
-        for r in similarity.ivf_topk_q(emb, q, k=4, n_centroids=4, nprobe=4)
-        .orderBy("query_id", "rank")
-        .collect()
-    ]
-    assert full == brute
-    brute_vals = {(t[0], t[1]): t[2:5] for t in brute}
-    narrow = similarity.ivf_topk_q(emb, q, k=4, n_centroids=4, nprobe=1).collect()
-    assert narrow
-    exact_all = {
-        (r.query_id, r.neighbor_id): (r.dot_q, r.norm_q2, r.norm_n2)
-        for r in similarity.cosine_topk_quantized(emb, q, k=100).collect()
-    }
-    for r in narrow:
-        assert exact_all[(r.query_id, r.neighbor_id)] == (r.dot_q, r.norm_q2, r.norm_n2)
-
-
-def test_ivf_codebook_smaller_than_requested(spark):
-    """Fewer rows than n_centroids → a shrunken codebook (matching the
-    oracle's LIMIT-n seeding), not an IndexError; empty input raises a
-    clear ValueError."""
-    import pytest as pt
-
-    rows = [(i, [float(i), 1.0, -1.0, 0.5]) for i in range(5)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = similarity.ivf_centroids_q(emb, n_centroids=8, train_iters=2)
-    assert len(cents) == 5
-    # the search path runs end-to-end on the shrunken codebook
-    out = similarity.ivf_topk_q(emb, emb.where(F.col("vec_id") < 2), k=3, n_centroids=8, nprobe=8)
-    assert out.count() > 0
-    with pt.raises(ValueError):
-        similarity.ivf_centroids_q(emb.where(F.col("vec_id") < 0), n_centroids=4)
-
-
 def test_jsonl_shard_export_roundtrip(spark, tmp_path):
     from pignlproc_spark import tables
     from pignlproc_spark.operators.textstats import hash_bucket
@@ -476,64 +260,6 @@ def test_jsonl_shard_export_roundtrip(spark, tmp_path):
     shutil.rmtree(f"{path}/shard={some_shard}")
     with pytest.raises(ValueError, match="mismatch|manifest"):
         tables.verify_jsonl_shards(spark, path, "doc_id long, text string, label int")
-
-
-def test_semantic_dedup_keep(spark):
-    # chain 0≈1≈2 must collapse transitively to ONE survivor (min id),
-    # even though 0–2 also pairs here; 3 and 4 are a second cluster;
-    # 5 is unpaired and must be kept as its own component
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0]),
-        (2, [2.0, 0.0, 0.0]),
-        (3, [0.0, 1.0, 0.0]),
-        (4, [0.0, 0.99, 0.01]),
-        (5, [0.5, 0.5, 0.70710678]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.vec_id: (r.component_id, r.keep) for r in similarity.semantic_dedup_keep(emb, min_cos_pct=95).collect()}
-    assert out == {
-        0: (0, 1), 1: (0, 0), 2: (0, 0),
-        3: (3, 1), 4: (3, 0),
-        5: (5, 1),
-    }
-    # SRP-bucketed path: identical-direction vectors share every bucket,
-    # so the planted cluster still collapses; keeps can only GROW
-    # (missed candidate pairs split clusters, never merge them)
-    srp = {r.vec_id: r.keep for r in similarity.semantic_dedup_keep(emb, min_cos_pct=95, n_planes=4).collect()}
-    assert srp[0] == 1 and srp[1] == 0 and srp[2] == 0
-    assert sum(srp.values()) >= sum(k for _, k in out.values())
-    # banded integer-SRP path (the oracle-exact scale tier): same
-    # monotonicity contract, planted identical-direction cluster still
-    # collapses (all band codes shared)
-    banded = {
-        r.vec_id: r.keep
-        for r in similarity.semantic_dedup_keep(
-            emb, min_cos_pct=95, bands=4, band_planes=3
-        ).collect()
-    }
-    assert banded[0] == 1 and banded[1] == 0 and banded[2] == 0
-    assert sum(banded.values()) >= sum(k for _, k in out.values())
-
-
-def test_ivf_topk_recall(spark):
-    import pyspark.sql.functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 5)
-    exact = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in similarity.cosine_topk(emb, q, k=3).collect()
-    }
-    ivf = similarity.ivf_topk(emb, q, k=3, n_centroids=8, nprobe=4)
-    got = {(r.query_id, r.rank): r.neighbor_id for r in ivf.collect()}
-    assert len(got) > 0
-    # probing half the cells must recover most exact top-1s
-    top1_hits = sum(1 for (qid, rk), n in exact.items() if rk == 1 and got.get((qid, 1)) == n)
-    assert top1_hits >= 3  # of 5 queries
-    # determinism
-    again = {(r.query_id, r.rank): r.neighbor_id for r in similarity.ivf_topk(emb, q, k=3, n_centroids=8, nprobe=4).collect()}
-    assert got == again
 
 
 def test_lang_id_and_quality(spark):
@@ -2424,136 +2150,6 @@ def test_temperature_mix_flattens_sqrt_exact(spark):
 # ---------------------------------------------------------------------------
 
 
-def _pq_reference(vec_rows, m, ks, query_ids, k):
-    """Independent pure-python replay of the frozen PQ-ADC algorithm
-    (quantize → seed → one Lloyd step → encode → LUT-sum → rank)."""
-    import math
-
-    import numpy as np
-
-    def rq(x):
-        # the engines' quantization exactly: the stored float32 widened
-        # to double, scaled, then round-half-away-from-zero
-        v = float(np.float32(x)) * 1000.0
-        return int(math.floor(v + 0.5)) if v >= 0 else -int(math.floor(-v + 0.5))
-
-    q = {i: [rq(x) for x in v] for i, v in vec_rows}
-    dim = len(next(iter(q.values())))
-    sub = dim // m
-    seed_ids = sorted(q)[:ks]
-    books = [[q[i][j * sub : (j + 1) * sub] for i in seed_ids] for j in range(m)]
-
-    def assign(v, j, book):
-        dists = [
-            (sum((a - b) ** 2 for a, b in zip(v[j * sub : (j + 1) * sub], c)), ci)
-            for ci, c in enumerate(book)
-        ]
-        return min(dists)[1]
-
-    # one Lloyd step: floor(sum/count) per dim, empty keeps seed
-    sums = {}
-    for i, v in q.items():
-        for j in range(m):
-            ci = assign(v, j, books[j])
-            s, c = sums.setdefault((j, ci), ([0] * sub, 0))
-            for d in range(sub):
-                s[d] += v[j * sub + d]
-            sums[(j, ci)] = (s, c + 1)
-    books = [
-        [
-            [math.floor(s / sums[(j, ci)][1]) for s in sums[(j, ci)][0]]
-            if (j, ci) in sums
-            else books[j][ci]
-            for ci in range(ks)
-        ]
-        for j in range(m)
-    ]
-    codes = {i: [assign(v, j, books[j]) for j in range(m)] for i, v in q.items()}
-    out = []
-    for qi in query_ids:
-        scored = []
-        for ni, cs in codes.items():
-            if ni == qi:
-                continue
-            adc = sum(
-                sum(a * b for a, b in zip(q[qi][j * sub : (j + 1) * sub], books[j][cs[j]]))
-                for j in range(m)
-            )
-            scored.append((-adc, ni))
-        for rank, (nadc, ni) in enumerate(sorted(scored)[:k], 1):
-            out.append((qi, ni, -nadc, rank))
-    return sorted(out)
-
-
-@pytest.fixture(scope="module")
-def pq_vecs(spark):
-    import random
-
-    rng = random.Random(7)
-    rows = [
-        (i, [float(rng.uniform(-1, 1)) for _ in range(16)])
-        for i in range(40)
-    ]
-    return rows, spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_pq_adc_topk_matches_reference(spark, pq_vecs):
-    """pq_adc_topk_q == the independent pure-python replay of the same
-    frozen spec (seeding, tie rules, floor-mean, LUT sum, ranking)."""
-    rows, df = pq_vecs
-    got = sorted(
-        (r.query_id, r.neighbor_id, r.adc_q, r.rank)
-        for r in similarity.pq_adc_topk_q(
-            df, df.where(F.col("vec_id") < 5), k=3, m=4, ks=4
-        ).collect()
-    )
-    want = _pq_reference(rows, m=4, ks=4, query_ids=range(5), k=3)
-    assert got == want
-
-
-def test_pq_adc_partitioning_invariant(spark, pq_vecs):
-    """Same result at 1 and 7 input partitions — the codebook collect,
-    encode and LUT join are all deterministic under repartitioning."""
-    rows, df = pq_vecs
-    out = [
-        sorted(
-            (r.query_id, r.neighbor_id, r.adc_q, r.rank)
-            for r in similarity.pq_adc_topk_q(
-                d, d.where(F.col("vec_id") < 5), k=3, m=4, ks=4
-            ).collect()
-        )
-        for d in (df.repartition(1), df.repartition(7))
-    ]
-    assert out[0] == out[1]
-
-
-def test_pq_codebooks_validation(spark, pq_vecs):
-    _, df = pq_vecs
-    with pytest.raises(ValueError):
-        similarity.pq_codebooks_q(df, m=5)  # 16 % 5 != 0
-    empty = df.where(F.col("vec_id") < 0)
-    with pytest.raises(ValueError):
-        similarity.pq_codebooks_q(empty, m=4)
-
-
-def test_pq_adc_ranks_clusters_above_noise(spark):
-    """Sanity on structured data: with two well-separated clusters the
-    ADC approximation still ranks same-cluster vectors first."""
-    import random
-
-    rng = random.Random(3)
-    rows = []
-    for i in range(30):
-        base = 1.0 if i % 2 == 0 else -1.0
-        rows.append(
-            (i, [base + rng.uniform(-0.05, 0.05) for _ in range(8)])
-        )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.pq_adc_topk_q(df, df.where(F.col("vec_id") < 2), k=5, m=4, ks=2)
-    for r in out.collect():
-        assert r.neighbor_id % 2 == r.query_id % 2, (r.query_id, r.neighbor_id)
-
-
 # ---------------------------------------------------------------------------
 # CCAudioFrames v1
 # ---------------------------------------------------------------------------
@@ -2716,170 +2312,6 @@ def test_dhash_synth_twins(spark, synth_dir):
         orig = t.rsplit("/", 1)[0]
         key = (orig, t) if orig < t else (t, orig)
         assert key in pairs and pairs[key] <= 3, f"lossy twin pair missing for {orig}"
-
-
-def test_ivfpq_full_probe_equals_pq_brute(spark, pq_vecs):
-    """With nprobe = n_centroids the IVF restriction vanishes and
-    ivfpq_topk_q must equal pq_adc_topk_q EXACTLY (same codebook spec,
-    same LUT, same ranking) — the IVF tier's full-probe invariant
-    carried over to the composed operator."""
-    rows, df = pq_vecs
-    q = df.where(F.col("vec_id") < 5)
-    full = sorted(
-        (r.query_id, r.neighbor_id, r.adc_q, r.rank)
-        for r in similarity.ivfpq_topk_q(
-            df, q, k=3, n_centroids=4, nprobe=4, m=4, ks=4
-        ).collect()
-    )
-    brute = sorted(
-        (r.query_id, r.neighbor_id, r.adc_q, r.rank)
-        for r in similarity.pq_adc_topk_q(df, q, k=3, m=4, ks=4).collect()
-    )
-    assert full == brute
-    # narrow probe: a SUBSET of the brute candidates with identical
-    # adc values for every returned pair
-    narrow = {
-        (r.query_id, r.neighbor_id): r.adc_q
-        for r in similarity.ivfpq_topk_q(
-            df, q, k=3, n_centroids=4, nprobe=1, m=4, ks=4
-        ).collect()
-    }
-    all_adc = {
-        (r.query_id, r.neighbor_id): r.adc_q
-        for r in similarity.pq_adc_topk_q(df, q, k=40, m=4, ks=4).collect()
-    }
-    assert narrow and all(all_adc[k] == v for k, v in narrow.items())
-
-
-def test_ivfpq_residual_single_cell_decomposes_to_pq(spark, pq_vecs):
-    """With n_centroids = 1 every vector shares one cell, so residual
-    IVFADC must reduce EXACTLY to PQ-ADC over the centroid-shifted
-    vectors: identical ranking, and adc_q differing from the shifted
-    PQ's adc by precisely the per-query base term <q_q, centroid_q> —
-    the inner-product decomposition the operator is built on."""
-    rows, df = pq_vecs
-    q = df.where(F.col("vec_id") < 5)
-    cents = similarity.ivf_centroids_q(df, n_centroids=1)
-    assert len(cents) == 1
-    c = cents[0]
-    got = {
-        (r.query_id, r.neighbor_id): (r.adc_q, r.rank)
-        for r in similarity.ivfpq_residual_topk_q(
-            df, q, k=3, n_centroids=1, nprobe=1, m=4, ks=4
-        ).collect()
-    }
-    # shifted table: (v_q - c) / scale re-quantizes to the exact
-    # residual integers (values far below the double/float32 cliff)
-    shifted = spark.createDataFrame(
-        [
-            (i, [(round(v * 1000) - c[j]) / 1000.0 for j, v in enumerate(vec)])
-            for i, vec in rows
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    # queries stay UNshifted: the residual LUT scores <q, r̂>, and the
-    # centroid part arrives as the separate base term
-    ref = {
-        (r.query_id, r.neighbor_id): (r.adc_q, r.rank)
-        for r in similarity.pq_adc_topk_q(shifted, q, k=3, m=4, ks=4).collect()
-    }
-    # base term per query: <q_q, c>
-    qv = {
-        i: [round(v * 1000) for v in vec]
-        for i, vec in rows
-        if i < 5
-    }
-    base = {i: sum(a * b for a, b in zip(v, c)) for i, v in qv.items()}
-    assert set(got) == set(ref)
-    for key, (adc, rank) in got.items():
-        radc, rrank = ref[key]
-        assert rank == rrank, f"rank mismatch at {key}"
-        assert adc == radc + base[key[0]], f"adc decomposition broke at {key}"
-
-
-def test_ann_recall_tiers(spark):
-    """Retrieval-quality harness: recall@10 of every ANN tier against
-    the exact quantized-dot brute baseline, on a clustered fixture
-    (8 Gaussian clusters, dim 64 — the shape IVF assumes). Floors are
-    the measured values minus slack; the ordering assertions pin the
-    design claims: full-probe IVF+PQ == PQ (restriction vanishes) and
-    residual encoding beats raw-vector encoding at the same (m, ks)
-    bit budget. The measured table lives in BASELINE.md."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    centers = rng.standard_normal((8, 64)) * 2.0
-    vecs = []
-    for i in range(320):
-        vecs.append((i, (centers[i % 8] + rng.standard_normal(64) * 0.35).astype(float).round(3).tolist()))
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>").cache()
-    queries = df.where(F.col("vec_id") < 16)
-    k = 10
-
-    def topsets(out):
-        got = {}
-        for r in out.collect():
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return got
-
-    # each tier is scored against the brute baseline that uses ITS
-    # ranking metric: srp/ivf rank by integer cosine, the PQ family by
-    # integer dot — recall across metrics would be apples-to-oranges
-    brute_dot = topsets(similarity.dot_topk_quantized(df, queries, k=k))
-    brute_cos = topsets(similarity.cosine_topk_quantized(df, queries, k=k))
-
-    def recall(out, brute):
-        got = topsets(out)
-        return sum(
-            len(got.get(q, set()) & nbrs) / len(nbrs) for q, nbrs in brute.items()
-        ) / len(brute)
-
-    cents = similarity.ivf_centroids_q(df, n_centroids=8)
-    books = similarity.pq_codebooks_q(df, m=8, ks=16)
-    r_srp = recall(similarity.srp_topk_q(df, queries, k=k, dim=64), brute_cos)
-    r_ivf2 = recall(
-        similarity.ivf_topk_q(df, queries, k=k, n_centroids=8, nprobe=2, centroids_q=cents),
-        brute_cos,
-    )
-    r_ivf4 = recall(
-        similarity.ivf_topk_q(df, queries, k=k, n_centroids=8, nprobe=4, centroids_q=cents),
-        brute_cos,
-    )
-    r_pq = recall(
-        similarity.pq_adc_topk_q(df, queries, k=k, m=8, ks=16, codebooks=books), brute_dot
-    )
-    r_ivfpq = recall(
-        similarity.ivfpq_topk_q(
-            df, queries, k=k, n_centroids=8, nprobe=2, m=8, ks=16,
-            centroids_q=cents, codebooks=books,
-        ),
-        brute_dot,
-    )
-    r_res = recall(
-        similarity.ivfpq_residual_topk_q(
-            df, queries, k=k, n_centroids=8, nprobe=2, m=8, ks=16, centroids_q=cents
-        ),
-        brute_dot,
-    )
-    df.unpersist()
-    table = {
-        "srp_topk_q(32 planes)": r_srp,
-        "ivf_topk_q(nprobe=2/8)": r_ivf2,
-        "ivf_topk_q(nprobe=4/8)": r_ivf4,
-        "pq_adc_topk_q(m=8,ks=16)": r_pq,
-        "ivfpq_topk_q(nprobe=2,m=8,ks=16)": r_ivfpq,
-        "ivfpq_residual(nprobe=2,m=8,ks=16)": r_res,
-    }
-    print("ANN recall@10 vs brute:", {k_: round(v, 3) for k_, v in table.items()})
-    # design claims, measured: residual encoding beats raw-vector
-    # encoding at the same (m, ks) bit budget by a real margin —
-    # smaller residual spread quantizes finer (measured 0.556 vs 0.325)
-    assert r_res >= r_ivfpq + 0.1
-    assert r_ivf4 >= r_ivf2
-    # floors (measured value minus slack, deterministic fixture/seeds:
-    # srp 1.0, ivf2 1.0, pq 0.325, ivfpq 0.325, res 0.556)
-    assert r_srp >= 0.9 and r_ivf2 >= 0.9
-    assert r_pq >= 0.25 and r_ivfpq >= 0.25 and r_res >= 0.45
 
 
 def test_jpeg_decode_corrupt_streams_degrade():

@@ -17,7 +17,7 @@ import pandas as pd
 
 sys.path.insert(0, "/root/repo")
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem events documents".split()
 SF_DIR = "/root/testdata/sf0.01"
 
 

@@ -13,7 +13,7 @@ share ~ 1/H_F), mentions Zipf-allocated with an easy share matching
 the routed fraction web anchors show, and a token profile per
 candidate URI. Everything is deterministic (seeded) and built outside
 the timed region; only disambiguate vs disambiguate_routed is timed
-(cold + min-warm of N runs, the bench.py convention).
+(cold + min-warm of N runs).
 
 Usage: python tools/fanout_sweep.py
 Env: SWEEP_CPUS (8), SWEEP_MENTIONS (60000), SWEEP_FANOUTS
