@@ -68,11 +68,6 @@ def main(argv=None):
         "980 default on the synthetic corpus",
     )
     ap.add_argument(
-        "--auto-salt",
-        action="store_true",
-        help="size graph-write salting from the observed subject histogram instead of the default",
-    )
-    ap.add_argument(
         "--graph-stats",
         action="store_true",
         help="also emit entity co-occurrence and PageRank-salience tables",
@@ -123,12 +118,7 @@ def main(argv=None):
             spark, pages, red, ckpt=ckpt, source_id=f"{src}@{args.snapshot_id}"
         )
 
-    graph_path = T.write_graph(
-        res.triples,
-        name="graph/triples",
-        root=args.out,
-        salt_buckets="auto" if args.auto_salt else 8,
-    )
+    graph_path = T.write_graph(res.triples, name="graph/triples", root=args.out)
     # count the WRITTEN table, never re-execute the five-way triple
     # union: local parquet reads back by path; a catalog identifier
     # (Iceberg gate) or relative path reads back via spark.table /

@@ -375,27 +375,14 @@ def near_duplicates(
     """LSH candidates → exact-Jaccard verify: the scale path for
     near-dup detection (candidates shuffle, not the corpus).
 
-    Signatures are persisted across the self-join sides and released
-    once the candidate set is materialized, and the verify step's
-    token sets are computed once (lazy localCheckpoint) instead of
-    once per join side; at cluster scale both are the stages you'd
-    checkpoint to tables instead. The returned DataFrame is an
-    eagerly-materialized checkpoint: every intermediate cache is
-    RELEASED before return (a long-lived driver calling this per
-    batch must not accumulate pinned candidate sets)."""
-    from pyspark.storagelevel import StorageLevel
-
-    sigs = minhash_signatures(df, id_col, text_col, bands=bands).persist(StorageLevel.MEMORY_AND_DISK)
-    cands = lsh_candidate_pairs(df, id_col, text_col, bands=bands, sigs=sigs).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cands.count()  # materialize so the signature cache can be freed
-    sigs.unpersist()
-    toks = _token_sets(df, id_col, text_col).localCheckpoint(eager=False)
-    out = jaccard_pairs(df, id_col, text_col, min_jaccard_pct, pairs=cands, toks=toks)
-    out = out.localCheckpoint(eager=True)
-    cands.unpersist()
-    return out
+    One Spark action: the verified pairs are eagerly checkpointed and
+    nothing is cached on the way. Each self-join reads both sides from
+    one shuffle — AQE reuses the duplicated exchange of the signature
+    side and of the token-set side (``ReusedExchange`` in the final
+    plan) — so neither subtree runs twice. At cluster scale the
+    candidate set is the stage you'd checkpoint to a table instead."""
+    cands = lsh_candidate_pairs(df, id_col, text_col, bands=bands)
+    return jaccard_pairs(df, id_col, text_col, min_jaccard_pct, pairs=cands).localCheckpoint(eager=True)
 
 
 def _norm_pairs(e: DataFrame) -> DataFrame:
@@ -405,6 +392,19 @@ def _norm_pairs(e: DataFrame) -> DataFrame:
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """True when the normalized (a < b) edge set is a forest of stars
+    rooted at their minima: every ``b`` has exactly one ``a`` and no
+    ``a`` is also a ``b``. One action (one shuffle of node roles, then
+    a ``take(1)`` of the offending nodes); an empty edge set is a star
+    forest."""
+    roles = e.select(F.col("a").alias("n"), F.lit(1).alias("as_a"), F.lit(0).alias("as_b")).union(
+        e.select(F.col("b").alias("n"), F.lit(0), F.lit(1))
+    )
+    per = roles.groupBy("n").agg(F.sum("as_a").alias("as_a"), F.sum("as_b").alias("as_b"))
+    return per.where((F.col("as_b") > 1) | ((F.col("as_b") > 0) & (F.col("as_a") > 0))).isEmpty()
 
 
 def connected_components(
@@ -434,47 +434,38 @@ def connected_components(
     - small-star(u): every neighbor v < u, and u itself, re-point to
       m⁻(u) = min of the smaller neighborhood
 
-    Each round strictly shrinks total path length; at fixpoint the
-    edge set is a forest of stars rooted at component minima, read off
-    with one groupBy-min. Near-dup graphs converge in 2–3 rounds
-    (components are shallow). Every round costs exactly ONE Spark
-    action: a lazy ``localCheckpoint`` (lineage truncation so round k
-    never re-executes rounds 1..k-1) materialized by the fixpoint
-    probe — a (count, exact-decimal-sum-of-xxhash64) multiset
-    fingerprint. Fingerprint equality substitutes for a set-equality
-    diff; the DECIMAL(38) sum is exact and partitioning/order-
-    invariant, and a false fixpoint needs a 64-bit hash-sum collision
-    BETWEEN CONSECUTIVE ROUNDS of a monotone contraction (the
-    oracle-exact CC tests would catch a systematic one). This halves
-    the per-round driver latency vs the checkpoint+count+diff
-    formulation.
+    Each round strictly shrinks total path length until the edge set
+    is a forest of stars rooted at component minima, read off with one
+    groupBy-min. The loop stops as soon as it is one, tested exactly
+    before the first round and after every round (:func:`_is_star_forest`,
+    one action that also materializes the round's lazy
+    ``localCheckpoint`` — lineage truncation so round k never
+    re-executes rounds 1..k-1). An input that is already stars runs
+    zero rounds, and no round is spent confirming the fixpoint.
+    Near-dup graphs are shallow: one or two rounds.
 
     Reference parity note: pignlproc has no graph operator — this is a
     "beyond the reference" training-pipeline op (COVERAGE.md), but it
     reuses the same bounded-fixpoint discipline as the redirect chase
     (SURVEY.md §2.2 P12, operators/canonicalize.py).
     """
+    # checkpoint ONCE: round 1 references the edge set 4+ times (star
+    # test, sym union, m agg, large join) and the upstream lineage is
+    # typically the whole LSH pipeline
     e = _norm_pairs(pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")))
-
-    def _probe(df):
-        # one action: materializes the lazy checkpoint AND returns the
-        # multiset fingerprint. The hash sum runs in DECIMAL(38,0) —
-        # exact (no overflow below ~10¹⁹ rows) and order/partitioning-
-        # invariant, unlike a BIGINT sum which throws under ANSI mode.
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("chk"),
-        ).first()
-        return int(r.n), (0 if r.chk is None else int(r.chk))
-
-    # materialize ONCE: round 0 references the edge set 4+ times (sym
-    # union, m agg, large join, fixpoint probe) and the upstream
-    # lineage is typically the whole LSH pipeline
     e = e.localCheckpoint(eager=False)
-    e_count, e_chk = _probe(e)
-    for rnd in range(max_rounds):
-        if e_count == 0:
-            break
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == max_rounds:
+            # reading off a non-star-forest edge set would silently
+            # SPLIT true components (multiple "survivors" per dup
+            # cluster) — fail loudly, like the k-core peel
+            raise RuntimeError(
+                f"connected_components did not reach a star forest in "
+                f"{max_rounds} rounds; raise max_rounds (rounds needed ~ "
+                "O(log^2 diameter))"
+            )
+        rounds += 1
         sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
             e.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
@@ -491,29 +482,12 @@ def connected_components(
         )
         lower = lsym.where(F.col("v") < F.col("u"))
         m2 = lower.groupBy("u").agg(F.min("v").alias("m"))
-        small = _norm_pairs(
+        e = _norm_pairs(
             lower.join(m2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(m2.select(F.col("u"), F.col("m").alias("v")))
-        )
-        small = small.localCheckpoint(eager=False)
-        # fixpoint: edge multiset unchanged (star forest reached) —
-        # detected by fingerprint equality, ONE action per round.
-        n, chk = _probe(small)
-        if (n, chk) == (e_count, e_chk):
-            e = small
-            break
-        e, e_count, e_chk = small, n, chk
-    else:
-        if e_count > 0:
-            # reading off a non-star-forest edge set would silently
-            # SPLIT true components (multiple "survivors" per dup
-            # cluster) — fail loudly, like the k-core peel
-            raise RuntimeError(
-                f"connected_components did not reach its fixpoint in "
-                f"{max_rounds} rounds ({e_count} edges still moving); "
-                "raise max_rounds (rounds needed ~ O(log^2 diameter))"
-            )
+        ).localCheckpoint(eager=False)
+    # in a star forest every node's component is min(itself, neighbors)
     sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )

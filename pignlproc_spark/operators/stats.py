@@ -829,8 +829,9 @@ def kcore_members(
     collected neighborhoods, so hub nodes stay as rows. Rounds are
     bounded by the longest peel chain (graph-diameter-ish, small for
     web-like graphs); each round ``localCheckpoint``s the shrinking
-    edge set so lineage stays flat and the fixpoint check reads a
-    driver-side count, like :func:`dedup.connected_components`.
+    edge set so lineage stays flat, as in
+    :func:`dedup.connected_components`, and the fixpoint check reads a
+    driver-side count.
 
     Deterministic: the k-core is a unique subgraph (order-independent
     peeling), so output is exactly reproducible — pytest verifies

@@ -14,10 +14,11 @@ goldens):
 
 Materialization (BASELINE.json:6 "final (subj, pred, obj) triple
 materialization into salted, skew-aware partitioned Iceberg graph
-tables"): explicit repartition on hashed subject + salt so hub
-subjects spread across files; partitioned by ``pred`` (5 coarse
-buckets → partition pruning for per-relation readers); Parquet
-locally, Iceberg via tables.write_table's config gate.
+tables"): an AQE rebalance on hashed subject, which splits hub
+subjects across files and coalesces small partitions; partitioned by
+``pred`` (5 coarse buckets → partition pruning for per-relation
+readers); Parquet locally, Iceberg via tables.write_table's config
+gate.
 """
 
 from __future__ import annotations
@@ -111,28 +112,15 @@ def mention_counts(mentions: DataFrame) -> DataFrame:
     return mentions.groupBy("url", "uri").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def write_graph(
-    triples: DataFrame,
-    name: str = "graph/triples",
-    num_partitions: int = 32,
-    salt_buckets: int | str = 8,
-    root: str | None = None,
-    sample_fraction: float | None = None,
-) -> str:
-    """Salted hashed-subject repartition + pred-partitioned table write.
+def write_graph(triples: DataFrame, name: str = "graph/triples", root: str | None = None) -> str:
+    """AQE-rebalanced hashed-subject placement + pred-partitioned write.
 
-    ``salt_buckets="auto"`` sizes the salt from the observed subject
-    histogram (tables.tune_salt_buckets): no skew ⇒ unsalted hash
-    repartition; a hub subject holding p of all rows ⇒ ≈ p ×
-    num_partitions buckets, just enough to level it. The probe costs
-    one algebraic count pass over ``triples`` (which the write was
-    about to scan anyway); pass ``sample_fraction`` to probe a sample
-    at very large scale."""
-    if salt_buckets == "auto":
-        salt_buckets = tables.tune_salt_buckets(
-            triples, "subj", num_partitions, sample_fraction=sample_fraction
-        )
-        if salt_buckets <= 1:
-            salt_buckets = 0
-    placed = tables.repartition_by_hash(triples, "subj", num_partitions, salt_buckets=salt_buckets)
+    ``REBALANCE(subj)`` hashes rows on the subject, then adaptive
+    execution sizes the write from the shuffle statistics: small
+    partitions coalesce to ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    and a partition above it (a hub subject with 10^5+ inlinks) splits
+    into advisory-sized pieces, so a hub cannot pin one file and a small
+    graph does not scatter into many. A few thousand triples land as
+    one file per ``pred``."""
+    placed = triples.hint("rebalance", "subj")
     return tables.write_table(placed, name, partition_by=["pred"], root=root)

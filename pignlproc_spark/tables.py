@@ -10,10 +10,11 @@ writer is an abstraction: Parquet directories under a root locally,
 sequence is asserted against a recording double, and the read branch
 executes for real against a V2-created ``spark_catalog`` table.
 
-Skew-aware layout (BASELINE.json:6 "salted, skew-aware partitioned"):
-:func:`repartition_by_hash` places rows by ``hash(subject) % n`` with
-an optional salt term so Zipfian hub subjects (a country page with
-10^5+ inlinks) cannot pin a single output partition/file at 100 TB.
+Skew-aware layout (BASELINE.json:6 "salted, skew-aware partitioned")
+is the caller's placement before :func:`write_table`: the graph write
+(operators/triples.py) rebalances on hashed subject, and AQE splits a
+Zipfian hub subject (a country page with 10^5+ inlinks) so it cannot
+pin a single output file at 100 TB.
 """
 
 from __future__ import annotations
@@ -25,57 +26,6 @@ from pyspark.sql import functions as F
 
 DEFAULT_ROOT = os.environ.get("PIGNLPROC_WAREHOUSE", "/root/repo/.warehouse")
 CATALOG_CONF = "spark.pignlproc.catalog"  # e.g. "iceberg_cat" on a real cluster
-
-
-def repartition_by_hash(df: DataFrame, key: str, num_partitions: int, salt_buckets: int = 0) -> DataFrame:
-    """Explicit repartitioning on a hashed key (BASELINE.json:6).
-
-    With ``salt_buckets > 0`` the shuffle key is ``(key, xxhash64(key,
-    monotonically_increasing_id) % salt_buckets)`` so a single hub key
-    spreads over ``salt_buckets`` partitions; downstream per-key aggs
-    must then be two-phase (operators/stats.py does this).
-    """
-    if salt_buckets > 0:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(key), F.monotonically_increasing_id()), F.lit(salt_buckets))
-        )
-        return salted.repartition(num_partitions, F.col(key), F.col("_salt")).drop("_salt")
-    return df.repartition(num_partitions, F.col(key))
-
-
-def tune_salt_buckets(
-    df: DataFrame,
-    key: str,
-    num_partitions: int,
-    sample_fraction: float | None = None,
-    max_buckets: int | None = None,
-) -> int:
-    """Pick ``salt_buckets`` from the observed key histogram instead of
-    a constant: the heaviest key should spread to roughly the size of
-    an average partition, so
-
-        salt = ceil(max_key_cnt × num_partitions / total_rows)
-
-    clamped to [1, max_buckets or num_partitions]. 1 means no skew —
-    callers can skip salting entirely. The probe is one algebraic
-    count pass (map-side combine ⇒ the shuffle carries distinct keys,
-    not rows); ``sample_fraction`` subsamples it for very large inputs
-    — the rule uses only the max/total *ratio*, which is
-    scale-invariant under uniform sampling.
-    """
-    import math
-
-    src = df.sample(fraction=sample_fraction, seed=7) if sample_fraction else df
-    row = (
-        src.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(F.max("_c").alias("mx"), F.sum("_c").alias("total"))
-        .collect()[0]
-    )
-    if not row.total:
-        return 1
-    raw = math.ceil(row.mx * num_partitions / row.total)
-    return max(1, min(max_buckets or num_partitions, raw))
 
 
 def _catalog(spark: SparkSession) -> str | None:

@@ -1,7 +1,8 @@
 """spark-submit entrypoint smoke: the CLI surface must run the full
 pipeline, write every output table, and honor the optional link-
-decision / auto-salt / TSV flags (reuses the session fixture — the
-job picks up the active session exactly as under spark-submit)."""
+decision / graph-stats / link-prediction flags (reuses the session
+fixture — the job picks up the active session exactly as under
+spark-submit)."""
 
 from pyspark.sql import functions as F
 
@@ -20,7 +21,6 @@ def test_build_kg_job_end_to_end(spark, tmp_path):
             "--checkpoint",
             str(tmp_path / "ck"),
             "--link-decisions",
-            "--auto-salt",
             "--graph-stats",
             "--link-prediction",
         ]

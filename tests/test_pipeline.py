@@ -132,7 +132,7 @@ def test_triples_pr_gate(spark, sf_dir, result):
 def test_graph_write_end_to_end(spark, result, tmp_path):
     from pignlproc_spark.operators import triples as T
 
-    path = T.write_graph(result.triples, name="graph", num_partitions=8, salt_buckets=4, root=str(tmp_path))
+    path = T.write_graph(result.triples, name="graph", root=str(tmp_path))
     back = spark.read.parquet(path)
     assert back.count() == result.triples.count()
     # pred partitioning → partition pruning for per-relation readers

@@ -228,6 +228,35 @@ def test_contamination_probe_is_broadcast_and_jvm_only(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_near_duplicates_reuses_exchanges_and_caches_nothing(spark, monkeypatch):
+    # near_duplicates is one action: both self-join sides read one
+    # shuffle each (ReusedExchange in the final plan), and no cache
+    # outlives the call (the returned localCheckpoint is not a cache
+    # manager entry)
+    from pignlproc_spark.operators import dedup
+
+    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta v%d" % (i % 3)) for i in range(20)]
+    rows += [(100 + i, "word%d other%d thing%d more%d" % (i, i, i, i)) for i in range(20)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    spark.catalog.clearCache()  # so the check below sees only this call
+    checkpointed = []
+    real = type(docs).localCheckpoint
+
+    def recording(self, *a, **k):
+        checkpointed.append(self)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", recording)
+    out = dedup.near_duplicates(docs)
+    monkeypatch.undo()
+    assert out.count() == 20 * 19 // 2  # the 20 alpha docs pair up
+    assert len(checkpointed) == 1
+    final = checkpointed[0]._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    assert "ReusedExchange" in final, final[:3000]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pack_sequences_single_shuffle(spark):
     # one exchange on the shard key feeds the window cumsum; only the
     # (shard, id, count) triple ever shuffles, never text

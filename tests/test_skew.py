@@ -27,43 +27,43 @@ def skew_conf(spark):
         spark.conf.set(k, v)
 
 
-def test_salting_bounds_hub_partition_rows(spark):
-    """The salting machinery EVIDENCED, not just present: on a 2M-row
-    corpus where one hub entity owns 80% of mentions (a country page at
-    web scale), hash partitioning alone pins ~80% of rows on one
-    partition, while tune_salt_buckets + repartition_by_hash bounds the
-    max partition to a small multiple of the average — the property the
-    two-phase salted aggregation (operators/stats.py) relies on."""
-    from pignlproc_spark import tables
+def test_graph_write_splits_hub_subject(spark, tmp_path):
+    """The graph write's rebalance EVIDENCED on a hub: one subject owns
+    80% of a 200k-row graph (a country page at web scale). Hash
+    placement alone would put all of the hub's rows in one file; AQE
+    splits the hub's partition at the advisory size, so the hub lands
+    in several files and no file holds more than half of its rows."""
+    from pignlproc_spark.operators import triples
 
-    n, n_parts = 2_000_000, 32
-    fact = spark.range(n).select(
-        F.when(F.col("id") % 5 < 4, F.lit("uri:hub"))
-        .otherwise(F.concat(F.lit("uri:"), (F.col("id") % 50_000).cast("string")))
-        .alias("uri")
-    )
-
-    def max_partition_rows(df):
-        hist = (
-            df.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        n = 200_000
+        graph = spark.range(n).select(
+            F.when(F.col("id") % 5 < 4, F.lit("uri:hub"))
+            .otherwise(F.concat(F.lit("uri:"), (F.col("id") % 5_000).cast("string")))
+            .alias("subj"),
+            F.lit("kg:linksTo").alias("pred"),
+            F.col("id").cast("string").alias("obj"),
+            F.col("id").alias("weight"),
         )
-        return max(r["cnt"] for r in hist)
-
-    unsalted = max_partition_rows(fact.repartition(n_parts, F.col("uri")))
-    assert unsalted >= 0.8 * n  # the hub key pins one partition
-
-    s = tables.tune_salt_buckets(fact, "uri", n_parts)
-    # rule: ceil(max_key_cnt * n_parts / total) = ceil(0.8 * 32) = 26
-    assert s == 26
-    salted = max_partition_rows(tables.repartition_by_hash(fact, "uri", n_parts, salt_buckets=s))
-    # hub spreads over 26 sub-keys (~61.5k rows each); even with
-    # unlucky bucket collisions the max partition stays within a small
-    # multiple of the n/n_parts = 62.5k average — vs 1.6M unsalted
-    assert salted <= 4 * n / n_parts
-    assert salted * 3 < unsalted
+        path = triples.write_graph(graph, name="hub_graph", root=str(tmp_path))
+    finally:
+        spark.conf.set(key, saved)
+    back = spark.read.parquet(path)
+    assert back.count() == n
+    per_file = [
+        r["cnt"]
+        for r in back.where(F.col("subj") == "uri:hub")
+        .groupBy(F.input_file_name())
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    ]
+    hub_rows = 4 * n // 5
+    assert sum(per_file) == hub_rows
+    assert len(per_file) >= 2
+    assert max(per_file) <= hub_rows // 2
 
 
 def test_aqe_splits_skewed_hub_join(spark, skew_conf):

@@ -182,7 +182,6 @@ def test_maintain_stats_first_batch_crash_replay(spark, tmp_path, monkeypatch):
     """A crash mid-first-batch — even with compact_every=1, which folds
     the batch's own delta before the later tables append — must replay
     cleanly, not trip the legacy-store guard and brick the stream."""
-    from pignlproc_spark.operators import stats as stats_mod
     from pignlproc_spark.streaming import counts
 
     root = str(tmp_path / "stats")

@@ -1,6 +1,8 @@
 """Training-data operators: dedup (exact / MinHash-LSH / SimHash /
 Jaccard), text stats, multimodal plumbing, graph write layout."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,6 +61,9 @@ def test_minhash_wide_bands(spark, docs):
         dedup.minhash_signatures(docs, bands=17)
 
 
+_PATH_IDS = random.Random(3).sample(range(40), 40)
+
+
 def _union_find_components(pairs):
     parent = {}
 
@@ -85,6 +90,9 @@ def _union_find_components(pairs):
         [(10, 11), (11, 12), (12, 10)],  # cycle
         [(5, 1), (5, 2), (5, 3), (5, 4)],  # star rooted above its leaves
         [(1, 2), (3, 4), (2, 3), (7, 8), (9, 9)],  # merge + self-loop
+        list(zip(_PATH_IDS, _PATH_IDS[1:])),  # 40-node path, ids in shuffled order
+        [(i // 2, i) for i in range(2, 32)],  # binary tree rooted at 1
+        [(1, k) for k in range(2, 10)],  # star rooted at its minimum
     ],
 )
 def test_connected_components_shapes(spark, pairs):
@@ -96,9 +104,31 @@ def test_connected_components_shapes(spark, pairs):
     assert got == want
 
 
-def test_connected_components_random_graphs(spark):
-    import random
+def test_connected_components_star_input_runs_no_round(spark):
+    """An input that is already a star forest rooted at its minima runs
+    zero large-star/small-star rounds: its Spark jobs are only the star
+    test (edge normalization, node-role shuffle, take) and the read-off
+    (groupBy shuffle, collect). One round costs more jobs than that."""
+    sc = spark.sparkContext
 
+    def jobs(pairs, group):
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        sc.setJobGroup(group, group)
+        try:
+            got = {r.doc_id: r.component_id for r in dedup.connected_components(df).collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert got == _union_find_components(pairs)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    star = jobs([(1, k) for k in range(2, 10)], "cc-star")
+    one_round = jobs([(9, k) for k in range(1, 9)], "cc-star-above")
+    assert star <= 5, star
+    assert one_round > star + 4, (one_round, star)
+
+
+def test_connected_components_random_graphs(spark):
     for seed in (7, 42, 1234):
         rng = random.Random(seed)
         n = 60
@@ -620,42 +650,34 @@ def test_corpus_filter_decisions(spark):
     assert got[3].keep == 0 and got[3].ok_lang == 0
 
 
-def test_tune_salt_buckets(spark, tmp_path):
-    from pignlproc_spark import tables
-
-    # one hub subject holds half the rows: with 8 target partitions the
-    # tuner must pick ceil(0.5 * 8) = 4 buckets
-    rows = [("hub", i) for i in range(500)] + [(f"k{i}", i) for i in range(500)]
-    skewed = spark.createDataFrame(rows, "subj string, x long")
-    assert tables.tune_salt_buckets(skewed, "subj", 8) == 4
-
-    # uniform keys -> 1 (no salting needed); empty -> 1
-    uniform = spark.createDataFrame([(f"k{i}", i) for i in range(1000)], "subj string, x long")
-    assert tables.tune_salt_buckets(uniform, "subj", 8) == 1
-    empty = spark.createDataFrame([], "subj string, x long")
-    assert tables.tune_salt_buckets(empty, "subj", 8) == 1
-
-    # sampled probe lands near the exact answer (ratio is scale-invariant)
-    assert tables.tune_salt_buckets(skewed, "subj", 8, sample_fraction=0.5) in (3, 4, 5)
-
-    # auto mode writes end-to-end and round-trips
-    t = skewed.select("subj", F.lit("kg:linksTo").alias("pred"), F.col("x").cast("string").alias("obj"), F.col("x").alias("weight"))
-    path = triples.write_graph(t, name="graph_auto", num_partitions=8, salt_buckets="auto", root=str(tmp_path))
-    assert spark.read.parquet(path).count() == 1000
-
-
 def test_write_graph_layout(spark, tmp_path):
     t = spark.createDataFrame(
         [("s1", "kg:linksTo", "o1", 2), ("s2", "kg:uriCount", "3", 3)],
         "subj string, pred string, obj string, weight long",
     )
-    path = triples.write_graph(t, name="graph_t", num_partitions=4, salt_buckets=2, root=str(tmp_path))
+    path = triples.write_graph(t, name="graph_t", root=str(tmp_path))
     import os
 
     preds = {d for d in os.listdir(path) if d.startswith("pred=")}
     assert preds == {"pred=kg%3AlinksTo", "pred=kg%3AuriCount"} or preds == {"pred=kg:linksTo", "pred=kg:uriCount"}
     back = spark.read.parquet(path)
     assert back.count() == 2 and set(back.columns) == {"subj", "pred", "obj", "weight"}
+
+
+def test_write_graph_small_graph_one_file_per_pred(spark, tmp_path):
+    # a few thousand triples coalesce to one partition: one file per pred
+    import glob
+
+    t = spark.range(3000).select(
+        F.concat(F.lit("s"), (F.col("id") % 300).cast("string")).alias("subj"),
+        F.when(F.col("id") % 3 == 0, F.lit("kg:linksTo")).otherwise(F.lit("kg:uriCount")).alias("pred"),
+        F.col("id").cast("string").alias("obj"),
+        F.col("id").alias("weight"),
+    )
+    path = triples.write_graph(t, name="graph_small", root=str(tmp_path))
+    files = glob.glob(f"{path}/pred=*/*.parquet")
+    assert len(files) == 2, files
+    assert spark.read.parquet(path).count() == 3000
 
 
 def test_duplicate_spans(spark):

@@ -9,13 +9,15 @@ Usage: python tools/driver_sim.py [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents".split()
 SF_DIR = "/root/testdata/sf0.01"
@@ -46,7 +48,7 @@ def main(names=None):
     import __spark_entry__ as e
     from pignlproc_spark.session import get_session
 
-    spark = get_session(cpus=8)
+    spark = get_session()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
