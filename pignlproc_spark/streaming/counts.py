@@ -25,6 +25,15 @@ dirs). On a real cluster the same shape is one Iceberg ``MERGE INTO``
 (or an append to a partial-counts table + scheduled rewrite_data_files
 compaction); the manifest here plays the catalog's snapshot pointer.
 
+Every live directory holds one row per key (a base is written from a
+``groupBy``; a delta must arrive aggregated), so a store with ONE live
+directory already is the exact table: reading it is a plain scan, and
+folding it rewrites nothing — compaction only advances the manifest's
+``folded_through`` mark, and the promoted delta serves as the base.
+The manifest also carries the Spark schema of what was written, so a
+read never launches a schema-inference job (manifests written before
+the schema was recorded still infer it).
+
 Scale notes: a delta holds at most the batch's *distinct* keys —
 hub-entity skew is absorbed before the write by the partial
 aggregation. Merge-on-read cost is (#live dirs × their distinct
@@ -42,6 +51,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 
@@ -65,24 +75,30 @@ def _write_manifest(counts_dir: str, manifest: dict) -> None:
 def append_delta(partial_counts: DataFrame, counts_dir: str, batch_id: int) -> None:
     """Publish one micro-batch's partial counts.
 
-    ``partial_counts`` must already be aggregated to (keys..., cnt).
+    ``partial_counts`` must already be aggregated to (keys..., cnt):
+    ONE row per key. A store with a single live directory is read
+    without re-aggregation, so a delta with duplicate keys would be
+    read back with them. The manifest records the delta's schema so
+    readers skip schema inference.
+
     Idempotent per ``batch_id`` — including across compaction: a
     replayed micro-batch rewrites ``delta-<id>`` while the delta is
-    still live, and is a NO-OP once compaction folded that batch into
-    a base (the manifest's ``folded_through`` high-water mark records
-    the largest batch id any base absorbed; without it a
+    still unfolded, and is a NO-OP once compaction folded that batch
+    (the manifest's ``folded_through`` high-water mark records the
+    largest batch id any fold absorbed; without it a
     crash-between-sink-and-checkpoint replay after compact() would
     re-insert an already-counted batch forever).
     """
     m = _read_manifest(counts_dir)
     name = f"delta-{batch_id:08d}"
-    if batch_id <= m["folded_through"] and name not in m["live"]:
-        return  # already folded into a base — replay must not re-add
+    if batch_id <= m["folded_through"]:
+        return  # already folded — replay must not re-add
     partial_counts.write.mode("overwrite").parquet(f"{counts_dir}/{name}")
     m = _read_manifest(counts_dir)
+    m["schema"] = partial_counts.schema.json()
     if name not in m["live"]:
         m["live"].append(name)
-        _write_manifest(counts_dir, m)
+    _write_manifest(counts_dir, m)
 
 
 def read_counts(
@@ -98,11 +114,14 @@ def read_counts(
     deltas hold: ``"sum"`` for algebraic count partials (the default),
     ``"max"`` for sketch registers (CCHll v1 rho values — MAX is the
     HLL merge, so union-of-deltas is EXACTLY the sketch of the union).
+    One live directory is already one row per key and is read as
+    stored; only two or more are merged through an aggregation.
 
     A key may carry a type ("hrow int"); untyped keys default to
-    string. Only the EMPTY-store schema depends on this — pass the
-    type whenever a delta key is non-string, or the cold-start read
-    diverges from the populated one.
+    string. Only the EMPTY-store schema depends on this (a populated
+    store reads the schema its manifest recorded, or infers it) — pass
+    the type whenever a delta key is non-string, or the cold-start
+    read diverges from the populated one.
     """
     merge = {"sum": F.sum, "max": F.max}[how]
     names = [k.split()[0] for k in keys]
@@ -110,7 +129,12 @@ def read_counts(
     if not m["live"]:
         fields = ", ".join(k if " " in k else f"{k} string" for k in keys)
         return spark.createDataFrame([], f"{fields}, {value} long")
-    df = spark.read.parquet(*[f"{counts_dir}/{d}" for d in m["live"]])
+    reader = spark.read
+    if "schema" in m:
+        reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+    df = reader.parquet(*[f"{counts_dir}/{d}" for d in m["live"]])
+    if len(m["live"]) == 1:
+        return df.select(*names, F.col(value).cast("long").alias(value))
     return df.groupBy(*names).agg(merge(value).cast("long").alias(value))
 
 
@@ -122,34 +146,46 @@ def compact(
     value: str = "cnt",
     how: str = "sum",
 ) -> bool:
-    """Fold live dirs into one base. Returns True if it compacted.
+    """Fold live dirs into one base. Returns True if it wrote a new base.
 
     New base is written first, then the manifest swap publishes it,
     then the consumed dirs are removed — a reader holding the *old*
     manifest across the removal would race; single-writer + read-
     after-manifest is the supported protocol (an Iceberg catalog gives
     real snapshot isolation for the cluster version of this).
+
+    A live set of ONE delta is already the exact table: the fold only
+    advances ``folded_through`` to its batch (one manifest swap) and
+    the delta stays live as the base. A replay of that batch is then a
+    no-op, as after any fold, and the next fold merges the promoted
+    delta like any base.
     """
     m = _read_manifest(counts_dir)
-    # threshold counts DELTAS only: the base dir always stays live, so
-    # counting it would re-trigger compaction on every append after
-    # the first fold (O(table) write amplification per micro-batch)
-    n_deltas = sum(1 for d in m["live"] if d.startswith("delta-"))
-    if n_deltas < min_deltas:
+    # threshold counts only deltas not yet folded: the base (or a
+    # promoted delta) always stays live, so counting it would
+    # re-trigger compaction on every append after the first fold
+    # (O(table) write amplification per micro-batch)
+    batches = [int(d.split("-")[1]) for d in m["live"] if d.startswith("delta-")]
+    unfolded = [b for b in batches if b > m["folded_through"]]
+    if len(unfolded) < min_deltas:
+        return False
+    folded = max([m["folded_through"], *unfolded])
+    if m["live"] == [f"delta-{folded:08d}"]:  # one delta: already the exact table
+        _write_manifest(counts_dir, {**m, "folded_through": folded})
         return False
     merged = read_counts(spark, counts_dir, keys, value=value, how=how)
     base = f"base-{m['next_base']:08d}"
     merged.write.mode("overwrite").parquet(f"{counts_dir}/{base}")
-    consumed = list(m["live"])
-    folded = max(
-        [m["folded_through"]]
-        + [int(d.split("-")[1]) for d in consumed if d.startswith("delta-")]
-    )
     _write_manifest(
         counts_dir,
-        {"live": [base], "next_base": m["next_base"] + 1, "folded_through": folded},
+        {
+            "live": [base],
+            "next_base": m["next_base"] + 1,
+            "folded_through": folded,
+            "schema": merged.schema.json(),
+        },
     )
-    for d in consumed:
+    for d in m["live"]:
         shutil.rmtree(f"{counts_dir}/{d}", ignore_errors=True)
     return True
 

@@ -53,7 +53,9 @@ TOKS_SCHEMA = "doc_id long, tok array<string>"
 
 # fact appends reuse the counts-module commit protocol verbatim
 # (write delta dir → manifest append → atomic swap); its
-# folded_through guard is inert here because this store never compacts
+# folded_through guard is inert here because this store never compacts.
+# Its rows are facts, not one row per key: _read_facts reads them with
+# its own schema, never through counts.read_counts
 _append_facts = append_delta
 
 

@@ -6,7 +6,7 @@ from pignlproc_spark.session import get_session
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session(app_name="pignlproc-tests", cpus=8, shuffle_partitions=8)
+    s = get_session(app_name="pignlproc-tests")
     yield s
     s.stop()
 

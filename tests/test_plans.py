@@ -587,3 +587,51 @@ def test_hits_half_step_shuffles_scores_not_graph(spark):
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row max attach
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_read_counts_one_dir_is_a_plain_scan(spark, tmp_path):
+    """One live count directory holds one row per key (append_delta's
+    contract; a base comes from a groupBy), so it reads as a projection
+    over the scan. Two live directories still merge through an
+    aggregation."""
+    from pignlproc_spark.streaming import counts
+
+    store = str(tmp_path / "store")
+    delta = spark.createDataFrame([("a", 2), ("b", 1)], "k string, cnt long")
+    counts.append_delta(delta, store, 0)
+    one = plan_of(counts.read_counts(spark, store, ["k"]))
+    assert "Aggregate" not in one and "Exchange" not in one
+    counts.append_delta(delta, store, 1)
+    two = plan_of(counts.read_counts(spark, store, ["k"]))
+    assert "HashAggregate" in two and "Exchange" in two
+
+
+def test_read_counts_builds_without_a_job(spark, tmp_path):
+    """The manifest carries the written schema, so building a
+    read_counts DataFrame launches no Spark job; a manifest without it
+    (the format before the schema was recorded) infers the schema with
+    a job."""
+    import json
+
+    from pignlproc_spark.streaming import counts
+
+    sc = spark.sparkContext
+    store = tmp_path / "store"
+    counts.append_delta(spark.createDataFrame([("a", 2)], "k string, cnt long"), str(store), 0)
+
+    def jobs_to_build(group):
+        sc.setJobGroup(group, group)
+        try:
+            counts.read_counts(spark, str(store), ["k"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_to_build("read-counts-manifest-schema") == 0
+    man = store / counts.MANIFEST
+    m = json.loads(man.read_text())
+    del m["schema"]
+    man.write_text(json.dumps(m))
+    assert jobs_to_build("read-counts-inferred-schema") >= 1

@@ -146,6 +146,27 @@ def test_incremental_link_decisions(spark, synth_dir, tmp_path):
     assert pc.exceptAll(want_pc).count() == 0 and want_pc.exceptAll(pc).count() == 0
 
 
+def test_incremental_batch_job_budget(spark, synth_dir, tmp_path):
+    """One micro-batch of the incremental linker (stats maintained with
+    compact_every=1, link decisions written) stays within 30 Spark jobs
+    in the query's job group (its runId): a one-delta fold rewrites
+    nothing, and the count reads neither re-aggregate one directory nor
+    infer its schema."""
+    pages = spark.read.parquet(str(synth_dir / "pages.parquet"))
+    red = spark.read.parquet(str(synth_dir / "redirects.parquet"))
+    pages.coalesce(1).write.parquet(str(tmp_path / "pages"))
+    q = ingest.run_incremental(
+        spark, str(tmp_path / "pages"), str(tmp_path / "out"), str(tmp_path / "ck"),
+        redirects=red, stats_root=str(tmp_path / "stats"), compact_every=1, link_decisions=True,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert 0 < n_jobs <= 30, n_jobs
+
+
 def test_maintain_stats_auto_compaction(spark, tmp_path):
     from pignlproc_spark.streaming import counts
 
@@ -218,6 +239,106 @@ def test_maintain_stats_first_batch_crash_replay(spark, tmp_path, monkeypatch):
                 f"{legacy}/pair_counts", 0)
     with pt.raises(ValueError, match="token_counts manifest"):
         counts.maintain_mention_stats(m, legacy, batch_id=1, compact_every=0)
+
+
+def _counts_of(spark, store, keys):
+    from pignlproc_spark.streaming import counts
+
+    return {tuple(r)[:-1]: r.cnt for r in counts.read_counts(spark, store, keys).collect()}
+
+
+def test_compact_promotes_single_delta(spark, tmp_path):
+    """A fold over ONE live delta writes no base: the delta already is
+    the exact table, so compact() only advances folded_through and
+    returns False. The next fold merges the promoted delta like a base,
+    and replaying either batch never counts it twice."""
+    import os
+
+    from pignlproc_spark.streaming import counts
+
+    store = str(tmp_path / "store")
+    d0 = spark.createDataFrame([("a", 2), ("b", 1)], "k string, cnt long")
+    d1 = spark.createDataFrame([("a", 1), ("c", 5)], "k string, cnt long")
+    counts.append_delta(d0, store, 0)
+    assert counts.compact(spark, store, ["k"], min_deltas=1) is False
+    man = counts._read_manifest(store)
+    assert man["live"] == ["delta-00000000"] and man["folded_through"] == 0
+    assert not [d for d in os.listdir(store) if d.startswith("base-")]
+    # a second fold has nothing left to fold
+    assert counts.compact(spark, store, ["k"], min_deltas=1) is False
+    assert _counts_of(spark, store, ["k"]) == {("a",): 2, ("b",): 1}
+
+    counts.append_delta(d0, store, 0)  # replay after the promotion
+    assert _counts_of(spark, store, ["k"]) == {("a",): 2, ("b",): 1}
+
+    counts.append_delta(d1, store, 1)
+    assert counts.compact(spark, store, ["k"], min_deltas=1) is True
+    man = counts._read_manifest(store)
+    assert man["live"] == ["base-00000000"] and man["folded_through"] == 1
+    assert sorted(d for d in os.listdir(store) if not d.startswith("_")) == ["base-00000000"]
+    for bid, d in ((0, d0), (1, d1)):  # replay after the fold
+        counts.append_delta(d, store, bid)
+    assert _counts_of(spark, store, ["k"]) == {("a",): 3, ("b",): 1, ("c",): 5}
+
+
+def test_maintain_stats_compact_every_one(spark, tmp_path):
+    """compact_every=1 (the benchmark's setting): the first batch's
+    fold promotes its delta in every table; the second batch folds
+    both directories into base-00000000; replaying batch 0 after
+    either step counts it once."""
+    from pignlproc_spark.streaming import counts
+
+    root = str(tmp_path / "stats")
+    schema = "url string, surface_form string, uri string, context string"
+    m0 = spark.createDataFrame([("u1", "sf_a", "U1", "river words"), ("u2", "sf_a", "U2", "engine")], schema)
+    m1 = spark.createDataFrame([("u3", "sf_a", "U1", "river again")], schema)
+    pair = f"{root}/pair_counts"
+    keys = ["surface_form", "uri"]
+
+    counts.maintain_mention_stats(m0, root, batch_id=0, compact_every=1)
+    for t in ("token_counts", "pair_counts", "uri_counts", "sf_counts"):
+        man = counts._read_manifest(f"{root}/{t}")
+        assert man["live"] == ["delta-00000000"] and man["folded_through"] == 0, t
+        assert man["next_base"] == 0, t
+    counts.maintain_mention_stats(m0, root, batch_id=0, compact_every=1)
+    assert _counts_of(spark, pair, keys) == {("sf_a", "U1"): 1, ("sf_a", "U2"): 1}
+
+    counts.maintain_mention_stats(m1, root, batch_id=1, compact_every=1)
+    man = counts._read_manifest(pair)
+    assert man["live"] == ["base-00000000"] and man["folded_through"] == 1
+    counts.maintain_mention_stats(m0, root, batch_id=0, compact_every=1)
+    want = {("sf_a", "U1"): 2, ("sf_a", "U2"): 1}
+    assert _counts_of(spark, pair, keys) == want
+    assert _counts_of(spark, f"{root}/uri_counts", ["uri"]) == {("U1",): 2, ("U2",): 1}
+
+
+def test_read_counts_manifest_without_schema(spark, tmp_path):
+    """A manifest written before the schema was recorded (no "schema"
+    key) still reads exactly, by inferring the schema, over one live
+    directory and over two."""
+    import json
+    from pathlib import Path
+
+    from pignlproc_spark.streaming import counts
+
+    store = str(tmp_path / "store")
+    man = Path(store) / counts.MANIFEST
+
+    def drop_schema():
+        m = json.loads(man.read_text())
+        del m["schema"]
+        man.write_text(json.dumps(m))
+
+    counts.append_delta(spark.createDataFrame([("a", 0, 2)], "k string, h int, cnt long"), store, 0)
+    drop_schema()
+    got = counts.read_counts(spark, store, ["k", "h int"])
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema.fields] == [
+        ("k", "string"), ("h", "int"), ("cnt", "bigint")
+    ]
+    assert _counts_of(spark, store, ["k", "h int"]) == {("a", 0): 2}
+    counts.append_delta(spark.createDataFrame([("a", 0, 1), ("b", 1, 4)], "k string, h int, cnt long"), store, 1)
+    drop_schema()
+    assert _counts_of(spark, store, ["k", "h int"]) == {("a", 0): 3, ("b", 1): 4}
 
 
 def test_windowed_counts_stream(spark, staged_pages, tmp_path):
