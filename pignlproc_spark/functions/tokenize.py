@@ -32,8 +32,8 @@ import pandas as pd
 _TOKEN_RE = re.compile(r"[^\W_]+", re.UNICODE)
 
 #: the same frozen word rule in Java-regex spelling — the single
-#: source for every JVM-side tokenizer expression (tokens_col,
-#: functions/register.py). NOT a translation of ``\w``: Java's Unicode
+#: source for every JVM-side tokenizer expression (tokens_col). NOT
+#: a translation of ``\w``: Java's Unicode
 #: \w includes combining marks (Mn/Mc/Me), connector punctuation
 #: beyond '_' (U+203F, U+FF3F), and Join_Control (ZWNJ/ZWJ), while
 #: excluding the No numerics (², ½) Python's isnumeric admits — every

@@ -30,7 +30,7 @@ _UNDERSCORE_RUN = re.compile(r"_+")
 
 def resource_prefix(lang: str = "en") -> str:
     """The frozen DBpedia resource-IRI prefix — the single source for
-    the Python, Column, and SQL (functions/register.py) spellings."""
+    the Python and Column spellings."""
     return f"http://{lang}.dbpedia.org/resource/"
 
 

@@ -424,7 +424,7 @@ def quality_gate(
     threshold row comes back as a broadcast nested-loop join (a 1-row
     cross join) — the fact side stays embarrassingly parallel. The
     approximate scale path for pathological value cardinality is
-    ``percentile_approx`` (tests/test_sketches.py contract).
+    ``percentile_approx``.
 
     The (id, n_tokens) projection feeds BOTH the threshold aggregate
     and the fact side, so it is persisted here (tiny — two ints per

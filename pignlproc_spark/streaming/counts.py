@@ -101,52 +101,33 @@ def append_delta(partial_counts: DataFrame, counts_dir: str, batch_id: int) -> N
     _write_manifest(counts_dir, m)
 
 
-def read_counts(
-    spark: SparkSession,
-    counts_dir: str,
-    keys: list[str],
-    value: str = "cnt",
-    how: str = "sum",
-) -> DataFrame:
-    """Merge-on-read: the current exact table (keys..., value).
+def read_counts(spark: SparkSession, counts_dir: str, keys: list[str]) -> DataFrame:
+    """Merge-on-read: the current exact table (keys..., cnt).
 
-    ``how`` is the delta-merge operation and must match what the
-    deltas hold: ``"sum"`` for algebraic count partials (the default),
-    ``"max"`` for sketch registers (CCHll v1 rho values — MAX is the
-    HLL merge, so union-of-deltas is EXACTLY the sketch of the union).
-    One live directory is already one row per key and is read as
-    stored; only two or more are merged through an aggregation.
-
-    A key may carry a type ("hrow int"); untyped keys default to
-    string. Only the EMPTY-store schema depends on this (a populated
-    store reads the schema its manifest recorded, or infers it) — pass
-    the type whenever a delta key is non-string, or the cold-start
-    read diverges from the populated one.
+    Deltas hold algebraic count partials, so live directories merge by
+    summing ``cnt`` per key. One live directory is already one row per
+    key and is read as stored; only two or more are merged through an
+    aggregation. An empty store (no live directory) reads as 0 rows of
+    (keys... string, cnt bigint), the schema a populated store of
+    string keys has.
     """
-    merge = {"sum": F.sum, "max": F.max}[how]
-    names = [k.split()[0] for k in keys]
     m = _read_manifest(counts_dir)
     if not m["live"]:
-        fields = ", ".join(k if " " in k else f"{k} string" for k in keys)
-        return spark.createDataFrame([], f"{fields}, {value} long")
+        fields = ", ".join(f"{k} string" for k in keys)
+        return spark.createDataFrame([], f"{fields}, cnt long")
     reader = spark.read
     if "schema" in m:
         reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
     df = reader.parquet(*[f"{counts_dir}/{d}" for d in m["live"]])
     if len(m["live"]) == 1:
-        return df.select(*names, F.col(value).cast("long").alias(value))
-    return df.groupBy(*names).agg(merge(value).cast("long").alias(value))
+        return df.select(*keys, F.col("cnt").cast("long").alias("cnt"))
+    return df.groupBy(*keys).agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
-def compact(
-    spark: SparkSession,
-    counts_dir: str,
-    keys: list[str],
-    min_deltas: int = 2,
-    value: str = "cnt",
-    how: str = "sum",
-) -> bool:
-    """Fold live dirs into one base. Returns True if it wrote a new base.
+def compact(spark: SparkSession, counts_dir: str, keys: list[str], min_deltas: int = 2) -> bool:
+    """Fold live dirs into one base by summing their counts per key, once
+    at least ``min_deltas`` unfolded deltas are live. Returns True if it
+    wrote a new base.
 
     New base is written first, then the manifest swap publishes it,
     then the consumed dirs are removed — a reader holding the *old*
@@ -173,7 +154,7 @@ def compact(
     if m["live"] == [f"delta-{folded:08d}"]:  # one delta: already the exact table
         _write_manifest(counts_dir, {**m, "folded_through": folded})
         return False
-    merged = read_counts(spark, counts_dir, keys, value=value, how=how)
+    merged = read_counts(spark, counts_dir, keys)
     base = f"base-{m['next_base']:08d}"
     merged.write.mode("overwrite").parquet(f"{counts_dir}/{base}")
     _write_manifest(

@@ -221,74 +221,6 @@ def test_url_canonical_differential_fuzz(spark):
     assert all(r.c1 == r.c2 for r in twice)
 
 
-def test_sql_function_registry_parity(spark):
-    # the Pig-DEFINE analog: SQL scalar functions must compute exactly
-    # what the DataFrame expressions compute (single-sourced regexes)
-    from pyspark.sql import functions as F
-
-    from pignlproc_spark.functions.register import register_sql
-    from pignlproc_spark.functions.tokenize import tokens_col
-    from pignlproc_spark.functions.uri import uri_encode_col
-    from pignlproc_spark.operators.textstats import hash_bucket
-
-    names = register_sql(spark)
-    assert "ccw_tokenize" in names and "ccw_hash_bucket" in names
-
-    df = spark.createDataFrame(
-        [(7, "The café AND the Boat-house, it's 2024!"), (8, ""), (9, "Under_scored the the")],
-        "id long, s string",
-    )
-    df.createOrReplaceTempView("reg_probe")
-    got = spark.sql(
-        "SELECT id, ccw_tokenize(s) AS t, ccw_tokenize_stopped(s) AS ts, "
-        "ccw_bpe_pieces(s) AS np, ccw_hash_bucket(id, 100) AS b, "
-        "ccw_title_from_uri(ccw_uri_encode('main_Page')) AS rt FROM reg_probe"
-    ).collect()
-    exp = df.select(
-        "id",
-        tokens_col(F.col("s"), apply_stoplist=False).alias("t"),
-        tokens_col(F.col("s"), apply_stoplist=True).alias("ts"),
-        F.size(F.regexp_extract_all("s", F.lit(__import__("pignlproc_spark.operators.textstats", fromlist=["BPE_SPLIT_RE"]).BPE_SPLIT_RE), 0)).cast("bigint").alias("np"),
-        hash_bucket(F.col("id"), 100).alias("b"),
-    ).collect()
-    ge = {r.id: r for r in got}
-    for r in exp:
-        assert ge[r.id].t == r.t and ge[r.id].ts == r.ts
-        assert ge[r.id].np == r.np and ge[r.id].b == r.b
-    assert all(r.rt == "Main_Page" for r in got)
-    # SQL-vs-DataFrame parity for the URI pair (single-sourced prefix)
-    uri_pair = df.select(
-        uri_encode_col(F.lit("main_Page")).alias("u"),
-        F.expr("ccw_uri_encode('main_Page')").alias("su"),
-    ).collect()[0]
-    assert uri_pair.u == uri_pair.su == "http://en.dbpedia.org/resource/Main_Page"
-    # CCPii scrub: SQL function == DataFrame operator (incl. the
-    # ASCII-\b translation on the non-ASCII neighbor case)
-    from pignlproc_spark.operators.textstats import pii_scrub
-
-    pdf = spark.createDataFrame(
-        [(1, "mail a@b.co at é10.0.0.7é or +1 555 0199, ssn 123-45-6789")],
-        "doc_id long, text string",
-    )
-    pdf.createOrReplaceTempView("pii_probe")
-    sql_clean = spark.sql("SELECT ccw_pii_clean(text) AS c FROM pii_probe").collect()[0].c
-    df_clean = pii_scrub(pdf).collect()[0].clean_text
-    assert sql_clean == df_clean
-    assert "<EMAIL>" in sql_clean and "<IP>" in sql_clean and "<IDNUM>" in sql_clean and "<PHONE>" in sql_clean
-    # registration is idempotent
-    register_sql(spark)
-    # Hive-compat raw string literals: registration must adapt the
-    # escaping or the regexes silently corrupt
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        register_sql(spark)
-        raw = spark.sql("SELECT ccw_tokenize('The cafe AND boat') AS t").collect()[0].t
-        assert raw == ["the", "cafe", "and", "boat"]
-    finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
-        register_sql(spark)
-
-
 def test_tokenize_spark_parity_random_batch(spark):
     """Seeded-random differential check of the frozen tokenizer spec:
     the JVM expression path must equal the Python path on a batch of
@@ -488,45 +420,6 @@ def test_url_blocklist_filter(spark):
     assert "ShuffleExchange" not in plan
 
 
-def test_sql_registry_html_and_moji_parity(spark):
-    """ccw_html_text / ccw_moji_fix must equal the frozen DataFrame
-    expressions (single-sourced constants, both parser literal modes
-    handled by register_sql)."""
-    from pyspark.sql import functions as F
-
-    from pignlproc_spark.functions.encoding import MOJIBAKE_TABLE, mojibake_fix_col
-    from pignlproc_spark.functions.html import html_to_text_col
-    from pignlproc_spark.functions.register import register_sql
-
-    names = register_sql(spark)
-    assert "ccw_html_text" in names and "ccw_moji_fix" in names
-    damaged = MOJIBAKE_TABLE[0][0] + " caf" + {c: d for d, c in MOJIBAKE_TABLE}["é"]
-    df = spark.createDataFrame(
-        [
-            (1, '<p>a&amp;b</p><script>no</script><div class="x">c</div>'),
-            (2, damaged),
-            (3, "plain"),
-        ],
-        "id long, s string",
-    )
-    df.createOrReplaceTempView("reg_probe_hm")
-    got = {
-        r.id: (r.h, r.m)
-        for r in spark.sql(
-            "SELECT id, ccw_html_text(s) AS h, ccw_moji_fix(s) AS m FROM reg_probe_hm"
-        ).collect()
-    }
-    exp = {
-        r.id: (r.h, r.m)
-        for r in df.select(
-            "id",
-            html_to_text_col(F.col("s")).alias("h"),
-            mojibake_fix_col(F.col("s")).alias("m"),
-        ).collect()
-    }
-    assert got == exp
-
-
 def test_parse_robots_group_scoping(spark):
     """CCRobots v1: rules bind to their User-agent run; multi-UA runs
     form ONE group; comments and empty values drop; only '*' groups
@@ -610,37 +503,6 @@ def test_parse_sitemap_entities_and_counts(spark):
         "https://h.example/<odd>",  # &lt;/&gt; decoded
     }
     assert all(r.n_locs == 3 for r in got)
-
-
-def test_sql_registry_url_canonical_parity(spark):
-    """ccw_url_canonical == canonical_url_col on the classic variants,
-    in BOTH parser literal modes (the regexes carry backslashes, so the
-    escapedStringLiterals path is the risky one)."""
-    from pyspark.sql import functions as F
-
-    from pignlproc_spark.functions.register import register_sql
-    from pignlproc_spark.functions.urls import canonical_url_col
-
-    urls = [
-        "HTTP://Host.Example:80/a/b/#frag",
-        "https://h.example:443/x?",
-        "https://h.example/x?a=1#f",
-        "not a url",
-        " http://h.example/trail/// ",
-        "file:///etc/passwd",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "s string")
-    df.createOrReplaceTempView("reg_probe_url")
-    for escaped in (False, True):
-        old = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", str(escaped).lower())
-        try:
-            register_sql(spark)
-            got = [r.c for r in spark.sql("SELECT ccw_url_canonical(s) AS c FROM reg_probe_url").collect()]
-        finally:
-            spark.conf.set("spark.sql.parser.escapedStringLiterals", old)
-        exp = [r.c for r in df.select(canonical_url_col(F.col("s")).alias("c")).collect()]
-        assert got == exp, f"escaped={escaped}"
 
 
 def test_robots_crawl_delay(spark):

@@ -1,8 +1,9 @@
 """Package layout guard (no Spark needed): every ``pignlproc_spark``
 module must be reachable from a job (``jobs/*.py``) or a benchmark
 workload (``perfbench/*.py``), or be listed below with the reason it
-stays: a paper analogue not yet wired into a job, or a driver-only
-module whose retirement is still open (ROADMAP direction 1).
+stays. The list holds only paper analogues not yet wired into a job;
+a module that only tests or the driver contract use does not belong
+on it.
 
 Reachability is an AST import walk that follows every import, lazy
 in-function ones included, and a package's ``__init__`` whenever one
@@ -21,14 +22,6 @@ ALLOWED_UNREACHED = {
     "pignlproc_spark.operators.mentions": "pignlproc J7 ParagraphsWithLink (paragraph link contexts)",
     "pignlproc_spark.sources.wikidump": "the paper's J1/J2 dump split, to be wired into build_kg",
     "pignlproc_spark.sources.ntriples": "the paper's J4 NTriples reader, to be wired into build_kg",
-    # driver-only, retirement open; each is still pinned by its tests
-    "pignlproc_spark.operators.sketches": "HLL/CMS token sketches (tests/test_sketches.py)",
-    "pignlproc_spark.streaming.cardinality": "streaming fold of the HLL sketch (tests/test_streaming.py)",
-    "pignlproc_spark.streaming.frequency": "streaming fold of the CMS sketch (tests/test_streaming.py)",
-    "pignlproc_spark.streaming.topk": "streaming heavy hitters over the CMS (tests/test_streaming.py)",
-    "pignlproc_spark.operators.bpe": "BPE vocabulary induction (tests/test_bpe.py)",
-    "pignlproc_spark.operators.integrity": "graph audit and dangling refs (tests/test_integrity.py)",
-    "pignlproc_spark.functions.register": "ccw_* SQL registry of the frozen functions (tests/test_functions.py)",
 }
 
 

@@ -453,40 +453,6 @@ def test_classifier_round_broadcasts_weights_and_reuses_doc_layout(spark):
     feats.unpersist()
 
 
-def test_bpe_pair_count_is_partial_final_no_python(spark):
-    """CCBpe learning round: the freq-weighted adjacent-pair count is
-    the only corpus... vocab-table-wide operation — it must combine
-    map-side (partial/final sum) and never touch Python; the greedy
-    merge-apply is a JVM string fold (no ArrowEvalPython)."""
-    from pignlproc_spark.operators import bpe
-
-    df = spark.createDataFrame(
-        [(0, "the cat sat"), (1, "the mats chat")], "doc_id long, text string"
-    )
-    model = bpe.learn_bpe(df, n_merges=2)
-    plan = plan_of(model.vocab)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the round's aggregation shape, reconstructed on the checkpointed
-    # vocab exactly as learn_bpe builds it each round
-    pairs = (
-        model.vocab.where(F.size("syms") >= 2)
-        .select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1),"
-                    " j -> named_struct('l', syms[j-1], 'r', syms[j]))"
-                )
-            ).alias("p"),
-        )
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("freq").alias("cnt"))
-    )
-    pplan = plan_of(pairs)
-    assert "partial_sum" in pplan and pplan.count("HashAggregate") >= 2
-    assert "BatchEvalPython" not in pplan and "ArrowEvalPython" not in pplan
-
-
 def test_winnowing_single_exchange(spark):
     """Winnowing costs ONE shuffle (the per-doc window); the distinct
     must reuse that partitioning, and nothing drops to Python."""
@@ -516,47 +482,6 @@ def test_robots_filter_crawl_side_is_broadcast_probe(spark):
     assert "BroadcastHashJoin" in plan  # rules side broadcast, never SMJ
     assert "SortMergeJoin" not in plan
     assert "EvalPython" not in plan
-
-
-def test_hll_sketch_is_two_bounded_agg_pairs(spark):
-    """CCHll v1: register build must be a partial/final MAX pair on
-    (group, register) — map-side combine bounds the shuffle at
-    n_partitions × groups × 256 rows — and the whole chain stays
-    JVM-side (no Python stage, no distinct, no window)."""
-    from pignlproc_spark.operators import sketches
-
-    df = spark.createDataFrame(
-        [("g%d" % (i % 3), "item%d" % i) for i in range(100)],
-        "g string, item string",
-    )
-    plan = plan_of(sketches.hll_distinct(df, "item", ("g",)))
-    assert "partial_max" in plan  # map-side register combine
-    assert plan.count("HashAggregate") >= 4  # two partial/final pairs
-    assert "Expand" not in plan and "Window" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_cms_lookup_broadcasts_registers(spark):
-    """CCCms v1: the register build must be a partial/final COUNT pair
-    on (group, hrow, bucket) — shuffle bounded at
-    n_partitions × groups × 4 × 4096 rows — and the probe lookup must
-    BROADCAST the register table (probes never shuffle for the join),
-    all JVM-side."""
-    from pignlproc_spark.operators import sketches
-
-    df = spark.createDataFrame(
-        [("g%d" % (i % 2), "item%d" % (i % 20)) for i in range(200)],
-        "g string, item string",
-    )
-    regs = sketches.cms_registers(df, "item", ("g",))
-    plan = plan_of(regs)
-    assert "partial_count" in plan  # map-side register combine
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    probes = df.select("g", "item").distinct()
-    lookup_plan = plan_of(sketches.cms_lookup(regs, probes, "item", ("g",)))
-    assert "BroadcastHashJoin" in lookup_plan
-    assert "SortMergeJoin" not in lookup_plan
-    assert "CartesianProduct" not in lookup_plan
 
 
 def test_hits_half_step_shuffles_scores_not_graph(spark):

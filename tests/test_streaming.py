@@ -331,14 +331,42 @@ def test_read_counts_manifest_without_schema(spark, tmp_path):
 
     counts.append_delta(spark.createDataFrame([("a", 0, 2)], "k string, h int, cnt long"), store, 0)
     drop_schema()
-    got = counts.read_counts(spark, store, ["k", "h int"])
+    got = counts.read_counts(spark, store, ["k", "h"])
     assert [(f.name, f.dataType.simpleString()) for f in got.schema.fields] == [
         ("k", "string"), ("h", "int"), ("cnt", "bigint")
     ]
-    assert _counts_of(spark, store, ["k", "h int"]) == {("a", 0): 2}
+    assert _counts_of(spark, store, ["k", "h"]) == {("a", 0): 2}
     counts.append_delta(spark.createDataFrame([("a", 0, 1), ("b", 1, 4)], "k string, h int, cnt long"), store, 1)
     drop_schema()
-    assert _counts_of(spark, store, ["k", "h int"]) == {("a", 0): 3, ("b", 1): 4}
+    assert _counts_of(spark, store, ["k", "h"]) == {("a", 0): 3, ("b", 1): 4}
+
+
+def test_empty_store_reads_the_populated_schema(spark, tmp_path):
+    """A store with no manifest reads as 0 rows with the schema a
+    populated store reads with, so a cold-start read unions by name
+    with a warm one: (keys... string, cnt bigint) for the count store,
+    (src_host, dst_host, n_links) for the link graph built on it."""
+    from pignlproc_spark.streaming import counts, linkgraph
+
+    stores = [
+        ("pair", lambda d: counts.read_counts(spark, d, ["surface_form", "uri"]),
+         ["surface_form", "uri", "cnt"], ("sf_a", "U1", 2)),
+        ("graph", lambda d: linkgraph.read_edges(spark, d),
+         ["src_host", "dst_host", "n_links"], ("a.example", "b.example", 3)),
+    ]
+    for name, read, cols, row in stores:
+        empty = read(str(tmp_path / f"{name}_none"))
+        assert [(f.name, f.dataType.simpleString()) for f in empty.schema.fields] == [
+            (cols[0], "string"), (cols[1], "string"), (cols[2], "bigint")
+        ], name
+        assert empty.count() == 0, name
+        delta = spark.createDataFrame([row], f"{cols[0]} string, {cols[1]} string, cnt long")
+        counts.append_delta(delta, str(tmp_path / name), 0)
+        warm = read(str(tmp_path / name))
+        assert [(f.name, f.dataType) for f in empty.schema.fields] == [
+            (f.name, f.dataType) for f in warm.schema.fields
+        ], name
+        assert [tuple(r) for r in empty.unionByName(warm).collect()] == [row], name
 
 
 def test_windowed_counts_stream(spark, staged_pages, tmp_path):
@@ -529,248 +557,6 @@ def test_warc_stream_ingest_exactly_once(spark, synth_dir, tmp_path):
     assert key(batch).exceptAll(key(got)).count() == 0
 
 
-def test_streaming_hll_matches_batch_sketch(spark, tmp_path):
-    """CCHll register deltas drained through a real file stream must
-    yield the IDENTICAL estimate as the batch sketch over the union —
-    then replay idempotence and compaction invariance on top."""
-    from pignlproc_spark.operators import sketches
-    from pignlproc_spark.streaming import cardinality, counts
-
-    src = str(tmp_path / "hll_in")
-    df = spark.range(0, 6000).select(
-        (F.col("id") % 2).cast("string").alias("g"),
-        F.concat(F.lit("u-"), (F.col("id") % 1500).cast("string")).alias("item"),
-    )
-    df.repartition(4).write.mode("overwrite").parquet(src)
-
-    hll_dir = str(tmp_path / "hll_regs")
-    q = (
-        spark.readStream.schema("g string, item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(
-            cardinality.foreach_batch_hook("item", ("g",), hll_dir, compact_every=2)
-        )
-        .option("checkpointLocation", str(tmp_path / "hll_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    want = [
-        tuple(r) for r in sketches.hll_distinct(df, "item", ("g",)).orderBy("g").collect()
-    ]
-    got = [
-        tuple(r)
-        for r in cardinality.read_estimates(spark, hll_dir, ("g",)).orderBy("g").collect()
-    ]
-    assert got == want
-
-    # replaying an already-folded batch is a no-op (manifest HWM), and
-    # replaying a live one is value-idempotent (MAX merge)
-    cardinality.append_batch(df.limit(500), 0, "item", ("g",), hll_dir)
-    cardinality.append_batch(df.limit(500), 99, "item", ("g",), hll_dir)
-    got2 = [
-        tuple(r)
-        for r in cardinality.read_estimates(spark, hll_dir, ("g",)).orderBy("g").collect()
-    ]
-    assert got2 == want
-
-    # compaction folds everything into one base, estimates unchanged
-    assert counts.compact(
-        spark, hll_dir, ["g", "register"], min_deltas=1, value="rho", how="max"
-    )
-    got3 = [
-        tuple(r)
-        for r in cardinality.read_estimates(spark, hll_dir, ("g",)).orderBy("g").collect()
-    ]
-    assert got3 == want
-
-
-def test_streaming_cms_matches_batch_sketch(spark, tmp_path):
-    """CCCms register deltas drained through a real file stream must
-    yield IDENTICAL point estimates to the batch sketch over the
-    union; compaction must be observably a no-op."""
-    from pignlproc_spark.operators import sketches
-    from pignlproc_spark.streaming import counts, frequency
-
-    src = str(tmp_path / "cms_in")
-    df = spark.range(0, 9000).select(
-        (F.col("id") % 2).cast("string").alias("g"),
-        F.concat(
-            F.lit("t-"), ((F.col("id") * F.col("id")) % 400).cast("string")
-        ).alias("item"),
-    )
-    df.repartition(4).write.mode("overwrite").parquet(src)
-
-    cms_dir = str(tmp_path / "cms_regs")
-    q = (
-        spark.readStream.schema("g string, item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(
-            frequency.foreach_batch_hook("item", ("g",), cms_dir, compact_every=2)
-        )
-        .option("checkpointLocation", str(tmp_path / "cms_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    probes = df.select("g", "item").distinct()
-    want = sorted(
-        tuple(r)
-        for r in sketches.cms_lookup(
-            sketches.cms_registers(df, "item", ("g",)), probes, "item", ("g",)
-        ).collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in frequency.read_estimates(
-            spark, cms_dir, probes, "item", ("g",)
-        ).collect()
-    )
-    assert got == want
-
-    # replaying an already-seen batch id is a no-op (manifest HWM)
-    frequency.append_batch(df.limit(500), 0, "item", ("g",), cms_dir)
-    got2 = sorted(
-        tuple(r)
-        for r in frequency.read_estimates(
-            spark, cms_dir, probes, "item", ("g",)
-        ).collect()
-    )
-    assert got2 == want
-
-    # compaction folds everything into one base, estimates unchanged
-    assert counts.compact(
-        spark, cms_dir, ["g", "hrow", "bucket"], min_deltas=1, value="cnt", how="sum"
-    )
-    got3 = sorted(
-        tuple(r)
-        for r in frequency.read_estimates(
-            spark, cms_dir, probes, "item", ("g",)
-        ).collect()
-    )
-    assert got3 == want
-
-
-def test_streaming_topk_heavy_hitters(spark, tmp_path):
-    """Sketch-plus-candidates heavy hitters: the streamed top-k must
-    equal the exact batch top-k (counts spaced beyond the CMS error so
-    ranks cannot swap), estimates never understate, and replay +
-    compaction are observably no-ops."""
-    from pignlproc_spark.streaming import topk
-
-    # item i (i in 0..19) appears 50*(20-i) times per group: top-5 are
-    # separated by 50 counts, far above any plausible CMS collision
-    src = str(tmp_path / "hh_in")
-    df = (
-        spark.range(0, 2 * 50 * 210)
-        .select(
-            (F.col("id") % 2).cast("string").alias("g"),
-            F.floor(
-                (F.col("id") / 2) % 10500 / F.lit(50)
-            ).alias("_slot"),
-        )
-        .select(
-            "g",
-            F.concat(
-                F.lit("w-"),
-                F.expr(
-                    "CASE WHEN _slot < 20 THEN 0 WHEN _slot < 39 THEN 1 "
-                    "WHEN _slot < 57 THEN 2 ELSE _slot END"
-                ).cast("int").cast("string"),
-            ).alias("item"),
-        )
-    )
-    df.repartition(4).write.mode("overwrite").parquet(src)
-
-    store = str(tmp_path / "hh_store")
-    q = (
-        spark.readStream.schema("g string, item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(
-            topk.foreach_batch_hook("item", ("g",), store, k_track=32, compact_every=2)
-        )
-        .option("checkpointLocation", str(tmp_path / "hh_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    exact = {
-        (r.g, r.item): r.c
-        for r in df.groupBy("g", "item").agg(F.count("*").alias("c")).collect()
-    }
-    top = topk.read_topk(spark, store, "item", ("g",), k=3).collect()
-    want_items = {"w-0", "w-1", "w-2"}
-    for g in ("0", "1"):
-        got_g = sorted(
-            [r for r in top if r.g == g], key=lambda r: r.rank
-        )
-        assert [r.item for r in got_g] == sorted(
-            want_items, key=lambda i: -exact[(g, i)]
-        )
-        for r in got_g:
-            assert r.est_count >= exact[(g, r.item)]
-    # replay an already-folded batch id — nothing changes
-    topk.append_batch(df.limit(1000), 0, "item", ("g",), store, k_track=32)
-    again = topk.read_topk(spark, store, "item", ("g",), k=3).collect()
-    assert sorted(map(tuple, again)) == sorted(map(tuple, top))
-    # explicit compaction — still nothing changes
-    topk.compact(spark, store, "item", ("g",))
-    again2 = topk.read_topk(spark, store, "item", ("g",), k=3).collect()
-    assert sorted(map(tuple, again2)) == sorted(map(tuple, top))
-
-
-def test_cms_store_cold_start_schema(spark, tmp_path):
-    """An empty CMS store must read with the SAME schema as a
-    populated one (hrow int — the typed-key contract of
-    counts.read_counts), so cold-start reads union/join cleanly with
-    fresh batch registers, and read_topk on nothing returns nothing."""
-    from pignlproc_spark.operators import sketches
-    from pignlproc_spark.streaming import frequency, topk
-
-    empty_regs = frequency.read_registers(spark, str(tmp_path / "none"), ("g",))
-    fresh = sketches.cms_registers(
-        spark.createDataFrame([("a", "x")], "g string, item string"), "item", ("g",)
-    )
-    # name+type parity is the contract (nullability flags differ —
-    # posexplode output is non-nullable, DDL-schema fields nullable)
-    assert [(f.name, f.dataType) for f in empty_regs.schema.fields] == [
-        (f.name, f.dataType) for f in fresh.schema.fields
-    ]
-    assert empty_regs.unionByName(fresh).count() == 4  # D_CMS rows
-    assert topk.read_topk(spark, str(tmp_path / "hh_none"), "item", ("g",)).count() == 0
-
-
-def test_topk_typed_item_cold_start(spark, tmp_path):
-    """A non-string item column ("doc_id bigint") must read with the
-    SAME schema from a cold (empty) candidate store as from a
-    populated one — the typed-item passthrough of topk."""
-    from pignlproc_spark.streaming import topk
-
-    store = str(tmp_path / "hh_typed")
-    cold = topk.read_candidates(spark, store, "doc_id bigint", ("g",))
-    assert [f.dataType.simpleString() for f in cold.schema.fields] == ["string", "bigint"]
-    df = spark.createDataFrame(
-        [("a", 7), ("a", 7), ("a", 7), ("a", 9)], "g string, doc_id long"
-    )
-    topk.append_batch(df, 0, "doc_id bigint", ("g",), store, k_track=8)
-    warm = topk.read_candidates(spark, store, "doc_id bigint", ("g",))
-    assert [(f.name, f.dataType) for f in cold.schema.fields] == [
-        (f.name, f.dataType) for f in warm.schema.fields
-    ]
-    assert cold.unionByName(warm).count() == 2
-    top = topk.read_topk(spark, store, "doc_id bigint", ("g",), k=1).collect()
-    assert top[0].doc_id == 7 and top[0].est_count >= 3
-    topk.compact(spark, store, "doc_id bigint", ("g",))
-    again = topk.read_topk(spark, store, "doc_id bigint", ("g",), k=1).collect()
-    assert sorted(map(tuple, again)) == sorted(map(tuple, top))
-
-
 def test_streaming_link_graph_matches_batch(spark, tmp_path):
     """Edge SUM deltas drained through a real file stream must merge
     to the IDENTICAL link graph as the batch scan over the union —
@@ -838,8 +624,5 @@ def test_streaming_link_graph_matches_batch(spark, tmp_path):
     # idempotence, so this is the contract that matters); an explicit
     # compact afterwards changes nothing a reader can observe
     linkgraph.append_batch(pages.limit(50), 0, graph_dir)
-    counts.compact(
-        spark, graph_dir, ["src_host", "dst_host"], min_deltas=1,
-        value="cnt", how="sum",
-    )
+    counts.compact(spark, graph_dir, ["src_host", "dst_host"], min_deltas=1)
     assert sorted(tuple(r) for r in linkgraph.read_edges(spark, graph_dir).collect()) == want
