@@ -1,5 +1,5 @@
-"""KG integrity audit (operators/integrity.py), the leakage-safe host
-split (functions/urls.host_split), and the vocabulary-profile stats
+"""Data-integrity helpers of the training hand-off: the leakage-safe host
+split (functions/urls.host_split) and the vocabulary-profile stats
 (textstats.count_of_counts / vocab_growth) — hand-computed fixtures."""
 
 import hashlib
@@ -7,63 +7,7 @@ import hashlib
 import pytest
 
 from pignlproc_spark.functions.urls import host_split
-from pignlproc_spark.operators import integrity, textstats
-
-TRIPLE_SCHEMA = "subj string, pred string, obj string, weight long"
-
-
-def test_graph_audit_checks_fire(spark):
-    t = spark.createDataFrame(
-        [
-            ("a", "kg:linksTo", "x", 2),
-            ("a", "kg:linksTo", "a", 1),  # self loop
-            ("b", "kg:uriCount", "3", 3),
-            ("b", "kg:uriCount", "4", 4),  # functional violation
-            ("c", "kg:uriCount", "5", 5),
-            ("d", "kg:mentions", "x", 1),
-            ("d", "kg:mentions", "x", 1),  # exact duplicate triple
-            ("e", "kg:totalCount", "-1", -1),  # sentinel = bad weight
-            ("f", "kg:annotatedCount", "7", 7),
-            ("f", "kg:annotatedCount", None, 7),  # join key gone NULL
-            ("g", "kg:annotatedCount", None, 1),
-            ("g", "kg:annotatedCount", None, 1),  # dup of the NULL triple
-            ("h", "kg:totalCount", "2", None),  # weight gone NULL = bad
-        ],
-        TRIPLE_SCHEMA,
-    )
-    rows = {r.pred: r for r in integrity.graph_audit(t).collect()}
-    assert set(rows) == {
-        "kg:linksTo", "kg:uriCount", "kg:mentions", "kg:totalCount", "kg:annotatedCount",
-    }
-    lt = rows["kg:linksTo"]
-    assert (lt.n_triples, lt.n_subj, lt.max_fanout) == (2, 1, 2)
-    assert (lt.n_self_loops, lt.n_dup_triples, lt.n_functional_violations) == (1, 0, 0)
-    uc = rows["kg:uriCount"]
-    assert (uc.n_triples, uc.n_subj, uc.n_functional_violations) == (3, 2, 1)
-    assert uc.n_dup_triples == 0  # distinct objects are multi-edges, not dups
-    assert rows["kg:mentions"].n_dup_triples == 1
-    assert rows["kg:totalCount"].n_bad_weight == 2  # -1 sentinel + NULL
-    assert rows["kg:linksTo"].n_bad_weight == 0
-    # NULL objects: counted explicitly, treated as ONE distinct value
-    ac = rows["kg:annotatedCount"]
-    assert ac.n_null_obj == 3
-    assert ac.n_functional_violations == 1  # f: real obj + NULL
-    assert ac.n_dup_triples == 1  # g's second NULL row, not 3 phantoms
-    assert rows["kg:uriCount"].n_null_obj == 0
-
-
-def test_dangling_refs_anti_join(spark):
-    t = spark.createDataFrame(
-        [
-            ("u1", "kg:uriCount", "7", 7),
-            ("d1", "kg:mentions", "u1", 1),
-            ("d2", "kg:mentions", "ghost", 1),
-            ("d3", "kg:mentions", "ghost", 2),
-        ],
-        TRIPLE_SCHEMA,
-    )
-    out = integrity.dangling_refs(t).collect()
-    assert [(r.obj, r.n_refs) for r in out] == [("ghost", 2)]
+from pignlproc_spark.operators import textstats
 
 
 def _bucket(host: str) -> int:
