@@ -442,9 +442,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     # ---- training-data ops (documents) ----
-    def docs_dedup_exact(spark, sf_dir):
-        return dedup.exact_duplicates(_read(spark, sf_dir, "documents"))
-
     def docs_minhash_sigs(spark, sf_dir):
         return dedup.minhash_signatures(_read(spark, sf_dir, "documents")).select(
             "doc_id", F.col("band").cast("int").alias("band"), "sig"
@@ -471,14 +468,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def docs_repetition(spark, sf_dir):
         return textstats.repetition_signals(_read(spark, sf_dir, "documents"))
-
-    def docs_duplicate_spans(spark, sf_dir):
-        # ExactSubstr-style partial-duplication spans (15-token windows)
-        return dedup.duplicate_spans(_read(spark, sf_dir, "documents"), window=15)
-
-    def docs_strip_spans(spark, sf_dir):
-        # the transform half: cut the duplicated spans out of the text
-        return dedup.strip_duplicate_spans(_read(spark, sf_dir, "documents"), window=15)
 
     def docs_curation_pipeline(spark, sf_dir):
         # the composed per-doc curation verdict a training pipeline
@@ -508,23 +497,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return stats.entity_pagerank(_pipeline(spark, sf_dir).mentions, iterations=5)
 
-    def kg_entity_pagerank_q(spark, sf_dir):
-        # the fixed-point integer twin: oracle-EXACT vs the same
-        # recurrence unrolled as a DuckDB CTE chain
-        from pignlproc_spark.operators import stats
-
-        return stats.entity_pagerank_q(_pipeline(spark, sf_dir).mentions, iterations=3)
-
-    def docs_simhash(spark, sf_dir):
-        return dedup.simhash(_read(spark, sf_dir, "documents"))
-
     def docs_jaccard_pairs(spark, sf_dir):
         d = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
         return dedup.jaccard_pairs(d, min_jaccard_pct=10)
-
-    def docs_containment_pairs(spark, sf_dir):
-        d = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
-        return dedup.containment_pairs(d, min_containment_pct=90)
 
     def docs_rarity_score(spark, sf_dir):
         return textstats.rarity_score(_read(spark, sf_dir, "documents"))
@@ -681,9 +656,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         return dedup.dedup_against_history(new, docs)
-
-    def docs_winnowing(spark, sf_dir):
-        return dedup.winnowing_fingerprints(_read(spark, sf_dir, "documents"))
 
     def web_robots_filter(spark, sf_dir):
         # hosts cc0-cc4 publish the fixture robots.txt (cc5-cc9 have
@@ -881,29 +853,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("html"),
         )
         return host_link_edges(with_html)
-
-    def web_link_reciprocity(spark, sf_dir):
-        # per-host link reciprocity over the CCLink host graph — the
-        # structural link-exchange/link-farm signal (exact ints)
-        from pignlproc_spark.operators import stats
-
-        return stats.link_reciprocity(web_link_graph(spark, sf_dir))
-
-    def web_degree_histogram(spark, sf_dir):
-        # degree distribution of the undirected host graph (distinct
-        # neighbor pairs): the power-law / template-link diagnostic
-        from pignlproc_spark.operators import stats
-
-        e = web_link_graph(spark, sf_dir)
-        und = (
-            e.select(
-                F.least("src_host", "dst_host").alias("a"),
-                F.greatest("src_host", "dst_host").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        return stats.degree_histogram(und, src="a", dst="b")
 
     def web_hits_q(spark, sf_dir):
         # Kleinberg HITS over the host link graph in fixed-point
@@ -1163,7 +1112,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(
         docs_mojibake_fix=docs_mojibake_fix,
         docs_history_dedup=docs_history_dedup,
-        docs_winnowing=docs_winnowing,
         web_robots_filter=web_robots_filter,
         web_crawl_delays=web_crawl_delays,
         web_robots_sitemaps=web_robots_sitemaps,
@@ -1172,8 +1120,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         web_url_templates=web_url_templates,
         web_frontier_gap=web_frontier_gap,
         web_link_graph=web_link_graph,
-        web_link_reciprocity=web_link_reciprocity,
-        web_degree_histogram=web_degree_histogram,
         web_hits_q=web_hits_q,
         web_trustrank_q=web_trustrank_q,
         web_page_metadata=web_page_metadata,
@@ -1383,22 +1329,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return m.groupBy("url", "context", "surface_form", "uri").agg(F.count(F.lit(1)).alias("cnt"))
 
     q.update(
-        docs_dedup_exact=docs_dedup_exact,
         docs_minhash_sigs=docs_minhash_sigs,
         docs_minhash_wide=docs_minhash_wide,
         docs_lsh_pairs=docs_lsh_pairs,
         docs_dedup_clusters=docs_dedup_clusters,
         docs_dedup_keep=docs_dedup_keep,
         docs_repetition=docs_repetition,
-        docs_duplicate_spans=docs_duplicate_spans,
-        docs_strip_spans=docs_strip_spans,
         docs_curation_pipeline=docs_curation_pipeline,
         kg_entity_cooccurrence=kg_entity_cooccurrence,
         kg_entity_pagerank=kg_entity_pagerank,
-        kg_entity_pagerank_q=kg_entity_pagerank_q,
-        docs_simhash=docs_simhash,
         docs_jaccard_pairs=docs_jaccard_pairs,
-        docs_containment_pairs=docs_containment_pairs,
         docs_rarity_score=docs_rarity_score,
         docs_mix_corpus=docs_mix_corpus,
         docs_mix_temperature=docs_mix_temperature,
@@ -1421,16 +1361,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     # ---- training-data ops, continued session 2 ----
-    def docs_decontaminate(spark, sf_dir):
-        # benchmark decontamination: eval set = every 5th doc (the
-        # deterministic stand-in for a benchmark table), n=8 windows
-        # at this corpus scale (13 in production); the eval-gram probe
-        # broadcasts, the corpus never shuffles
-        d = _read(spark, sf_dir, "documents")
-        return dedup.contamination(
-            d.where(F.col("doc_id") % 5 != 0), d.where(F.col("doc_id") % 5 == 0), n=8
-        )
-
     def docs_pack_sequences(spark, sf_dir):
         # concat-and-chunk LLM sequence packing (512-piece sequences,
         # 8 shards — one shard ≈ one output file at scale)
@@ -1454,24 +1384,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             d.where(F.col("doc_id") % 5 != 0), d.where(F.col("doc_id") % 5 == 0), n=8
         )
 
-    def docs_tf_cosine_pairs(spark, sf_dir):
-        # tf-weighted sparse cosine join (exact integer verify); the
-        # inverted-index candidate set is exact at max_df=None
-        return dedup.tf_cosine_pairs(_read(spark, sf_dir, "documents"), min_cos_pct=50)
-
-    def kg_entity_triangles(spark, sf_dir):
-        # degree-oriented per-entity triangle counts over co-occurrence
-        from pignlproc_spark.operators import stats
-
-        return stats.entity_triangles(_pipeline(spark, sf_dir).mentions)
-
-    def kg_related_entities(spark, sf_dir):
-        # PMI-ordered top-k related entities (exact-int columns; the
-        # ranking divides exact ints, deterministic cross-engine)
-        from pignlproc_spark.operators import stats
-
-        return stats.related_entities(_pipeline(spark, sf_dir).mentions, k=5)
-
     def kg_link_prediction(spark, sf_dir):
         # KG-completion scoring: top-k missing-edge candidates per
         # entity, common-neighbor + integer resource-allocation
@@ -1479,21 +1391,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pignlproc_spark.operators import stats
 
         return stats.link_prediction(_pipeline(spark, sf_dir).mentions, k=5)
-
-    def kg_sf_ambiguity(spark, sf_dir):
-        # per-surface-form ambiguity profile (target count, prior-only
-        # ceiling, integer Gini impurity) over the anchor pair counts
-        from pignlproc_spark.operators import stats
-
-        return stats.sf_ambiguity(_pipeline(spark, sf_dir).pair_counts)
-
-    def kg_entity_salience(spark, sf_dir):
-        # per-(document, entity) salience features: occurrence count,
-        # context spread, earliest surface offset (exact char instr)
-        from pignlproc_spark.operators import stats
-
-        p = _pipeline(spark, sf_dir)
-        return stats.entity_salience(p.mentions, p.parsed.select("url", "text"))
 
     def events_rollup(spark, sf_dir):
         # ROLLUP grouping sets on (event_type, hour): subtotals + grand
@@ -1662,22 +1559,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("user_id", F.col("event_type").alias("top_event_type"), "cnt")
         )
 
-    def kg_entity_hops(spark, sf_dir):
-        # BFS hop distances from a deterministic seed; the hop cap
-        # makes the iteration exactly SQL-expressible (depth-bounded
-        # recursive CTE + min), so this iterative op is oracle-exact
-        from pignlproc_spark.operators import stats
-
-        return stats.hop_distances(_pipeline(spark, sf_dir).mentions, max_hops=6)
-
-    def kg_entity_kcore(spark, sf_dir):
-        # k-core of the co-occurrence graph (iterative peel to the
-        # unique fixpoint; oracle-exact vs an 8-round unrolled
-        # materialized-CTE peel + brute-force pytest parity)
-        from pignlproc_spark.operators import stats
-
-        return stats.kcore_members(_pipeline(spark, sf_dir).mentions, k=3)
-
     def docs_positional_index(spark, sf_dir):
         # positional inverted index; the driver-checkable projection
         # keeps exact ints (full positions array covered by pytest)
@@ -1741,14 +1622,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "cnt",
                 "value_c_sum",
             )
-        )
-
-    def docs_simhash_pairs(spark, sf_dir):
-        # SimHash near-dup retrieval at hamming <= 3 via pigeonhole
-        # banding (4 bands x 4 bits): equi-join candidates + exact
-        # bit_count(xor) verify; the oracle is the brute-force join
-        return dedup.simhash_hamming_pairs(
-            _read(spark, sf_dir, "documents"), max_hamming=3
         )
 
     def docs_phrase_search(spark, sf_dir):
@@ -1874,36 +1747,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return merge_snapshot(base, ups.unionByName(dels), keys=["subj", "pred", "obj"])
 
-    def kg_label_propagation(spark, sf_dir):
-        # synchronous LPA communities, 4 frozen rounds (LPA v1);
-        # oracle-exact vs a 4-round unrolled materialized-CTE replay
-        from pignlproc_spark.operators import stats
-
-        return stats.label_propagation(_pipeline(spark, sf_dir).mentions, rounds=4)
-
     q.update(
         docs_chunk_windows=docs_chunk_windows,
         kg_incremental_merge=kg_incremental_merge,
-        kg_label_propagation=kg_label_propagation,
         docs_novelty=docs_novelty,
         docs_surprisal=docs_surprisal,
         docs_bigram_surprisal=docs_bigram_surprisal,
         docs_dsir_weights=docs_dsir_weights,
         docs_line_dedup=docs_line_dedup,
         docs_pii_scrub=docs_pii_scrub,
-        docs_decontaminate=docs_decontaminate,
         docs_pack_sequences=docs_pack_sequences,
         docs_length_quantiles=docs_length_quantiles,
         docs_contamination_spans=docs_contamination_spans,
         docs_strip_contamination=docs_strip_contamination,
-        docs_tf_cosine_pairs=docs_tf_cosine_pairs,
-        kg_entity_triangles=kg_entity_triangles,
-        kg_related_entities=kg_related_entities,
         kg_link_prediction=kg_link_prediction,
-        kg_entity_salience=kg_entity_salience,
-        kg_sf_ambiguity=kg_sf_ambiguity,
-        kg_entity_hops=kg_entity_hops,
-        kg_entity_kcore=kg_entity_kcore,
         tpch_customers_no_orders=tpch_customers_no_orders,
         tpch_set_ops=tpch_set_ops,
         tpch_set_ops_all=tpch_set_ops_all,
@@ -1919,7 +1776,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs_collocations=docs_collocations,
         events_cube=events_cube,
         events_grouping_sets=events_grouping_sets,
-        docs_simhash_pairs=docs_simhash_pairs,
         docs_phrase_search=docs_phrase_search,
         docs_bm25_topk=docs_bm25_topk,
     )
@@ -1980,7 +1836,6 @@ def url_canonical_sql(src: str) -> str:
       FROM {src}
     )
     """
-
 
 
 def _robots_tagged_sql(pages_rel: str) -> str:
@@ -2154,23 +2009,6 @@ def _langid_sql() -> str:
     """
 
 
-def _simhash_sql() -> str:
-    sums = ", ".join(
-        f"sum(CASE WHEN (h16 >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(16)
-    )
-    fp = " + ".join(f"(CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(16))
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_tok_sql('text', stop=False)}) AS tok FROM documents
-    ), h AS (
-      SELECT doc_id, ('0x' || substr(md5(tok), 1, 4))::INT AS h16 FROM toks
-    ), s AS (
-      SELECT doc_id, {sums} FROM h GROUP BY doc_id
-    )
-    SELECT doc_id::BIGINT AS doc_id, ({fp})::BIGINT AS simhash FROM s
-    """
-
-
 def _minhash_sql(bands: int = 4) -> str:
     # 32-bit lanes of ceil(bands/4) keyed md5s per shingle (matches
     # operators/dedup.py: digest 0 = md5(shingle), digest g>=1 =
@@ -2197,42 +2035,6 @@ def _minhash_sql(bands: int = 4) -> str:
     FROM h CROSS JOIN range({bands}) b(band)
     GROUP BY doc_id, band
     """
-
-
-def _pagerank_q_sql(mentions_rel: str, iters: int = 3) -> str:
-    """Fixed-point PageRank oracle: the integer recurrence of
-    stats.entity_pagerank_q unrolled as a CTE chain (DuckDB ``//`` is
-    the same floor-div as Spark ``div`` on the all-positive values)."""
-    from pignlproc_spark.operators.stats import PAGERANK_SCALE
-
-    s = PAGERANK_SCALE
-    parts = [
-        f"WITH m AS (SELECT DISTINCT url, uri FROM {mentions_rel}),",
-        "cooc AS (SELECT a.uri AS uri_a, b.uri AS uri_b, count(*)::BIGINT AS cnt",
-        "         FROM m a JOIN m b ON a.url = b.url AND a.uri < b.uri GROUP BY 1, 2),",
-        "edges AS (SELECT uri_a AS src, uri_b AS dst, cnt AS w FROM cooc",
-        "          UNION ALL SELECT uri_b, uri_a, cnt FROM cooc),",
-        "ws AS (SELECT src, sum(w)::BIGINT AS wsum FROM edges GROUP BY src),",
-        "e AS (SELECT edges.src, edges.dst, edges.w, ws.wsum FROM edges JOIN ws USING (src)),",
-        "nodes AS (SELECT DISTINCT src AS uri FROM edges),",
-        "nn AS (SELECT count(*)::BIGINT AS n FROM nodes),",
-        f"r0 AS (SELECT uri, ({s} // n)::BIGINT AS rank_q FROM nodes CROSS JOIN nn)"
-        + ("," if iters >= 1 else ""),
-    ]
-    prev = "r0"
-    for k in range(1, iters + 1):
-        parts.append(
-            f"c{k} AS (SELECT e.dst AS uri, sum((r.rank_q * e.w * 85) // (100 * e.wsum))::BIGINT AS acc"
-            f"  FROM e JOIN {prev} r ON r.uri = e.src GROUP BY e.dst),"
-        )
-        parts.append(
-            f"r{k} AS (SELECT n.uri, (({s}::BIGINT * 15) // (100 * nn.n) + coalesce(c.acc, 0))::BIGINT AS rank_q"
-            f"  FROM nodes n CROSS JOIN nn LEFT JOIN c{k} c ON n.uri = c.uri)"
-            + ("," if k < iters else "")
-        )
-        prev = f"r{k}"
-    parts.append(f"SELECT uri, rank_q FROM {prev}")
-    return "\n".join(parts)
 
 
 def _trustrank_q_sql(edges_sql: str, seeds_sql: str, iters: int = 3) -> str:
@@ -2633,34 +2435,6 @@ def oracle_sql() -> dict[str, str]:
            (CASE WHEN h.key IS NULL THEN 1 ELSE 0 END)::INT AS keep
     FROM new n LEFT JOIN hist h ON md5(n.text) = h.key
     """
-    # winnowing (k=5, w=4): the selection key packs the gram position
-    # into the low 20 bits so the window MIN tie-breaks identically in
-    # both engines (operators/dedup.winnowing_fingerprints)
-    o["docs_winnowing"] = f"""
-    WITH toks AS (
-      SELECT doc_id, {_tok_sql('text', stop=False)} AS t FROM documents
-    ), g AS (
-      SELECT doc_id, u.j - 1 AS pos, u.gram AS gram FROM (
-        SELECT doc_id, unnest(list_transform(range(1, greatest(len(t) - 3, 1)),
-               j -> {{'j': j, 'gram': t[j] || ' ' || t[j+1] || ' ' || t[j+2] || ' ' || t[j+3] || ' ' || t[j+4]}})) AS u
-        FROM toks WHERE len(t) >= 5
-      )
-    ), h AS (
-      SELECT doc_id, pos,
-             ('0x' || substr(md5(gram), 1, 10))::BIGINT * 1048576 + pos AS hp
-      FROM g WHERE pos < 1048576
-    ), s AS (
-      SELECT doc_id, pos,
-             min(hp) OVER (PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel,
-             count(*) OVER (PARTITION BY doc_id) AS n
-      FROM h
-    )
-    SELECT DISTINCT doc_id::BIGINT AS doc_id,
-           (sel // 1048576)::BIGINT AS fp_hash,
-           (sel % 1048576)::INT AS fp_pos
-    FROM s WHERE pos <= n - 4
-    """
     # CCRobots v1 — the relational robots.txt parse + RFC 9309
     # longest-match verdict, mirrored line for line (1-based list
     # indices here vs posexplode's 0-based are internal-only; no
@@ -2760,35 +2534,6 @@ def oracle_sql() -> dict[str, str]:
            lower(regexp_extract(r, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS dst_host,
            count(*)::BIGINT AS n_links
     FROM res WHERE r IS NOT NULL GROUP BY 1, 2
-    """
-    o["web_link_reciprocity"] = f"""
-    WITH lg AS ({o['web_link_graph']}),
-    e AS (
-      SELECT DISTINCT src_host AS s, dst_host AS d FROM lg WHERE src_host <> dst_host
-    ), rec AS (
-      SELECT e.s, e.d FROM e
-      WHERE EXISTS (SELECT 1 FROM e r WHERE r.s = e.d AND r.d = e.s)
-    ), outc AS (SELECT s AS host, count(*)::BIGINT AS n_out FROM e GROUP BY 1),
-    inc AS (SELECT d AS host, count(*)::BIGINT AS n_in FROM e GROUP BY 1),
-    recc AS (SELECT s AS host, count(*)::BIGINT AS n_reciprocal FROM rec GROUP BY 1)
-    SELECT coalesce(outc.host, inc.host) AS host,
-           coalesce(n_out, 0)::BIGINT AS n_out,
-           coalesce(n_in, 0)::BIGINT AS n_in,
-           coalesce(n_reciprocal, 0)::BIGINT AS n_reciprocal,
-           (coalesce(n_reciprocal, 0) * 1000 // greatest(coalesce(n_out, 0), 1))::BIGINT
-             AS reciprocity_mille
-    FROM outc FULL JOIN inc ON outc.host = inc.host
-    LEFT JOIN recc ON coalesce(outc.host, inc.host) = recc.host
-    """
-
-    o["web_degree_histogram"] = f"""
-    WITH lg AS ({o['web_link_graph']}),
-    und AS (
-      SELECT DISTINCT least(src_host, dst_host) AS a, greatest(src_host, dst_host) AS b
-      FROM lg WHERE src_host <> dst_host
-    ), nodes AS (SELECT a AS node FROM und UNION ALL SELECT b FROM und),
-    deg AS (SELECT node, count(*)::BIGINT AS deg FROM nodes GROUP BY node)
-    SELECT deg, count(*)::BIGINT AS n_nodes FROM deg GROUP BY deg
     """
 
     # HITS — the same host edges fed through the unrolled fixed-point
@@ -3028,10 +2773,6 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # ---- training-data ops ----
-    o["docs_dedup_exact"] = """
-    SELECT md5(text) AS content_hash, min(doc_id)::BIGINT AS keep_id, count(*) AS n_docs
-    FROM documents GROUP BY md5(text)
-    """
     o["docs_minhash_sigs"] = _minhash_sql()
     o["docs_minhash_wide"] = _minhash_sql(bands=8)
     o["docs_lsh_pairs"] = f"""
@@ -3091,59 +2832,6 @@ def oracle_sql() -> dict[str, str]:
            coalesce(n3, 0)::BIGINT AS n_3grams, coalesce(dup3, 0)::BIGINT AS dup3gram_cnt
     FROM toks t LEFT JOIN g2a ON t.doc_id = g2a.doc_id LEFT JOIN g3a ON t.doc_id = g3a.doc_id
     """
-    _W = 15  # duplicate_spans window (matches the docs_* span queries)
-    _wcat = " || ' ' || ".join(f"t[j+{k}]" for k in range(_W))
-    _spans_ctes = f"""
-    toks AS (
-      SELECT doc_id, {_tok_sql('text', stop=False)} AS t FROM documents
-    ), w AS (
-      SELECT doc_id, j - 1 AS pos, md5({_wcat}) AS h
-      FROM toks, unnest(range(1, greatest(len(t) - {_W - 2}, 1))) AS u(j)
-      WHERE len(t) >= {_W}
-    ), d AS (
-      SELECT h FROM w GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), hits AS (
-      SELECT w.doc_id, w.pos FROM w JOIN d USING (h)
-    ), isl0 AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= {_W - 1}
-                  THEN 0 ELSE 1 END AS brk
-      FROM hits
-    ), isl AS (
-      SELECT doc_id, pos, sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM isl0
-    ), spans AS (
-      SELECT doc_id, grp, min(pos) AS span_start, max(pos) + {_W - 1} AS span_end,
-             count(*) AS n_windows
-      FROM isl GROUP BY doc_id, grp
-    )"""
-    o["docs_duplicate_spans"] = f"""
-    WITH {_spans_ctes}
-    SELECT doc_id::BIGINT AS doc_id, span_start::BIGINT AS span_start,
-           span_end::BIGINT AS span_end, n_windows::BIGINT AS n_windows
-    FROM spans
-    """
-    o["docs_strip_spans"] = f"""
-    WITH {_spans_ctes},
-    pt AS (
-      SELECT doc_id, i - 1 AS pos, t[i] AS tok
-      FROM toks, unnest(range(1, len(t) + 1)) AS u(i)
-    ), kept AS (
-      SELECT pt.doc_id, pt.pos, pt.tok FROM pt
-      WHERE NOT EXISTS (
-        SELECT 1 FROM spans s
-        WHERE s.doc_id = pt.doc_id AND pt.pos BETWEEN s.span_start AND s.span_end
-      )
-    ), reb AS (
-      SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text,
-             count(*) AS n_kept
-      FROM kept GROUP BY doc_id
-    )
-    SELECT t.doc_id::BIGINT AS doc_id,
-           coalesce(reb.clean_text, '') AS clean_text,
-           coalesce(reb.n_kept, 0)::BIGINT AS n_tokens_kept,
-           (len(t.t) - coalesce(reb.n_kept, 0))::BIGINT AS n_tokens_dropped
-    FROM toks t LEFT JOIN reb ON t.doc_id = reb.doc_id
-    """
     o["docs_curation_pipeline"] = f"""
     WITH RECURSIVE {_clusters_sql},
     nd AS (
@@ -3155,14 +2843,12 @@ def oracle_sql() -> dict[str, str]:
            (cf.keep * nd.neardup_keep)::INT AS keep
     FROM cf JOIN nd ON cf.doc_id = nd.doc_id
     """
-    o["kg_entity_pagerank_q"] = _pagerank_q_sql(g("golden_mentions"), iters=3)
     o["kg_entity_cooccurrence"] = f"""
     WITH m AS (SELECT DISTINCT url, uri FROM {g('golden_mentions')})
     SELECT a.uri AS uri_a, b.uri AS uri_b, count(*) AS cnt
     FROM m a JOIN m b ON a.url = b.url AND a.uri < b.uri
     GROUP BY a.uri, b.uri
     """
-    o["docs_simhash"] = _simhash_sql()
     o["docs_jaccard_pairs"] = f"""
     WITH t AS (
       SELECT doc_id, list_distinct({_tok_sql('text', stop=False)}) AS tok
@@ -3174,19 +2860,6 @@ def oracle_sql() -> dict[str, str]:
     FROM t a JOIN t b ON a.doc_id < b.doc_id
     WHERE len(list_intersect(a.tok, b.tok)) * 100
           >= (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) * 10
-    """
-    o["docs_containment_pairs"] = f"""
-    WITH t AS (
-      SELECT doc_id, list_distinct({_tok_sql('text', stop=False)}) AS tok
-      FROM documents WHERE doc_id < 150
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           len(list_intersect(a.tok, b.tok))::BIGINT AS inter_cnt,
-           len(a.tok)::BIGINT AS size_a, len(b.tok)::BIGINT AS size_b
-    FROM t a JOIN t b ON a.doc_id < b.doc_id
-    WHERE len(a.tok) > 0 AND len(b.tok) > 0
-      AND len(list_intersect(a.tok, b.tok)) * 100
-          >= least(len(a.tok), len(b.tok)) * 90
     """
     o["docs_rarity_score"] = f"""
     WITH tf AS (
@@ -3568,28 +3241,8 @@ def oracle_sql() -> dict[str, str]:
         f"SELECT url, context, surface_form, uri, cnt FROM {g('golden_paragraph_mentions')}"
     )
 
-    _CN = 8  # contamination window (matches docs_decontaminate)
+    _CN = 8  # contamination window (matches docs_contamination_spans)
     _cncat = " || ' ' || ".join(f"t[j+{k}]" for k in range(_CN))
-    o["docs_decontaminate"] = f"""
-    WITH toks AS (
-      SELECT doc_id, {_tok_sql('text', stop=False)} AS t FROM documents
-    ), w AS (
-      SELECT doc_id, md5({_cncat}) AS h
-      FROM toks, unnest(range(1, greatest(len(t) - {_CN - 2}, 1))) AS u(j)
-      WHERE len(t) >= {_CN}
-    ), ev AS (SELECT DISTINCT h FROM w WHERE doc_id % 5 = 0),
-    hits AS (
-      SELECT doc_id, count(*)::BIGINT AS n_hit_windows, count(DISTINCT h)::BIGINT AS n_hit_grams
-      FROM w JOIN ev USING (h) WHERE doc_id % 5 <> 0 GROUP BY doc_id
-    )
-    SELECT t.doc_id::BIGINT AS doc_id,
-           greatest(len(t.t) - {_CN - 1}, 0)::BIGINT AS n_windows,
-           coalesce(h.n_hit_windows, 0)::BIGINT AS n_hit_windows,
-           coalesce(h.n_hit_grams, 0)::BIGINT AS n_hit_grams,
-           (coalesce(h.n_hit_windows, 0) >= 1)::INT AS contaminated
-    FROM toks t LEFT JOIN hits h USING (doc_id)
-    WHERE t.doc_id % 5 <> 0
-    """
     _cont_ctes = f"""
     ctoks AS (
       SELECT doc_id, {_tok_sql('text', stop=False)} AS t FROM documents WHERE doc_id % 5 <> 0
@@ -3677,76 +3330,6 @@ def oracle_sql() -> dict[str, str]:
     WHERE rn = (n_docs * q + 99) // 100
     """
 
-    o["docs_tf_cosine_pairs"] = f"""
-    WITH tf AS (
-      SELECT doc_id::BIGINT AS doc_id, tok, count(*)::BIGINT AS tf
-      FROM (SELECT doc_id, unnest({_tok_sql('text', stop=False)}) AS tok FROM documents)
-      GROUP BY doc_id, tok
-    ), nrm AS (
-      SELECT doc_id, sum(tf * tf)::BIGINT AS norm2 FROM tf GROUP BY doc_id
-    ), dots AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, sum(a.tf * b.tf)::BIGINT AS dot
-      FROM tf a JOIN tf b ON a.tok = b.tok AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b, dot, na.norm2 AS norm_a, nb.norm2 AS norm_b
-    FROM dots JOIN nrm na ON dots.id_a = na.doc_id JOIN nrm nb ON dots.id_b = nb.doc_id
-    WHERE dot > 0 AND 10000 * dot * dot >= 2500 * na.norm2 * nb.norm2
-    """
-    o["kg_entity_triangles"] = f"""
-    WITH m AS (SELECT DISTINCT url, uri FROM {g('golden_mentions')}),
-    e AS (
-      SELECT a.uri AS ua, b.uri AS ub
-      FROM m a JOIN m b ON a.url = b.url AND a.uri < b.uri
-      GROUP BY a.uri, b.uri
-    ), tri AS (
-      SELECT e1.ua AS x, e1.ub AS y, e2.ub AS z
-      FROM e e1 JOIN e e2 ON e1.ub = e2.ua
-                JOIN e e3 ON e3.ua = e1.ua AND e3.ub = e2.ub
-    )
-    SELECT uri, count(*)::BIGINT AS n_triangles
-    FROM (SELECT unnest([x, y, z]) AS uri FROM tri)
-    GROUP BY uri
-    """
-    o["kg_entity_hops"] = f"""
-    WITH RECURSIVE m AS (SELECT DISTINCT url, uri FROM {g('golden_mentions')}),
-    cooc AS (
-      SELECT a.uri AS ua, b.uri AS ub
-      FROM m a JOIN m b ON a.url = b.url AND a.uri < b.uri
-      GROUP BY a.uri, b.uri
-    ),
-    e AS (SELECT ua AS src, ub AS dst FROM cooc UNION ALL SELECT ub, ua FROM cooc),
-    bfs(uri, d) AS (
-      SELECT (SELECT min(src) FROM e), 0
-      UNION
-      SELECT e.dst, bfs.d + 1 FROM bfs JOIN e ON e.src = bfs.uri WHERE bfs.d < 6
-    )
-    SELECT uri, min(d)::BIGINT AS dist FROM bfs GROUP BY uri
-    """
-    o["kg_related_entities"] = f"""
-    WITH m AS (SELECT DISTINCT url, uri FROM {g('golden_mentions')}),
-    cx AS (SELECT uri, count(*)::BIGINT AS cnt FROM m GROUP BY uri),
-    cooc AS (
-      SELECT a.uri AS uri_a, b.uri AS uri_b, count(*)::BIGINT AS cnt
-      FROM m a JOIN m b ON a.url = b.url AND a.uri < b.uri
-      GROUP BY a.uri, b.uri
-    ), sym AS (
-      SELECT uri_a AS uri, uri_b AS related_uri, cnt AS cnt_xy FROM cooc
-      UNION ALL
-      SELECT uri_b AS uri, uri_a AS related_uri, cnt AS cnt_xy FROM cooc
-    ), j AS (
-      SELECT s.uri, s.related_uri, s.cnt_xy, x.cnt AS cnt_x, y.cnt AS cnt_y
-      FROM sym s JOIN cx x ON s.uri = x.uri JOIN cx y ON s.related_uri = y.uri
-    )
-    SELECT uri, related_uri, cnt_xy, cnt_x, cnt_y, rank::INT AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY uri
-        ORDER BY cnt_xy / (cnt_x * cnt_y) DESC, related_uri ASC
-      ) AS rank
-      FROM j
-    ) WHERE rank <= 5
-    """
-
     o["kg_link_prediction"] = f"""
     WITH m AS (SELECT DISTINCT url, uri FROM {g('golden_mentions')}),
     cooc AS (
@@ -3780,37 +3363,6 @@ def oracle_sql() -> dict[str, str]:
         PARTITION BY uri ORDER BY ra_q DESC, n_common DESC, cand_uri ASC
       ) AS rank FROM symp
     ) WHERE rank <= 5
-    """
-
-    o["kg_sf_ambiguity"] = f"""
-    SELECT surface_form,
-           count(*)::BIGINT AS n_targets,
-           sum(cnt)::BIGINT AS total_cnt,
-           max(cnt)::BIGINT AS top_cnt,
-           (max(cnt)::HUGEINT * 1000 // sum(cnt)::HUGEINT)::BIGINT AS top_share_mille,
-           ((sum(cnt)::HUGEINT * sum(cnt) - sum(cnt::HUGEINT * cnt)) * 1000
-            // (sum(cnt)::HUGEINT * sum(cnt)))::BIGINT AS gini_mille
-    FROM {g('golden_pair_counts')} GROUP BY surface_form
-    """
-
-    o["kg_entity_salience"] = f"""
-    WITH m AS (
-      SELECT url, uri, context, surface_form, cnt FROM {g('golden_mentions')}
-    ), t AS (SELECT url, text FROM {g('golden_text')}),
-    surf AS (SELECT DISTINCT url, uri, surface_form FROM m),
-    offs AS (
-      SELECT s.url, s.uri,
-             min(nullif(strpos(t.text, s.surface_form), 0))::BIGINT AS first_off,
-             max(length(t.text))::BIGINT AS doc_len
-      FROM surf s JOIN t USING (url) GROUP BY s.url, s.uri
-    ), c AS (
-      SELECT url, uri, sum(cnt)::BIGINT AS n_mentions,
-             count(DISTINCT context)::BIGINT AS n_contexts
-      FROM m GROUP BY url, uri
-    )
-    SELECT c.url, c.uri, c.n_mentions, c.n_contexts, o.first_off, o.doc_len,
-           ((o.first_off - 1) * 1000 // greatest(o.doc_len, 1))::BIGINT AS first_off_mille
-    FROM c JOIN offs o USING (url, uri)
     """
 
     o["tpch_customers_no_orders"] = """
@@ -3954,13 +3506,6 @@ def oracle_sql() -> dict[str, str]:
     FROM events
     GROUP BY CUBE(event_type, date_trunc('day', ts))
     """
-    o["docs_simhash_pairs"] = f"""
-    WITH sh AS ({_simhash_sql()})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    """
     o["docs_phrase_search"] = f"""
     WITH toks AS (
       SELECT doc_id::BIGINT AS doc_id, tok AS token, pos
@@ -4009,36 +3554,6 @@ def oracle_sql() -> dict[str, str]:
     ORDER BY score_q DESC, doc_id LIMIT 20
     """
 
-    # kg_entity_kcore: the peel fixpoint unrolled as 8 chained CTE
-    # rounds (same trick as the PageRank oracle). Peeling is idempotent
-    # at the fixpoint, so unrolling MORE rounds than the graph needs is
-    # exact — this corpus converges in 2 (measured); 8 is the margin.
-    # The Spark side raises if ITS fixpoint exceeds max_rounds=32, so a
-    # future corpus needing >8 rounds shows up as a hash MISMATCH here,
-    # never a silent partial peel.
-    _kc_rounds, _kc_k = 8, 3
-    _kc = [
-        f"m AS MATERIALIZED (SELECT DISTINCT url, uri FROM {g('golden_mentions')})",
-        "e0 AS MATERIALIZED (SELECT a.uri AS ua, b.uri AS ub FROM m a"
-        " JOIN m b ON a.url = b.url AND a.uri < b.uri GROUP BY 1, 2)",
-    ]
-    for i in range(_kc_rounds):
-        _kc.append(
-            f"d{i} AS MATERIALIZED (SELECT uri, count(*) AS deg FROM"
-            f" (SELECT ua AS uri FROM e{i} UNION ALL SELECT ub FROM e{i}) GROUP BY uri)"
-        )
-        _kc.append(f"k{i} AS (SELECT uri FROM d{i} WHERE deg >= {_kc_k})")
-        _kc.append(
-            f"e{i + 1} AS MATERIALIZED (SELECT ua, ub FROM e{i}"
-            f" WHERE ua IN (SELECT uri FROM k{i}) AND ub IN (SELECT uri FROM k{i}))"
-        )
-    o["kg_entity_kcore"] = f"""
-    WITH {', '.join(_kc)}
-    SELECT uri, count(*)::BIGINT AS deg_in_core
-    FROM (SELECT ua AS uri FROM e{_kc_rounds} UNION ALL SELECT ub FROM e{_kc_rounds})
-    GROUP BY uri HAVING count(*) >= {_kc_k}
-    """
-
     # docs_chunk_windows: overlapping token windows — starts are
     # range(0, n, stride) on both sides; DuckDB list_slice is 1-based
     # inclusive = Spark slice(arr, start, length) clipped at list end
@@ -4068,38 +3583,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT subj, pred, obj,
            (CASE WHEN h < 2 THEN weight + 1000 ELSE weight END)::BIGINT AS weight
     FROM t WHERE h NOT IN (2, 3)
-    """
-
-    # kg_label_propagation: the 4 synchronous LPA rounds (LPA v1,
-    # stats.label_propagation) unrolled as materialized CTE rounds —
-    # same trick as the k-core/PageRank oracles; a fixed round count
-    # (not a fixpoint) is what keeps both sides bit-identical even on
-    # structures where synchronous LPA oscillates
-    _lp_rounds = 4
-    _lp = [
-        f"m AS MATERIALIZED (SELECT DISTINCT url, uri FROM {g('golden_mentions')})",
-        "p AS MATERIALIZED (SELECT a.uri AS ua, b.uri AS ub FROM m a"
-        " JOIN m b ON a.url = b.url AND a.uri < b.uri GROUP BY 1, 2)",
-        "e AS MATERIALIZED (SELECT ua AS v, ub AS u FROM p UNION ALL SELECT ub, ua FROM p)",
-        "l0 AS MATERIALIZED (SELECT DISTINCT uri, uri AS lbl FROM m)",
-    ]
-    for i in range(_lp_rounds):
-        _lp.append(
-            f"n{i} AS MATERIALIZED (SELECT e.v, l.lbl, count(*) AS cnt"
-            f" FROM e JOIN l{i} l ON e.u = l.uri GROUP BY 1, 2)"
-        )
-        _lp.append(
-            f"w{i} AS (SELECT v, lbl FROM (SELECT v, lbl,"
-            f" row_number() OVER (PARTITION BY v ORDER BY cnt DESC, lbl ASC) AS rn"
-            f" FROM n{i}) WHERE rn = 1)"
-        )
-        _lp.append(
-            f"l{i + 1} AS MATERIALIZED (SELECT l.uri, coalesce(w.lbl, l.lbl) AS lbl"
-            f" FROM l{i} l LEFT JOIN w{i} w ON l.uri = w.v)"
-        )
-    o["kg_label_propagation"] = f"""
-    WITH {', '.join(_lp)}
-    SELECT uri, lbl AS community FROM l{_lp_rounds}
     """
 
     o["docs_count_of_counts"] = f"""

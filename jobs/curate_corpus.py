@@ -12,8 +12,9 @@ pipeline over ``documents(doc_id, text, lang, ...)``:
                          dedup_keep_decision)
   3. decontamination   — with --eval-docs: flag docs sharing n-token
                          windows with the eval set and excise the
-                         leaked spans (GPT-3-style; dedup.contamination
-                         + strip_contaminated_spans)
+                         leaked spans (GPT-3-style;
+                         dedup.contamination_spans +
+                         strip_contaminated_spans)
   4. length gate       — with --min-length-pct Q > 0: drop keepers
                          below the corpus's EXACT Q-th percentile of
                          token count (textstats.quality_gate — the

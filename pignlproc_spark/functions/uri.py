@@ -6,14 +6,8 @@ character uppercased (ONLY the first — ``initcap`` would be wrong),
 percent-encode reserved characters, prefix
 ``http://<lang>.dbpedia.org/resource/``.
 
-Two implementations with identical semantics:
-
-- :func:`normalize_title` / :func:`uri_encode` — pure Python, used
-  inside the extraction pandas UDF and by the synthetic generator.
-- :func:`uri_encode_col` — pure Spark built-ins (JVM-side, codegen'd)
-  for the hot relational path; the percent-encode tail is a no-op for
-  already-normalized titles, so the built-in path stays exact for the
-  engine's own outputs.
+The pure-Python :func:`normalize_title` / :func:`uri_encode` run
+inside the extraction pandas UDF and the synthetic generator.
 """
 
 from __future__ import annotations
@@ -26,12 +20,6 @@ from urllib.parse import quote, unquote
 # from the reference's convention; frozen here as our spec)
 _SAFE = "/:_()',.&!*;=$@~+-"
 _UNDERSCORE_RUN = re.compile(r"_+")
-
-
-def resource_prefix(lang: str = "en") -> str:
-    """The frozen DBpedia resource-IRI prefix — the single source for
-    the Python and Column spellings."""
-    return f"http://{lang}.dbpedia.org/resource/"
 
 
 @lru_cache(maxsize=65536)
@@ -58,31 +46,4 @@ def uri_encode(title: str | None, lang: str = "en") -> str:
     t = normalize_title(title)
     if not t:
         return ""
-    return resource_prefix(lang) + quote(t, safe=_SAFE)
-
-
-def uri_encode_col(col, lang: str = "en"):
-    """Spark-native uri_encode over a *normalized title* column.
-
-    Stays inside whole-stage codegen (no Python) — but it does NOT
-    percent-encode, so it is exact ONLY for titles consisting of
-    ``[A-Za-z0-9_]`` + ``_SAFE`` characters. The product pipeline does
-    not use it for link targets (the fused extraction UDF emits the
-    exactly-encoded ``uri`` Python-side); keep this for ASCII-clean
-    columns and tests.
-    """
-    from pyspark.sql import functions as F
-
-    first = F.upper(F.substring(col, 1, 1))
-    return F.concat(
-        F.lit(resource_prefix(lang)),
-        first,
-        F.substring(col, 2, 2_000_000),
-    )
-
-
-def title_from_uri_col(col, lang: str = "en"):
-    """Inverse of uri_encode_col for engine-produced URIs."""
-    from pyspark.sql import functions as F
-
-    return F.regexp_replace(col, "^" + re.escape(resource_prefix(lang)), "")
+    return f"http://{lang}.dbpedia.org/resource/" + quote(t, safe=_SAFE)

@@ -24,8 +24,8 @@ Determinism contract (what makes distributed GD hash-exact):
 Consequently the learned weights, per-doc scores, and predictions are
 identical regardless of partitioning, core count, or engine — the
 training run itself passes the driver's value-hash gate
-(`docs_quality_classifier`), the same discipline that made PageRank
-oracle-exact (stats.entity_pagerank_q).
+(`docs_quality_classifier`), the same discipline that makes HITS
+oracle-exact (stats.hits_q).
 
 Scale shape (100 TB): the corpus is tokenized ONCE into a
 (doc_id, bucket, cnt) feature table (explode → md5 feature-hash →
@@ -42,7 +42,7 @@ preserves the hash layout; a checkpoint would not). Each round is then
 
 int64 headroom: per-bucket gradient sums are bounded by
 ``n_rows·max_cnt·G_SCALE``; at 10¹² docs drop ``G_SCALE`` (the
-contract is explicit, like tf_cosine_pairs' overflow guard).
+contract is explicit, like hits_q's degree guard).
 
 Reference parity: pignlproc has no trainer — "beyond the reference"
 (COVERAGE.md), composing the engine's frozen tokenizer + hash-bucket

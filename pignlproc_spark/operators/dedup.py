@@ -1,4 +1,5 @@
-"""Document deduplication: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Document deduplication: MinHash LSH near-duplicates, transitive
+clustering, history dedup and eval-set decontamination spans.
 
 Not part of the reference (pignlproc predates web-scale dedup), but a
 first-class requirement for a 100 TB training-data pipeline. Every
@@ -8,16 +9,12 @@ __spark_entry__ can reproduce results bit-for-bit.
 
 Scale notes:
 
-- Exact dedup: hash-groupBy on ``md5(text)`` — one shuffle of (hash,
-  id) pairs, never the text itself.
 - MinHash/LSH: signatures are 32-bit lanes of ⌈bands/4⌉ keyed md5s per
   shingle (bands × 1 row; at 4 bands P(candidate) ≈ 1−(1−J)⁴ ≈ 0.94 at
   J=0.5, 0.998 at J=0.8; 8–16 bands for high-recall configs); the only
   shuffle is the tiny (band, sig) bucket join, and the verify step
   re-checks candidates with exact Jaccard so LSH recall tuning never
   affects correctness, only cost.
-- SimHash: 16-bit here for oracle-checkability; production would use
-  64-bit xxhash64 (same shape, swap the hash column).
 - All-pairs Jaccard is quadratic — only for bounded subsets / the
   verify step on LSH candidates.
 """
@@ -73,8 +70,8 @@ def _token_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 def window_expr(n: int, toks_col: str = "_toks") -> str:
     """The FROZEN token-window shingle expression shared by every
-    window-hashing operator (minhash shingles, duplicate/contamination
-    spans, repetition grams) and mirrored by the DuckDB oracles: all
+    window-hashing operator (minhash shingles, contamination spans,
+    repetition grams) and mirrored by the DuckDB oracles: all
     space-joined runs of ``n`` consecutive tokens, empty array below
     ``n`` tokens. Single-sourced — a divergence between copies would
     silently break oracle hash-parity. (Array construction inside a
@@ -90,25 +87,21 @@ def window_expr(n: int, toks_col: str = "_toks") -> str:
 
 def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Adds ``shingles`` ARRAY<STRING>: word n-grams (space-joined),
-    built-ins only; empty array when the doc has < n tokens."""
+    built-ins only; empty array when the doc has < n tokens.
+
+    Both arrays arrive through a generator boundary (the 1-element
+    ``explode(array(...))`` of :func:`tokens_once`). Without the second
+    one, the ``size(shingles) > 0 AND isnotnull(shingles)`` filter that
+    Spark infers from a downstream ``explode("shingles")`` is pushed
+    below the projection and inlines the interpreted window lambda
+    twice more."""
     return (
-        # drop first: the pre-boundary withColumn clobbered any caller
-        # "_toks" column and the function never returned one — keep
-        # that contract (select("*", alias) would duplicate instead)
-        df.drop("_toks")
+        # drop first: a caller's "_toks"/"shingles" column is replaced,
+        # not duplicated by select("*", alias)
+        df.drop("_toks", "shingles")
         .select("*", tokens_once(F.col(text_col)).alias("_toks"))
-        .withColumn("shingles", F.expr(window_expr(n)))
+        .select("*", F.explode(F.array(F.expr(window_expr(n)))).alias("shingles"))
         .drop("_toks")
-    )
-
-
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(content_hash, keep_id, n_docs) per distinct content; n_docs > 1
-    rows are duplicate groups. keep_id = min id (stable survivor)."""
-    return (
-        df.select(F.md5(F.col(text_col).cast("binary")).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).cast("bigint").alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
     )
 
 
@@ -137,9 +130,11 @@ def minhash_signatures(
     #   explode the shingles, hash as a plain column, and take the
     #   per-(doc, lane) min with a partial/final aggregate (whole
     #   stage codegen end to end, map-side combine absorbs the fanout).
-    # - a pre-filter like where(size(shingles) > 0) pushes below the
-    #   projections and inlines the whole token+shingle expression
-    #   into the predicate; exploding instead drops empty docs free.
+    # - exploding drops empty docs for free, but Spark infers
+    #   size(shingles) > 0 from the explode and pushes it down; only
+    #   with_shingles' generator boundary keeps that filter from
+    #   re-evaluating the shingle lambda (one transform per doc,
+    #   pinned by tests/test_plans.py).
     sh = with_shingles(df.select(F.col(id_col), F.col(text_col)), text_col, shingle_n)
     digest = lambda g, c: F.md5((c if g == 0 else F.concat(F.lit(f"{g}\u001f"), c)).cast("binary"))  # noqa: E731
     hashed = sh.select(F.col(id_col), F.explode("shingles").alias("shingle")).select(
@@ -209,159 +204,6 @@ def jaccard_pairs(
     )
     return stats.where(F.col("inter_cnt") * 100 >= F.col("union_cnt") * min_jaccard_pct).select(
         "id_a", "id_b", "inter_cnt", "union_cnt"
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_containment_pct: int = 80,
-    max_df: int | None = None,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """(id_a, id_b, inter_cnt, size_a, size_b) for pairs whose token-set
-    CONTAINMENT ``|A∩B| / min(|A|,|B|)`` ≥ min_containment_pct/100 —
-    Broder's containment coefficient (SEQUENCES'97), the asymmetric
-    sibling of :func:`jaccard_pairs`. A 100-token doc fully embedded in
-    a 10k-token doc has Jaccard ≈ 1% but containment 100%; this is the
-    near-superset case resemblance-based dedup misses (quote farms,
-    boilerplate wrappers, doc-in-doc scrapes).
-
-    Integer columns only (hash-stable; both directed ratios are
-    derivable from inter/size_a/size_b).
-
-    Scale shape: an **inverted-index join** — postings (token, id)
-    shuffle on token; a pair materializes once per SHARED token and a
-    partial/final count over (id_a, id_b) yields the exact
-    intersection size, so for pct > 0 the candidate set is EXACT (no
-    shared token ⇒ containment 0). The text never shuffles. Skew lives
-    in high-df tokens (a token in n docs contributes n² pair rows);
-    ``max_df`` drops those posting lists before the join — the
-    documented-recall knob (candidates then arise through rarer tokens
-    only), same contract as ``tf_cosine_pairs(max_df=...)``, except
-    here the verified inter_cnt also excludes the dropped tokens, so
-    max_df trades exactness for skew-immunity explicitly."""
-    t = toks if toks is not None else _token_sets(df, id_col, text_col)
-    sizes = t.select(F.col(id_col).alias("_id"), F.size("tok").cast("bigint").alias("_sz"))
-    post = t.select(F.col(id_col).alias("_id"), F.explode("tok").alias("_token"))
-    if max_df is not None:
-        keep = post.groupBy("_token").agg(F.count(F.lit(1)).alias("_df")).where(F.col("_df") <= max_df)
-        post = post.join(keep.select("_token"), "_token")
-    a = post.select(F.col("_id").alias("id_a"), "_token")
-    b = post.select(F.col("_id").alias("id_b"), "_token")
-    inter = (
-        a.join(b, "_token")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("inter_cnt"))
-    )
-    out = (
-        inter.join(sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("size_a")), "id_a")
-        .join(sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("size_b")), "id_b")
-    )
-    return out.where(
-        F.col("inter_cnt") * 100 >= F.least("size_a", "size_b") * min_containment_pct
-    ).select("id_a", "id_b", "inter_cnt", "size_a", "size_b")
-
-
-def tf_cosine_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_cos_pct: int = 60,
-    max_df: int | None = None,
-    guard_overflow: bool = True,
-) -> DataFrame:
-    """(id_a, id_b, dot, norm_a, norm_b) — pairs whose *tf-weighted*
-    token-vector cosine is ≥ min_cos_pct/100, in exact integer
-    arithmetic (a cross-multiplied test, no division or square root):
-
-        cos ≥ τ  ⟺  dot > 0 ∧ 10⁴·dot² ≥ (100τ)²·‖a‖²·‖b‖²
-
-    where dot = Σ_tok tf_a·tf_b and ‖·‖² = Σ tf². The weighted
-    (multiset) sibling of the set-based :func:`jaccard_pairs` — the
-    classic sparse all-pairs similarity join (Bayardo et al., WWW'07).
-
-    Scale shape: an **inverted-index join** — docs pair up only through
-    shared tokens (a pair sharing none has dot 0 and can never pass
-    τ > 0, so the candidate set is EXACT with ``max_df=None``). The
-    shuffle is (token, doc, tf) postings, never the text. Skew lives in
-    high-df tokens; ``max_df`` caps the posting-list length (the
-    WWW'07 prefix-filter analogue): candidates then come from rare
-    tokens only — a documented recall bound, like LSH — but the
-    verified dot/norms are still computed over the FULL vectors.
-
-    int64 headroom: the test needs 10⁴·‖a‖²·‖b‖² < 2⁶³, i.e. max ‖v‖²
-    < 3.0×10⁷ (a token repeated ~5 500× in one doc); the guard
-    recomputes each norm in DOUBLE (wrap-immune) and folds a
-    ``raise_error`` branch into the norm column, so a degenerate doc
-    fails the job with a clear message at EXECUTION time rather than
-    letting the non-ANSI bigint multiply wrap silently. Construction
-    stays fully lazy — the corpus is tokenized exactly once.
-    """
-    tf = (
-        df.select(F.col(id_col).cast("bigint").alias("doc_id"), F.explode(_tokens(F.col(text_col))).alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint(eager=False)  # consumed by norms + both join sides
-    )
-    norms = tf.groupBy("doc_id").agg(
-        F.sum(F.col("tf") * F.col("tf")).cast("bigint").alias("norm2"),
-        F.sum(F.col("tf").cast("double") * F.col("tf")).alias("_n2d"),
-    )
-    if guard_overflow:
-        norms = norms.withColumn(
-            "norm2",
-            F.when(
-                F.lit(10000.0) * F.col("_n2d") * F.col("_n2d") >= F.lit(float(2**62)),
-                F.raise_error(
-                    F.concat(
-                        F.lit("tf norm^2 "),
-                        F.col("_n2d").cast("string"),
-                        F.lit(
-                            " overflows the int64 cosine test; cap token "
-                            "repetition (or pre-filter degenerate docs) first"
-                        ),
-                    )
-                ).cast("bigint"),
-            ).otherwise(F.col("norm2")),
-        )
-    norms = norms.drop("_n2d")
-    ta = tf.select(F.col("doc_id").alias("id_a"), "tok", F.col("tf").alias("tf_a"))
-    tb = tf.select(F.col("doc_id").alias("id_b"), "tok", F.col("tf").alias("tf_b"))
-    if max_df is None:
-        dots = (
-            ta.join(tb, "tok")
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.sum(F.col("tf_a") * F.col("tf_b")).cast("bigint").alias("dot"))
-        )
-    else:
-        rare = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("_df")).where(F.col("_df") <= max_df)
-        ca = ta.join(rare.select("tok"), "tok")
-        cb = tb.join(rare.select("tok"), "tok")
-        cands = (
-            ca.join(cb, "tok").where(F.col("id_a") < F.col("id_b")).select("id_a", "id_b").distinct()
-        )
-        # full-vector dot for the (small) candidate set only
-        dots = (
-            cands.join(ta, "id_a")
-            .join(tb, ["id_b", "tok"])
-            .groupBy("id_a", "id_b")
-            .agg(F.sum(F.col("tf_a") * F.col("tf_b")).cast("bigint").alias("dot"))
-        )
-    pct2 = min_cos_pct * min_cos_pct
-    na = norms.select(F.col("doc_id").alias("id_a"), F.col("norm2").alias("norm_a"))
-    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("norm2").alias("norm_b"))
-    return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
-        .where(
-            (F.col("dot") > 0)
-            & (F.lit(10000) * F.col("dot") * F.col("dot") >= F.lit(pct2) * F.col("norm_a") * F.col("norm_b"))
-        )
-        .select("id_a", "id_b", "dot", "norm_a", "norm_b")
     )
 
 
@@ -459,7 +301,7 @@ def connected_components(
         if rounds == max_rounds:
             # reading off a non-star-forest edge set would silently
             # SPLIT true components (multiple "survivors" per dup
-            # cluster) — fail loudly, like the k-core peel
+            # cluster) — fail loudly
             raise RuntimeError(
                 f"connected_components did not reach a star forest in "
                 f"{max_rounds} rounds; raise max_rounds (rounds needed ~ "
@@ -530,51 +372,6 @@ def dedup_keep_decision(
     )
 
 
-def duplicate_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 15,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, span_start, span_end, n_windows) — within-document
-    token spans whose content also appears in at least one OTHER
-    document ("ExactSubstr"-style cross-document duplicate detection,
-    Lee et al. 2022, at token-window granularity): hash every
-    ``window``-token sliding window, keep hashes seen in ≥ 2 distinct
-    docs, merge overlapping hit positions per doc into maximal spans
-    (token indices, 0-based inclusive).
-
-    Unlike whole-doc near-dup (MinHash), this finds *partial*
-    duplication — boilerplate headers, license blocks, syndicated
-    paragraphs — the spans a training pipeline cuts out rather than
-    dropping the doc.
-
-    Shape: posexplode windows → md5 as a plain projection (codegen) →
-    count-distinct-docs per hash (partial/final agg) → left-semi join
-    back → per-doc island merge via lag/cumsum window functions. The
-    only per-doc-ordered state is the tiny (doc_id, pos) hit set;
-    window hashing itself never shuffles more than (doc_id, pos, md5).
-    At crawl scale the hash table is the big shuffle — the same
-    (hash, id) profile as minhash_signatures, AQE-handled.
-
-    Pass a precomputed/materialized ``toks`` (doc_id, _toks) to share
-    the tokenization pass with other consumers (strip_duplicate_spans
-    does — Spark reuses exchanges, not arbitrary subplans). A
-    caller-built ``toks`` must come through :func:`tokens_once` or a
-    checkpoint: a plain tokenizer projection is inlined into the window
-    lambda and re-tokenizes once per window element.
-    """
-    if toks is None:
-        toks = df.select(F.col(id_col).alias("doc_id"), tokens_once(F.col(text_col)).alias("_toks"))
-    wins = toks.select("doc_id", F.posexplode(F.expr(window_expr(window))).alias("pos", "w")).select(
-        "doc_id", "pos", F.md5(F.col("w").cast("binary")).alias("h")
-    )
-    dup = wins.groupBy("h").agg(F.count_distinct("doc_id").alias("_nd")).where(F.col("_nd") >= 2)
-    hits = wins.join(dup.select("h"), "h", "left_semi").select("doc_id", "pos")
-    return _merge_hit_spans(hits, window)
-
-
 def _merge_hit_spans(hits: DataFrame, window: int) -> DataFrame:
     """(doc_id, pos) window-hit positions → maximal merged per-doc
     spans (doc_id, span_start, span_end, n_windows): lag/cumsum island
@@ -593,51 +390,6 @@ def _merge_hit_spans(hits: DataFrame, window: int) -> DataFrame:
         )
         .select(F.col("doc_id").cast("bigint"), "span_start", "span_end", "n_windows")
     )
-
-
-def strip_duplicate_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 15,
-    broadcast_spans: bool = True,
-) -> DataFrame:
-    """(doc_id, clean_text, n_tokens_kept, n_tokens_dropped) — the
-    transform half of ExactSubstr dedup: cut the cross-document
-    duplicated spans (duplicate_spans) OUT of each document and rejoin
-    the surviving tokens with single spaces, instead of dropping the
-    whole doc.
-
-    Frozen spec: tokenization is the engine tokenizer (so clean_text
-    is a space-joined token stream, not byte-spliced original text —
-    the right shape for a training corpus, and the only
-    whitespace-lossless one for token-indexed spans); a token is
-    dropped iff its index falls inside any span.
-
-    Shape: the corpus is tokenized ONCE and materialized
-    (localCheckpoint — at cluster scale this is the checkpoint table),
-    then shared by all three consumers (span detection, the token
-    explode, the size() base); posexplode tokens → range-predicate
-    anti-join against the **broadcast** span table (the fact side
-    never shuffles for it; spans are small when duplication is
-    sparse — for boilerplate-heavy corpora where the span table is
-    itself corpus-scale, pass ``broadcast_spans=False`` to fall back
-    to the doc_id-co-partitioned sort-merge join) → ordered per-doc
-    reconstruction via
-    sort_array(collect_list(struct(pos, tok))).tok (codegen'd, no
-    interpreted lambda). The collect is per-document (same cardinality
-    discipline as J8's context concat); docs with nothing duplicated
-    pass through unchanged.
-    """
-    # lazy checkpoint: materializes (once) at the FIRST action, not at
-    # plan-construction time — explain must stay free. The
-    # blocks live until the RDD is GC'd (localCheckpoint has no
-    # explicit release); at cluster scale this is a checkpoint table.
-    toks = df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"), _tokens(F.col(text_col)).alias("_toks")
-    ).localCheckpoint(eager=False)
-    spans = duplicate_spans(df, id_col, text_col, window, toks=toks)
-    return _excise_spans(toks, spans, broadcast_spans)
 
 
 def _excise_spans(toks: DataFrame, spans: DataFrame, broadcast_spans: bool = True) -> DataFrame:
@@ -681,19 +433,22 @@ def contamination_spans(
 ) -> DataFrame:
     """(doc_id, span_start, span_end, n_windows) — the span-granular
     half of benchmark decontamination: maximal merged token spans of a
-    corpus document whose ``n``-token windows appear in the eval set
-    (same frozen window/tokenizer spec as :func:`contamination`, same
-    island-merge as :func:`duplicate_spans`). Where the doc-level flag
-    answers "drop it?", this answers "what exactly leaked" — the form
-    GPT-3-style decontamination actually removes (cut the overlapping
-    region, keep the doc).
+    corpus document whose ``n``-token windows appear in the eval set.
+    Frozen spec: windows are ``n`` consecutive engine-tokenizer tokens
+    (stopwords kept), space-joined, md5-hashed (:func:`window_expr`);
+    the eval side contributes its DISTINCT window hashes; hit window
+    positions merge into maximal spans. This answers "what exactly
+    leaked" — the form GPT-3-style decontamination removes (cut the
+    overlapping region, keep the doc).
 
-    Scale shape identical to :func:`contamination`: broadcast eval-gram
-    probe (corpus never shuffles for the join) + the tiny hit set
-    through one per-doc window merge.
+    Scale shape: the eval-gram table is benchmark-sized, so the probe
+    is a broadcast semi-join (the corpus never shuffles for it); only
+    the tiny hit set goes through the per-doc window merge.
 
     A caller-built ``toks`` (doc_id, _toks) must come through
-    :func:`tokens_once` or a checkpoint, as for :func:`duplicate_spans`.
+    :func:`tokens_once` or a checkpoint: a plain tokenizer projection
+    is inlined into the window lambda and re-tokenizes once per window
+    element.
     """
     if toks is None:
         toks = df.select(F.col(id_col).cast("bigint").alias("doc_id"), tokens_once(F.col(text_col)).alias("_toks"))
@@ -729,10 +484,11 @@ def strip_contaminated_spans(
 ) -> DataFrame:
     """(doc_id, clean_text, n_tokens_kept, n_tokens_dropped) — cut the
     eval-overlapping spans out of each corpus document and rejoin the
-    survivors (same frozen excision spec as
-    :func:`strip_duplicate_spans`: clean_text is the space-joined
-    surviving token stream). The decontamination *transform*: docs
-    keep their non-leaked content instead of being dropped.
+    survivors. Frozen spec: clean_text is the space-joined surviving
+    engine-tokenizer token stream (not byte-spliced original text);
+    a token is dropped iff its index falls inside any span. The
+    decontamination *transform*: docs keep their non-leaked content
+    instead of being dropped.
 
     Pass precomputed ``toks`` (materialized (doc_id, _toks)) and/or
     ``spans`` (contamination_spans output) to share the tokenize +
@@ -745,176 +501,6 @@ def strip_contaminated_spans(
     if spans is None:
         spans = contamination_spans(df, eval_df, id_col, text_col, eval_text_col, n, toks=toks)
     return _excise_spans(toks, spans, broadcast_spans)
-
-
-def contamination(
-    df: DataFrame,
-    eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_text_col: str | None = None,
-    n: int = 13,
-    min_hit_windows: int = 1,
-    broadcast_eval: bool = True,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, n_windows, n_hit_windows, n_hit_grams, contaminated INT)
-    — benchmark decontamination (GPT-3 appendix-C style, Brown et al.
-    2020; also Llama/PaLM): flag training documents that contain any
-    ``n``-token window also present in an evaluation set, so they can
-    be dropped (or span-stripped) before training.
-
-    Frozen spec: windows are ``n`` consecutive engine-tokenizer tokens
-    (stopwords kept), space-joined, md5-hashed; the eval side
-    contributes its DISTINCT window hashes; a corpus doc's
-    ``n_hit_windows`` counts its window *positions* whose hash is in
-    the eval set, ``n_hit_grams`` the distinct hashes hit;
-    ``contaminated = 1`` iff ``n_hit_windows ≥ min_hit_windows``.
-    Docs with < n tokens have 0 windows and are never contaminated.
-
-    Scale shape: the eval-gram table is benchmark-sized (10⁵–10⁷
-    hashes — tiny next to a 100 TB corpus), so the probe is a
-    **broadcast** semi-ish join: corpus window hashing is a pure
-    codegen'd projection + explode, the hit counting a partial/final
-    aggregate on doc_id — the corpus text itself never shuffles at
-    all. Pass ``broadcast_eval=False`` only if the "eval" side is
-    corpus-scale (then it is a (hash, id) shuffle, the
-    duplicate_spans profile).
-
-    Pass a materialized ``toks`` ((doc_id, _toks)) to share the
-    tokenize pass with sibling consumers; the default lazily
-    checkpoints its own so the window explode and the n_windows base
-    tokenize the corpus ONCE, not twice.
-    """
-    if toks is None:
-        toks = df.select(
-            F.col(id_col).cast("bigint").alias("doc_id"), _tokens(F.col(text_col)).alias("_toks")
-        ).localCheckpoint(eager=False)
-    ev = _eval_grams(eval_df, eval_text_col or text_col, n, broadcast_eval)
-    cw = toks.select("doc_id", F.explode(F.expr(window_expr(n))).alias("w")).select(
-        "doc_id", F.md5(F.col("w").cast("binary")).alias("h")
-    )
-    hits = (
-        cw.join(ev, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_hit_windows"),
-            F.count_distinct("h").cast("bigint").alias("n_hit_grams"),
-        )
-    )
-    base = toks.select(
-        "doc_id",
-        F.greatest(F.size("_toks") - (n - 1), F.lit(0)).cast("bigint").alias("n_windows"),
-    )
-    out = base.join(hits, "doc_id", "left")
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("bigint")  # noqa: E731
-    return out.select(
-        "doc_id",
-        "n_windows",
-        z("n_hit_windows").alias("n_hit_windows"),
-        z("n_hit_grams").alias("n_hit_grams"),
-        (z("n_hit_windows") >= min_hit_windows).cast("int").alias("contaminated"),
-    )
-
-
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash) — 16-bit SimHash over the token multiset.
-
-    Token hash = first 4 hex digits of md5 (16 bits); bit b of the
-    fingerprint is set iff sum over tokens of ±1 (by token bit b) > 0.
-    """
-    toks = df.select(F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("tok"))
-    h = toks.withColumn("h16", F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 4), 16, 10).cast("int"))
-    aggs = [
-        F.sum(F.when(F.shiftright(F.col("h16"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{b}")
-        for b in range(16)
-    ]
-    sums = h.groupBy(id_col).agg(*aggs)
-    fp = None
-    for b in range(16):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        fp = bit if fp is None else fp + bit
-    return sums.select(F.col(id_col).cast("bigint"), fp.cast("bigint").alias("simhash"))
-
-
-def simhash_hamming_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bands: int | None = None,
-) -> DataFrame:
-    """(id_a, id_b, hamming) — document pairs whose SimHash
-    fingerprints differ in at most ``max_hamming`` bits: the retrieval
-    step SimHash exists for (Manku et al. WWW'07 near-dup detection).
-
-    Scale shape: pigeonhole banding. Split the 16-bit fingerprint into
-    ``bands`` (default ``max_hamming + 1``) contiguous bit bands — any
-    pair within the radius agrees EXACTLY on at least one band, so
-    candidates come from equi-self-joins on (band_id, band_bits)
-    (hash join; never an all-pairs cross join), then the exact
-    ``bit_count(xor)`` verify prunes false candidates. Candidate
-    volume is governed by band width (16/bands bits); at larger
-    fingerprints widen the type, not the algorithm. Identical-
-    fingerprint clusters collide on every band — the ``distinct``
-    dedups the pair, and upstream exact-dedup keeps such clusters
-    small.
-    """
-    if bands is None:
-        # smallest divisor of 16 that is >= max_hamming + 1 — the
-        # literal max_hamming + 1 (e.g. 3, 5, 6) need not divide 16,
-        # and the pigeonhole guarantee only needs >=
-        b = next((d for d in (1, 2, 4, 8, 16) if d >= max_hamming + 1), None)
-        if b is None:
-            raise ValueError("max_hamming must be < 16 for a 16-bit fingerprint")
-    else:
-        b = bands
-    if b < max_hamming + 1:
-        raise ValueError("bands must be >= max_hamming + 1 for recall=1")
-    if 16 % b != 0:
-        raise ValueError("bands must divide the 16-bit fingerprint")
-    width = 16 // b
-    s = simhash(df, id_col, text_col)
-    banded = s.select(
-        F.col(id_col).alias("doc_id"),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("simhash", i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bits"),
-                    )
-                    for i in range(b)
-                ]
-            )
-        ).alias("p"),
-    ).select("doc_id", "simhash", F.col("p.band").alias("band"), F.col("p.bits").alias("bits"))
-    a, c = banded.alias("a"), banded.alias("c")
-    cand = (
-        a.join(
-            c,
-            (F.col("a.band") == F.col("c.band"))
-            & (F.col("a.bits") == F.col("c.bits"))
-            & (F.col("a.doc_id") < F.col("c.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("c.doc_id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("c.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("bigint")
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 def bloom_digest(keys: DataFrame, key_col: str = "key", n_bits: int = 1 << 20, n_hashes: int = 4) -> DataFrame:
@@ -1031,72 +617,4 @@ def dedup_against_history(
         id_col,
         "key",
         (1 - F.coalesce("_seen", F.lit(0))).cast("int").alias("keep"),
-    )
-
-
-def winnowing_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
-) -> DataFrame:
-    """(doc_id, fp_hash BIGINT, fp_pos INT) — winnowing fingerprint
-    selection (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the MOSS
-    algorithm): hash every k-token window, then keep the minimum hash
-    of each run of ``w`` consecutive window hashes. Guarantee: any
-    token run of length ≥ w+k-1 shared by two documents contributes
-    at least one IDENTICAL selected fingerprint to both — the local
-    dedup/plagiarism primitive MinHash (global similarity) and
-    duplicate_spans (exact full-window index) don't give. Expected
-    density 2/(w+1) of the gram count.
-
-    Relational formulation (one shuffle, on ``id_col``):
-    - gram positions explode from the frozen window expression
-      (window_expr; md5 AFTER the explode per the plan rules);
-    - the 40-bit md5 lane packs the gram position into the low 20
-      bits (``h·2²⁰ + pos``) so the running MIN is over a TOTAL order
-      — the leftmost-lowest tie-break is deterministic with no
-      arg_min/struct-min (whose tie behavior is engine-specific).
-      Docs are capped at 2²⁰ grams (longer docs: chunk first —
-      textstats.chunk_windows);
-    - min over ROWS BETWEEN CURRENT AND w-1 FOLLOWING per doc, window
-      starts clipped to full width, DISTINCT selections.
-
-    Docs with fewer than w+k-1 tokens select nothing (no full window
-    of windows exists) — consistent with the guarantee's floor.
-    """
-    from pyspark.sql import Window
-
-    sh = with_shingles(df.select(F.col(id_col), F.col(text_col)), text_col, k)
-    grams = sh.select(
-        F.col(id_col).cast("bigint").alias(id_col),
-        F.posexplode("shingles").alias("pos", "gram"),
-    ).where(F.col("pos") < 1 << 20)
-    hashed = grams.select(
-        id_col,
-        "pos",
-        (
-            F.conv(F.substring(F.md5(F.col("gram").cast("binary")), 1, 10), 16, 10).cast("bigint")
-            * F.lit(1 << 20)
-            + F.col("pos")
-        ).alias("hp"),
-    )
-    run = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
-    full = Window.partitionBy(id_col)
-    sel = hashed.select(
-        F.col(id_col),
-        "pos",
-        F.min("hp").over(run).alias("sel"),
-        F.count(F.lit(1)).over(full).alias("_n"),
-    )
-    return (
-        sel.where(F.col("pos") <= F.col("_n") - w)
-        .select(id_col, "sel")
-        .distinct()
-        .select(
-            F.col(id_col),
-            F.floor(F.col("sel") / (1 << 20)).cast("bigint").alias("fp_hash"),
-            (F.col("sel") % (1 << 20)).cast("int").alias("fp_pos"),
-        )
     )

@@ -276,7 +276,8 @@ def disambiguate_routed(
 ) -> DataFrame:
     """:func:`disambiguate` with ambiguity routing: surfaces whose top
     candidate owns ≥ ``top_share_threshold_mille``/1000 of the anchor
-    mass (the ``sf_ambiguity`` top-share profile) take the PRIOR-ONLY
+    mass (top share = max pair count × 1000 DIV the surface's total,
+    computed here from ``pair_counts``) take the PRIOR-ONLY
     fast path — no tokenization, no evidence join; only contested
     surfaces pay for context evidence. Same output schema plus a
     ``route`` column ('prior' | 'context').

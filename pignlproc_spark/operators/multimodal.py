@@ -993,8 +993,8 @@ def dhash_near_duplicates(
     media: DataFrame | None, max_hamming: int = 3, hashed: DataFrame | None = None
 ) -> DataFrame:
     """(url_a, url_b, hamming) — perceptual image near-dup pairs: the
-    pigeonhole-banding retrieval of dedup.simhash_hamming_pairs applied
-    to CCDHash keys. Four 16-bit bands (4 hex chars each); a pair with
+    pigeonhole-banding retrieval (Manku et al., WWW'07) applied to
+    CCDHash keys. Four 16-bit bands (4 hex chars each); a pair with
     hamming ≤ 3 < 4 bands must agree on SOME whole band (pigeonhole),
     so the band equi-join has perfect recall and the exact
     ``bit_count(xor)`` verify over the four bands keeps precision. Band

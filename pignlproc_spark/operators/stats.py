@@ -78,15 +78,6 @@ def sf_occurrence_totals(
     )
 
 
-def norm_sf_col(col):
-    """JVM-side surface-form normalization. CAUTION: matches
-    functions.ngrams.normalize_sf only for ASCII input (Java's \\w is
-    ASCII, Python's is Unicode + NFC) — the join in sf_total_counts
-    uses the exact pandas-UDF path instead; this stays for ASCII-clean
-    relational uses."""
-    return F.array_join(tokens_col(col, apply_stoplist=False), " ")
-
-
 def normalize_sf_udf():
     """Exact surface-form normalization (the Python spec) as a pandas
     UDF — used on the small post-aggregation side, so the Python cost
@@ -290,11 +281,7 @@ def aggregate_text_salted(
     return phase2
 
 
-def entity_cooccurrence(
-    mentions: DataFrame,
-    max_entities_per_page: int | None = None,
-    per_page: DataFrame | None = None,
-) -> DataFrame:
+def entity_cooccurrence(mentions: DataFrame, max_entities_per_page: int | None = None) -> DataFrame:
     """(uri_a, uri_b, cnt) — number of pages on which both entities are
     mentioned (uri_a < uri_b). The co-occurrence statistic downstream
     KG-embedding / entity-salience training consumes; beyond the
@@ -306,12 +293,8 @@ def entity_cooccurrence(
     pass ``max_entities_per_page`` (standard practice: drop list/index
     pages, which contribute noise, not signal) — the filter runs
     before the join fanout. Default None = exact (oracle mode).
-
-    Pass a precomputed ``per_page`` (distinct (url, uri)) to share the
-    scan/distinct with a caller that also needs it (related_entities).
     """
-    if per_page is None:
-        per_page = mentions.select("url", "uri").distinct()
+    per_page = mentions.select("url", "uri").distinct()
     if max_entities_per_page is not None:
         n = per_page.groupBy("url").agg(F.count(F.lit(1)).alias("_n"))
         per_page = per_page.join(
@@ -362,7 +345,21 @@ def entity_pagerank(
     """
     spark = mentions.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e, nodes = _cooc_graph(mentions, cooc, n_part)
+    if cooc is None:
+        # the quadratic self-join feeds the edge union (twice), the
+        # node count, and the weight build — compute it once
+        cooc = entity_cooccurrence(mentions).localCheckpoint(eager=False)
+    edges = cooc.select(
+        F.col("uri_a").alias("src"), F.col("uri_b").alias("dst"), F.col("cnt").alias("w")
+    ).union(cooc.select(F.col("uri_b").alias("src"), F.col("uri_a").alias("dst"), F.col("cnt").alias("w")))
+    out_w = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("wsum"))
+    e = (
+        edges.join(out_w, "src")
+        .select("src", "dst", F.col("w").cast("bigint").alias("w"), "wsum")
+        .repartition(n_part, "src")
+        .persist()
+    )
+    nodes = e.select(F.col("src").alias("uri")).distinct()
     shares = e.select("src", "dst", (F.col("w") / F.col("wsum")).alias("share"))
     n = nodes.count()
     if n == 0:
@@ -389,90 +386,7 @@ def entity_pagerank(
     return ranks
 
 
-def _cooc_graph(mentions: DataFrame, cooc: DataFrame | None, n_part: int):
-    """Shared PageRank prologue (float + fixed-point variants): the
-    symmetric weighted edge table with per-source weight sums
-    (src, dst, w, wsum), hash-partitioned on ``src`` ONCE and
-    persisted, plus the node set. The caller must ``unpersist()`` the
-    edge table after materializing its final result (see the
-    unpersist-ordering note at the tail of entity_pagerank)."""
-    if cooc is None:
-        # the quadratic self-join feeds the edge union (twice), the
-        # node count, and the weight build — compute it once
-        cooc = entity_cooccurrence(mentions).localCheckpoint(eager=False)
-    edges = cooc.select(
-        F.col("uri_a").alias("src"), F.col("uri_b").alias("dst"), F.col("cnt").alias("w")
-    ).union(cooc.select(F.col("uri_b").alias("src"), F.col("uri_a").alias("dst"), F.col("cnt").alias("w")))
-    out_w = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("wsum"))
-    e = (
-        edges.join(out_w, "src")
-        .select("src", "dst", F.col("w").cast("bigint").alias("w"), "wsum")
-        .repartition(n_part, "src")
-        .persist()
-    )
-    nodes = e.select(F.col("src").alias("uri")).distinct()
-    return e, nodes
-
-
 PAGERANK_SCALE = 10**9
-
-
-def entity_pagerank_q(
-    mentions: DataFrame,
-    iterations: int = 3,
-    num_partitions: int | None = None,
-    checkpoint_every: int = 4,
-    cooc: DataFrame | None = None,
-) -> DataFrame:
-    """(uri, rank_q) — :func:`entity_pagerank` in FIXED-POINT integer
-    arithmetic (scale 1e9, damping 0.85 as the exact ratio 85/100):
-    every per-edge contribution is floored to an integer BEFORE the
-    sum, so the whole 5-relation iteration is exact-BIGINT and the
-    DuckDB oracle (the same recurrence unrolled as a CTE chain)
-    hash-matches — the existence proof that even iterative graph
-    algorithms fit the oracle contract, not just one-pass relational
-    ops. The float variant remains the product scorer (no quantization
-    drift); this one is the auditable twin.
-
-    Recurrence (all integer ops)::
-
-        r⁰(v)   = SCALE div N
-        rᵏ⁺¹(v) = (SCALE·15) div (100·N)
-                  + Σ_{u→v} (rᵏ(u)·w(u,v)·85) div (100·W(u))
-
-    int64 headroom: needs ``rᵏ(u)·w·85 < 2⁶³`` — with ranks ≤ SCALE
-    (mass only leaks downward through the floors) that bounds the edge
-    weight at ~10⁸ shared pages, far beyond any real co-occurrence
-    count; lower ``PAGERANK_SCALE`` if a graph ever approaches it.
-
-    Scale shape: identical to the float variant — the edge table with
-    precomputed (w, wsum) is hash-partitioned on ``src`` once and
-    persisted; each iteration shuffles only the (uri, rank_q) table.
-    """
-    spark = mentions.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e, nodes = _cooc_graph(mentions, cooc, n_part)
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        return spark.createDataFrame([], "uri string, rank_q bigint")
-    ranks = nodes.select("uri", F.lit(PAGERANK_SCALE // n).cast("bigint").alias("rank_q"))
-    base_q = (PAGERANK_SCALE * 15) // (100 * n)
-    for it in range(iterations):
-        contribs = (
-            e.join(ranks.withColumnRenamed("uri", "src"), "src")
-            .select("dst", F.expr("(rank_q * w * 85) div (100 * wsum)").alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").cast("bigint").alias("acc"))
-        )
-        ranks = nodes.join(contribs.withColumnRenamed("dst", "uri"), "uri", "left").select(
-            "uri", (F.lit(base_q) + F.coalesce(F.col("acc"), F.lit(0))).cast("bigint").alias("rank_q")
-        )
-        if (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    ranks = ranks.localCheckpoint(eager=True)
-    e.unpersist()
-    return ranks
 
 
 HITS_SCALE = 10**6
@@ -514,7 +428,7 @@ def hits_q(
     FIXED-POINT integer arithmetic so the DuckDB oracle (the same
     recurrence unrolled as a MATERIALIZED-CTE chain,
     ``__spark_entry__._hits_q_sql``) hash-matches. The web twin of
-    :func:`entity_pagerank_q`: PageRank scores endorsement flow;
+    :func:`entity_pagerank`: PageRank scores endorsement flow;
     HITS separates "points at good pages" (hub — a directory/sitemap
     host) from "is pointed at by good hubs" (authority) — the crawl
     seed-quality signal frontier schedulers weight by.
@@ -630,7 +544,7 @@ def trustrank_q(
     ranks hosts by when generic PageRank would launder link-farm mass.
     Fixed-point integers (scale 1e9, damping 85/100 exact), every
     per-edge contribution floored BEFORE the sum — the same exact-
-    BIGINT contract as :func:`entity_pagerank_q`, so the DuckDB oracle
+    BIGINT contract as :func:`hits_q`, so the DuckDB oracle
     (the recurrence unrolled as MATERIALIZED CTEs,
     ``__spark_entry__._trustrank_q_sql``) hash-matches.
 
@@ -641,7 +555,7 @@ def trustrank_q(
                   + Σ_{u→v} (rᵏ(u)·w(u,v)·85) div (100·W(u))
 
     Dangling mass leaks downward through the floors (ranks only ever
-    shrink relative to the ideal — same stance as entity_pagerank_q).
+    shrink relative to the ideal).
     int64 headroom: ranks ≤ SCALE, so edge weights are bounded at
     ~10⁸ — GUARDED: an over-bound weight raises ValueError with a
     rescale hint. Seeds not present in the edge set still rank (they
@@ -722,167 +636,6 @@ def trustrank_q(
     return ranks
 
 
-def entity_triangles(mentions: DataFrame, cooc: DataFrame | None = None) -> DataFrame:
-    """(uri, n_triangles) — per-entity triangle counts over the
-    co-occurrence graph: the local clustering signal KG-quality checks
-    use (an entity in many closed triads is a well-embedded hub; one
-    in none is likely noise). Beyond the reference (COVERAGE.md).
-
-    Scale shape: **degree-oriented** wedge counting (the standard
-    MapReduce triangle algorithm, Suri & Vassilvitskii WWW'11): each
-    undirected edge is oriented from its lower-(degree, uri) endpoint,
-    so every triangle is enumerated exactly once at its minimum-rank
-    pivot and the wedge fanout at hubs is bounded by their *in*-rank
-    neighbors — the self-join never explodes on a hub the way a naive
-    (uri_a < uri_b) pivot would. Joins carry only uri pairs.
-    """
-    e = (cooc if cooc is not None else entity_cooccurrence(mentions)).select("uri_a", "uri_b")
-    e = e.localCheckpoint(eager=False)  # degrees + wedge sides + closure probe
-    deg = (
-        e.select(F.col("uri_a").alias("uri"))
-        .unionAll(e.select(F.col("uri_b").alias("uri")))
-        .groupBy("uri")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    d = (
-        e.join(deg.select(F.col("uri").alias("uri_a"), F.col("deg").alias("_da")), "uri_a")
-        .join(deg.select(F.col("uri").alias("uri_b"), F.col("deg").alias("_db")), "uri_b")
-    )
-    a_first = (F.col("_da") < F.col("_db")) | (
-        (F.col("_da") == F.col("_db")) & (F.col("uri_a") < F.col("uri_b"))
-    )
-    o = d.select(
-        F.when(a_first, F.col("uri_a")).otherwise(F.col("uri_b")).alias("src"),
-        F.when(a_first, F.col("uri_b")).otherwise(F.col("uri_a")).alias("dst"),
-    )
-    wedges = (
-        o.select("src", F.col("dst").alias("d1"))
-        .join(o.select("src", F.col("dst").alias("d2")), "src")
-        .where(F.col("d1") < F.col("d2"))
-    )
-    # close the wedge: the (d1, d2) edge is stored lexicographically
-    tris = wedges.join(e, (F.col("d1") == F.col("uri_a")) & (F.col("d2") == F.col("uri_b")), "left_semi")
-    return (
-        tris.select(F.explode(F.array("src", "d1", "d2")).alias("uri"))
-        .groupBy("uri")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
-    )
-
-
-def related_entities(mentions: DataFrame, k: int = 5, cooc: DataFrame | None = None) -> DataFrame:
-    """(uri, related_uri, cnt_xy, cnt_x, cnt_y, rank) — top-``k``
-    most-related entities per entity, ranked by the PMI-ordering score
-    cnt_xy / (cnt_x·cnt_y) (log and the constant corpus size N drop
-    out of the ordering). The "see also" / KG-embedding-negative-
-    sampling statistic downstream consumers derive from co-occurrence.
-    Beyond the reference (COVERAGE.md).
-
-    Oracle-safe determinism: every emitted column is an exact integer;
-    the ranking divides exact ints (IEEE division is correctly rounded,
-    so Spark and DuckDB order identically — CLAUDE.md rule) with a
-    (score DESC, related_uri ASC) tie-break.
-
-    Scale shape: symmetrized co-occurrence + two dim joins on uri, then
-    one per-uri top-k window — the window shuffle carries only id/count
-    columns, and skew is the per-entity neighbor count already bounded
-    upstream by entity_cooccurrence's ``max_entities_per_page``.
-    """
-    from pyspark.sql import Window as W
-
-    per_page = mentions.select("url", "uri").distinct().localCheckpoint(eager=False)
-    cx = per_page.groupBy("uri").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    # share the scan + distinct with the co-occurrence self-join
-    c = cooc if cooc is not None else entity_cooccurrence(mentions, per_page=per_page)
-    sym = c.select(F.col("uri_a").alias("uri"), F.col("uri_b").alias("related_uri"), F.col("cnt").alias("cnt_xy")).unionByName(
-        c.select(F.col("uri_b").alias("uri"), F.col("uri_a").alias("related_uri"), F.col("cnt").alias("cnt_xy"))
-    )
-    j = (
-        sym.join(cx.select(F.col("uri"), F.col("cnt").alias("cnt_x")), "uri")
-        .join(cx.select(F.col("uri").alias("related_uri"), F.col("cnt").alias("cnt_y")), "related_uri")
-    )
-    score = F.col("cnt_xy") / (F.col("cnt_x") * F.col("cnt_y"))
-    w = W.partitionBy("uri").orderBy(score.desc(), F.col("related_uri").asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("uri", "related_uri", F.col("cnt_xy").cast("bigint"), "cnt_x", "cnt_y", F.col("rank").cast("int"))
-    )
-
-
-def kcore_members(
-    mentions: DataFrame,
-    k: int = 3,
-    cooc: DataFrame | None = None,
-    max_rounds: int = 32,
-) -> DataFrame:
-    """(uri, deg_in_core) — the entities in the ``k``-core of the
-    co-occurrence graph (the maximal subgraph where every node keeps
-    degree ≥ k), with each survivor's degree inside that core. The
-    standard graph-density filter for KG quality: hubs and
-    well-connected entities survive; tendrils and noise peel away.
-    Beyond the reference (COVERAGE.md).
-
-    Algorithm: iterative peeling — drop nodes with degree < k, filter
-    edges to surviving endpoints, repeat to fixpoint. Each round is a
-    partial/final degree count plus two broadcast-eligible semi-joins
-    on the (strictly shrinking) survivor set — pure relational, no
-    collected neighborhoods, so hub nodes stay as rows. Rounds are
-    bounded by the longest peel chain (graph-diameter-ish, small for
-    web-like graphs); each round ``localCheckpoint``s the shrinking
-    edge set so lineage stays flat, as in
-    :func:`dedup.connected_components`, and the fixpoint check reads a
-    driver-side count.
-
-    Deterministic: the k-core is a unique subgraph (order-independent
-    peeling), so output is exactly reproducible — pytest verifies
-    against a brute-force Python peel, and the driver oracle unrolls
-    the peel as chained materialized CTE rounds (peeling is idempotent
-    at the fixpoint, so unrolling more rounds than the graph needs is
-    exact; `kg_entity_kcore` is hash-exact vs DuckDB).
-    """
-    e = (cooc if cooc is not None else entity_cooccurrence(mentions)).select("uri_a", "uri_b")
-    e = e.localCheckpoint(eager=True)
-    n_edges = e.count()
-    converged = n_edges == 0
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            converged = True
-            break
-        deg = (
-            e.select(F.col("uri_a").alias("uri"))
-            .unionAll(e.select(F.col("uri_b").alias("uri")))
-            .groupBy("uri")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = deg.where(F.col("deg") >= k).select("uri")
-        e2 = (
-            e.join(keep.select(F.col("uri").alias("uri_a")), "uri_a", "left_semi")
-            .join(keep.select(F.col("uri").alias("uri_b")), "uri_b", "left_semi")
-            .select("uri_a", "uri_b")
-            .localCheckpoint(eager=True)
-        )
-        n2 = e2.count()
-        if n2 == n_edges:
-            converged = True
-            break
-        e, n_edges = e2, n2
-    if not converged:
-        # a silent partial peel would return non-core nodes as if they
-        # were the exact k-core — fail loudly instead (long peel
-        # chains, e.g. paths, need rounds ~ chain length)
-        raise RuntimeError(
-            f"k-core peel did not converge in {max_rounds} rounds "
-            f"({n_edges} edges left); raise max_rounds"
-        )
-    return (
-        e.select(F.col("uri_a").alias("uri"))
-        .unionAll(e.select(F.col("uri_b").alias("uri")))
-        .groupBy("uri")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("deg_in_core"))
-        .where(F.col("deg_in_core") >= k)
-    )
-
-
 RA_SCALE = 10**6  # resource-allocation quantization (1/deg → SCALE DIV deg)
 
 
@@ -906,7 +659,7 @@ def link_prediction(
     (COVERAGE.md).
 
     Scale shape: one wedge self-join through the common neighbor z —
-    the same (z, u)×(z, v) enumeration entity_triangles uses — with
+    a (z, u)×(z, v) wedge enumeration — with
     deg(z) attached BEFORE the fanout so the score is a map-side
     column, then a partial/final (u, v) aggregate, an anti-join that
     drops existing edges, and a per-uri top-k window carrying only
@@ -961,239 +714,6 @@ def link_prediction(
     )
 
 
-def sf_ambiguity(
-    pair_counts: DataFrame, sf_col: str = "surface_form", cnt_col: str = "cnt"
-) -> DataFrame:
-    """(surface_form, n_targets, total_cnt, top_cnt, top_share_mille,
-    gini_mille) — the per-surface-form ambiguity profile over the
-    (surface_form, uri, cnt) anchor table: how many targets a mention
-    string can resolve to, how dominant the top target is
-    (top_share_mille = 1000·max DIV Σ — the accuracy a prior-only
-    disambiguator achieves on that surface), and the Gini impurity of
-    the target distribution ×1000 (gini = 1 − Σcntᵢ²/total²). The
-    difficulty map an entity-linking pipeline uses to route surfaces:
-    near-0 gini → prior lookup suffices; high gini → spend context
-    evidence. All exact integers (impurity via exact DIV, DECIMAL(38)
-    intermediates so Σcnt² cannot overflow-throw at web-scale anchor
-    totals). Beyond the reference (COVERAGE.md).
-
-    Scale shape: ONE map-side-combined aggregate keyed on the surface
-    form — the same shuffle sf_total_counts already pays — emitting
-    counts, max, and the decimal square-sum together; no joins, no
-    second pass.
-    """
-    c = F.col(cnt_col).cast("bigint")
-    agg = pair_counts.groupBy(F.col(sf_col).alias("surface_form")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_targets"),
-        F.sum(c).cast("decimal(38,0)").alias("_total"),
-        F.max(c).cast("bigint").alias("top_cnt"),
-        F.sum(c.cast("decimal(38,0)") * c).cast("decimal(38,0)").alias("_sumsq"),
-    )
-    return agg.select(
-        "surface_form",
-        "n_targets",
-        F.col("_total").cast("bigint").alias("total_cnt"),
-        "top_cnt",
-        F.expr("CAST((top_cnt * 1000) DIV _total AS BIGINT)").alias("top_share_mille"),
-        F.expr(
-            "CAST(((_total * _total - _sumsq) * 1000) DIV (_total * _total) AS BIGINT)"
-        ).alias("gini_mille"),
-    )
-
-
-def link_reciprocity(
-    edges: DataFrame, src: str = "src_host", dst: str = "dst_host"
-) -> DataFrame:
-    """(host, n_out, n_in, n_reciprocal, reciprocity_mille) — per-node
-    reciprocity over a directed (src, dst) edge set: how many of a
-    host's distinct out-neighbors link back. High reciprocity across a
-    cluster of hosts is the classic link-exchange / link-farm spam
-    signature (TrustRank's complement: structural, not seed-based);
-    near-zero reciprocity marks pure content sinks. All exact ints;
-    reciprocity_mille = 1000·n_reciprocal DIV max(n_out, 1).
-
-    Scale shape: edges dedup once (the same (src, dst) partial/final
-    any edge consumer pays), the reciprocal probe is a LEFT SEMI
-    self-join on the flipped key — no fanout, candidates ≤ edges —
-    and the three per-host counts are map-side-combined aggregates
-    joined on the host dimension.
-    """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=False)  # out/in counts + both semi-join sides
-    )
-    rec = e.join(
-        e.select(F.col("d").alias("s"), F.col("s").alias("d")), ["s", "d"], "left_semi"
-    )
-    outc = e.groupBy(F.col("s").alias("host")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_out")
-    )
-    inc = e.groupBy(F.col("d").alias("host")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_in")
-    )
-    recc = rec.groupBy(F.col("s").alias("host")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_reciprocal")
-    )
-    return (
-        outc.join(inc, "host", "full")
-        .join(recc, "host", "left")
-        .select(
-            "host",
-            F.coalesce("n_out", F.lit(0)).cast("bigint").alias("n_out"),
-            F.coalesce("n_in", F.lit(0)).cast("bigint").alias("n_in"),
-            F.coalesce("n_reciprocal", F.lit(0)).cast("bigint").alias("n_reciprocal"),
-        )
-        .withColumn(
-            "reciprocity_mille",
-            F.expr("CAST(n_reciprocal * 1000 DIV greatest(n_out, 1) AS BIGINT)"),
-        )
-    )
-
-
-def degree_histogram(
-    edges: DataFrame, src: str = "uri_a", dst: str = "uri_b"
-) -> DataFrame:
-    """(deg, n_nodes) — the degree distribution of an undirected edge
-    set: for each observed degree value, how many nodes have it. THE
-    power-law diagnostic for a web/KG graph (a healthy crawl graph is
-    heavy-tailed; a flat or spiked distribution means template link
-    blocks or a link farm), and the count-of-counts dual of
-    :func:`textstats.count_of_counts` on the graph side.
-
-    Scale shape: two map-side-combined aggregates — per-node degree
-    (the data-scale shuffle), then the histogram over the node
-    dimension whose OUTPUT is tiny (distinct degree values are
-    O(thousands) even at web scale). Nothing else moves.
-    """
-    nodes = edges.select(F.col(src).alias("node")).unionAll(
-        edges.select(F.col(dst).alias("node"))
-    )
-    deg = nodes.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    return deg.groupBy("deg").agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-
-
-def entity_salience(mentions: DataFrame, texts: DataFrame) -> DataFrame:
-    """(url, uri, n_mentions, n_contexts, first_off, doc_len,
-    first_off_mille) — per-(document, entity) salience features, the
-    label/feature set entity-salience models train on (frequency,
-    context spread, and how early the entity first appears: lead
-    position is the single strongest salience signal in news/wiki
-    text): n_mentions = occurrence count, n_contexts = distinct
-    sentences mentioning, first_off = 1-based character offset of the
-    earliest surface form in the extracted text (min over the entity's
-    surfaces), first_off_mille = (first_off−1)·1000 DIV doc_len — a
-    scale-free per-mille position, exact integers end-to-end so the
-    DuckDB oracle hash-matches. A surface absent from the text (a
-    truncated text column, a mention stream from another pipeline)
-    contributes NO offset — first_off/first_off_mille are NULL when
-    none of the entity's surfaces occur verbatim, never a fake 0.
-    Beyond the reference (COVERAGE.md).
-
-    Scale shape: the text joins only the DISTINCT (url, uri,
-    surface_form) triples — per-page surface vocabulary, not the
-    mention stream — so the document body is never replicated per
-    occurrence; offsets then collapse to (url, uri) minima while the
-    counts aggregate runs on the mention stream with map-side combine.
-    The final join is (url, uri)-keyed, dimension-sized on both sides,
-    and co-partitioned with the counts aggregate's own shuffle.
-    """
-    m = mentions.select("url", "uri", "context", "surface_form")
-    t = texts.select("url", "text")
-    surf = m.select("url", "uri", "surface_form").distinct()
-    offs = (
-        surf.join(t, "url")
-        .select(
-            "url",
-            "uri",
-            # instr()=0 means "surface not verbatim in text" (truncated
-            # text column, foreign mention stream): NULL it out so it
-            # can never win the min as a fake lead position
-            F.expr("nullif(instr(text, surface_form), 0)").cast("bigint").alias("_off"),
-            F.length("text").cast("bigint").alias("_len"),
-        )
-        .groupBy("url", "uri")
-        .agg(F.min("_off").alias("first_off"), F.max("_len").alias("doc_len"))
-    )
-    counts = m.groupBy("url", "uri").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_mentions"),
-        F.count_distinct("context").cast("bigint").alias("n_contexts"),
-    )
-    return counts.join(offs, ["url", "uri"]).select(
-        "url",
-        "uri",
-        "n_mentions",
-        "n_contexts",
-        "first_off",
-        "doc_len",
-        F.expr("CAST((first_off - 1) * 1000 DIV greatest(doc_len, 1) AS BIGINT)").alias(
-            "first_off_mille"
-        ),
-    )
-
-
-def label_propagation(
-    mentions: DataFrame,
-    rounds: int = 4,
-    cooc: DataFrame | None = None,
-) -> DataFrame:
-    """(uri, community) — community detection on the co-occurrence
-    graph by synchronous label propagation (Raghavan et al. 2007), the
-    cheap communities pass a KG pipeline runs between cooccurrence and
-    PageRank: related-entity neighbourhoods without a modularity
-    solver. Beyond the reference (COVERAGE.md).
-
-    FROZEN semantics (LPA v1, shared verbatim with the driver oracle):
-    every vertex starts labelled with its own uri; each round, every
-    vertex simultaneously adopts the most frequent label among its
-    neighbours (each neighbouring VERTEX votes once — unweighted),
-    ties broken by the lexicographically smallest label; vertices with
-    no neighbours keep their label. Exactly ``rounds`` synchronous
-    rounds, NO convergence test — synchronous LPA can 2-cycle on
-    bipartite structures, so a fixed round count (not a fixpoint) is
-    what makes the result deterministic and lets the oracle unroll the
-    identical rounds as chained materialized CTEs (hash-exact,
-    `kg_label_propagation`).
-
-    Scale shape: the bidirected edge list is checkpointed once; each
-    round is one join keyed on the neighbour column, a partial/final
-    (vertex, label) count, and a per-vertex top-1 window — label state
-    is two narrow string columns, never an adjacency list, so hub
-    vertices stay as rows. Per-round lineage is truncated
-    (localCheckpoint) exactly like the k-core peel.
-    """
-    from pyspark.sql import Window
-
-    if rounds < 0:
-        raise ValueError("rounds must be >= 0")
-    e = (cooc if cooc is not None else entity_cooccurrence(mentions)).select("uri_a", "uri_b")
-    edges = (
-        e.select(F.col("uri_a").alias("v"), F.col("uri_b").alias("u"))
-        .unionAll(e.select(F.col("uri_b").alias("v"), F.col("uri_a").alias("u")))
-        .localCheckpoint(eager=True)
-    )
-    labels = mentions.select("uri").distinct().select("uri", F.col("uri").alias("lbl"))
-    for _ in range(rounds):
-        votes = (
-            edges.join(labels.select(F.col("uri").alias("u"), "lbl"), "u")
-            .groupBy("v", "lbl")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        w = Window.partitionBy("v").orderBy(F.col("cnt").desc(), F.col("lbl").asc())
-        new = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(F.col("v").alias("uri"), F.col("lbl").alias("new_lbl"))
-        )
-        labels = (
-            labels.join(new, "uri", "left")
-            .select("uri", F.coalesce("new_lbl", "lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-    return labels.select("uri", F.col("lbl").alias("community"))
-
-
 def nerd_stats(mentions: DataFrame) -> DataFrame:
     """Per-(surface_form, uri) link stats with per-URI totals, ordered —
     the raw P(uri|sf) statistics of examples/nerd-stats/nerd_stats.pig
@@ -1206,56 +726,3 @@ def nerd_stats(mentions: DataFrame) -> DataFrame:
         .select("surface_form", "uri", "cnt", "sf_total")
         .orderBy(F.desc("cnt"), "surface_form", "uri")
     )
-
-def hop_distances(
-    mentions: DataFrame,
-    seed_uri: str | None = None,
-    max_hops: int = 6,
-    cooc: DataFrame | None = None,
-) -> DataFrame:
-    """(uri, dist) — minimum hop distance from ``seed_uri`` over the
-    co-occurrence graph, capped at ``max_hops`` (unreached entities are
-    absent). The neighborhood/reachability probe KG-quality work runs
-    around a hub ("what is within k hops of X"); with the cap it is
-    exactly SQL-expressible (depth-bounded recursive CTE + min), so
-    the driver check is oracle-exact despite the iteration.
-
-    ``seed_uri=None`` picks the lexicographically smallest endpoint —
-    a deterministic, data-derived seed for reproducible checks.
-
-    Scale shape: frontier BFS — each hop is one equi-join of the
-    (shrinking-then-stabilizing) frontier against the edge list plus
-    an anti-join against the visited set; both carry only (uri, dist)
-    pairs. The frontier is ``localCheckpoint``ed per hop (flat
-    lineage, like the peel/fixpoint siblings); hop count bounds the
-    rounds, so no convergence test is needed.
-    """
-    c = (cooc if cooc is not None else entity_cooccurrence(mentions)).select("uri_a", "uri_b")
-    e = (
-        c.select(F.col("uri_a").alias("uri"), F.col("uri_b").alias("nbr"))
-        .unionAll(c.select(F.col("uri_b").alias("uri"), F.col("uri_a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
-    if seed_uri is None:
-        row = e.agg(F.min("uri")).collect()[0][0]
-        if row is None:
-            return e.sparkSession.createDataFrame([], "uri string, dist bigint")
-        seed_uri = row
-    spark = e.sparkSession
-    dist = spark.createDataFrame([(seed_uri, 0)], "uri string, dist bigint").localCheckpoint(eager=True)
-    frontier = dist.select("uri")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, "uri")
-            .select(F.col("nbr").alias("uri"))
-            .distinct()
-            .join(dist.select("uri"), "uri", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(
-            nxt.select("uri", F.lit(h).cast("bigint").alias("dist"))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    return dist

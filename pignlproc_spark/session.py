@@ -106,9 +106,3 @@ def codegen_compiles(spark: SparkSession) -> int:
     """Classes Janino has compiled in this driver JVM so far (cache
     misses of the generated-code cache; hits are not counted)."""
     return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
-
-
-def stop_session() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

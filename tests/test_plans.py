@@ -129,7 +129,7 @@ def test_strip_spans_anti_join_is_broadcast(spark):
     docs = spark.createDataFrame(
         [(i, "tok%d " % (i % 3) * 20) for i in range(20)], "doc_id long, text string"
     )
-    p = plan_of(dedup.strip_duplicate_spans(docs, window=5))
+    p = plan_of(dedup.strip_contaminated_spans(docs, docs.limit(2), n=5))
     # the LeftAnti itself must be the broadcast join — any shuffled
     # variant (sort-merge OR shuffled-hash) is the fact-side regression
     assert "BroadcastHashJoin LeftAnti" in p
@@ -151,8 +151,6 @@ def test_window_operators_tokenize_once(spark):
     docs = spark.createDataFrame([(1, "a b c a b d e")], "doc_id long, text string")
     for n_branches, build in (
         (1, lambda: dedup.minhash_signatures(docs)),
-        (1, lambda: dedup.winnowing_fingerprints(docs)),
-        (2, lambda: dedup.duplicate_spans(docs, window=3)),
         (2, lambda: dedup.contamination_spans(docs, docs.limit(1), n=3)),
         (3, lambda: textstats.repetition_signals(docs)),
         (3, lambda: textstats.novelty_score(docs)),
@@ -172,6 +170,10 @@ def test_window_operators_tokenize_once(spark):
         ]
         assert not inlined, inlined
         assert plan.count("regexp_extract_all") <= n_branches, plan
+    # the shingle array is a generator-bounded attribute too: the filter
+    # Spark infers from explode(shingles) must not re-inline the lambda
+    plan = dedup.minhash_signatures(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("transform(sequence") == 1, plan
 
 
 def test_repetition_signals_partial_final(spark):
@@ -219,10 +221,8 @@ def test_contamination_probe_is_broadcast_and_jvm_only(spark):
 
     corpus = spark.createDataFrame([(1, "a b c d e f g h i")], "doc_id long, text string")
     ev = spark.createDataFrame([(2, "a b c d e f g h")], "doc_id long, text string")
-    plan = plan_of(dedup.contamination(corpus, ev, n=8), mode="simple")
-    # the h-probe against the eval grams must be the broadcast join;
-    # the only sort-merge join allowed is the zero-fill outer join
-    # back to the corpus base (co-partitioned on doc_id)
+    plan = plan_of(dedup.contamination_spans(corpus, ev, n=8), mode="simple")
+    # the h-probe against the eval grams is the one broadcast join
     assert plan.count("BroadcastHashJoin") == 1
     assert "BroadcastHashJoin [h#" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -271,42 +271,6 @@ def test_pack_sequences_single_shuffle(spark):
     ex = re.search(r"Exchange hashpartitioning\(shard", plan)
     assert ex is not None
     assert "Window" in plan[: ex.start()]  # window consumes the one shuffle
-
-
-def test_cosine_triangles_related_are_jvm_only(spark):
-    # the new similarity/graph operators must stay whole-stage-codegen
-    # relational: no Python eval anywhere, partial/final aggregation
-    # for the postings/count rollups
-    from pignlproc_spark.operators import dedup
-
-    docs = spark.createDataFrame([(i, "a b c d %d" % (i % 3)) for i in range(12)], "doc_id long, text string")
-    plan = plan_of(dedup.tf_cosine_pairs(docs, min_cos_pct=50, guard_overflow=False), mode="simple")
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "partial_count" in plan or "partial" in plan
-
-    m = spark.createDataFrame([("u%d" % (i % 6), "uri%d" % (i % 4)) for i in range(24)], "url string, uri string")
-    for df in (
-        stats.entity_triangles(m),
-        stats.related_entities(m, k=3),
-        stats.link_prediction(m, k=3),
-    ):
-        p = plan_of(df, mode="simple")
-        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    # link_prediction's wedge fanout must be an equi-join on z
-    p = plan_of(stats.link_prediction(m, k=3))
-    assert "CartesianProduct" not in p and "NestedLoop" not in p
-
-
-def test_containment_join_is_equi_not_cartesian(spark):
-    # candidates must come from the posting equi-join on the shared
-    # token — a cartesian/NestedLoop product would melt at corpus scale
-    from pignlproc_spark.operators import dedup
-
-    docs = spark.createDataFrame([(i, "a b c d %d" % (i % 3)) for i in range(12)], "doc_id long, text string")
-    plan = plan_of(dedup.containment_pairs(docs, min_containment_pct=90))
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
-    assert "partial_count" in plan  # intersection size is a map-side-combined agg
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_rarity_score_one_scan_no_join(spark):
@@ -451,20 +415,6 @@ def test_classifier_round_broadcasts_weights_and_reuses_doc_layout(spark):
     assert "InMemoryTableScan" in rp
     assert "Exchange" not in head.replace("BroadcastExchange", "")
     feats.unpersist()
-
-
-def test_winnowing_single_exchange(spark):
-    """Winnowing costs ONE shuffle (the per-doc window); the distinct
-    must reuse that partitioning, and nothing drops to Python."""
-    from pignlproc_spark.operators.dedup import winnowing_fingerprints
-
-    df = spark.createDataFrame(
-        [(i, "alpha bravo charlie delta echo foxtrot golf hotel india") for i in range(10)],
-        "doc_id long, text string",
-    )
-    plan = winnowing_fingerprints(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
-    assert "EvalPython" not in plan
 
 
 def test_robots_filter_crawl_side_is_broadcast_probe(spark):

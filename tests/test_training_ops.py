@@ -1,5 +1,5 @@
-"""Training-data operators: dedup (exact / MinHash-LSH / SimHash /
-Jaccard), text stats, multimodal plumbing, graph write layout."""
+"""Training-data operators: dedup (MinHash-LSH / Jaccard / clustering /
+decontamination), text stats, multimodal plumbing, graph write layout."""
 
 import random
 
@@ -21,12 +21,6 @@ def docs(spark):
         (6, ""),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_duplicates(spark, docs):
-    groups = dedup.exact_duplicates(docs).collect()
-    dup = [g for g in groups if g.n_docs > 1]
-    assert len(dup) == 1 and dup[0].keep_id == 0 and dup[0].n_docs == 2
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
@@ -172,19 +166,6 @@ def test_jaccard_pairs_counts(spark, docs):
     assert exact and exact[0].inter_cnt == exact[0].union_cnt == 8
 
 
-def test_containment_pairs_superset(spark, docs):
-    # doc 4 = doc 0 plus one extra token: Jaccard 8/9 (< 100%) but
-    # containment 8/8 = 100% — the near-superset case the operator exists for
-    got = {(r.id_a, r.id_b): r for r in dedup.containment_pairs(docs, min_containment_pct=100).collect()}
-    assert set(got) == {(0, 1), (0, 4), (1, 4)}
-    r = got[(0, 4)]
-    assert (r.inter_cnt, r.size_a, r.size_b) == (8, 8, 9)
-    assert got[(0, 1)].inter_cnt == got[(0, 1)].size_a == got[(0, 1)].size_b == 8
-    # max_df drops high-df posting lists; every shared token here lives in
-    # >=2 docs, so max_df=1 leaves only unshared postings -> no candidates
-    assert dedup.containment_pairs(docs, min_containment_pct=1, max_df=1).count() == 0
-
-
 def test_rarity_score_exact(spark, docs):
     got = {r.doc_id: r for r in textstats.rarity_score(docs).collect()}
     assert 6 not in got  # empty tokenization -> no row (oracle parity)
@@ -242,17 +223,6 @@ def test_tfidf_topk_salient_terms(spark):
     import math
 
     assert top1[0].score_q == math.floor(1e6 * 2 * math.log(3 / 1))
-
-
-def test_simhash_similarity_property(spark, docs):
-    h = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
-    assert h[0] == h[1]  # identical text -> identical fingerprint
-
-    def hamming(a, b):
-        return bin(a ^ b).count("1")
-
-    assert hamming(h[0], h[2]) < hamming(h[0], h[3])
-    assert 0 <= h[0] < (1 << 16)
 
 
 def test_jsonl_shard_export_roundtrip(spark, tmp_path):
@@ -680,43 +650,6 @@ def test_write_graph_small_graph_one_file_per_pred(spark, tmp_path):
     assert spark.read.parquet(path).count() == 3000
 
 
-def test_duplicate_spans(spark):
-    shared = "one two three four five six seven eight nine ten"
-    rows = [
-        (0, "aaa bbb " + shared + " ccc"),
-        (1, "xxx " + shared + " yyy zzz"),
-        (2, "totally different content with many unique tokens here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in dedup.duplicate_spans(df, window=5).collect()}
-    # d0: shared occupies tokens 2..11 -> windows at pos 2..7
-    assert (got[0].span_start, got[0].span_end, got[0].n_windows) == (2, 11, 6)
-    # d1: shared occupies tokens 1..10 -> windows at pos 1..6
-    assert (got[1].span_start, got[1].span_end, got[1].n_windows) == (1, 10, 6)
-    assert 2 not in got
-    # doc shorter than the window never emits
-    tiny = spark.createDataFrame([(9, "a b c")], "doc_id long, text string")
-    assert dedup.duplicate_spans(tiny, window=5).count() == 0
-
-
-def test_duplicate_spans_island_merge(spark):
-    # two shared stretches separated by > window unique tokens -> two spans
-    s1 = "alpha beta gamma delta epsilon"
-    s2 = "zeta eta theta iota kappa"
-    filler = " ".join(f"u{i}" for i in range(8))
-    rows = [
-        (0, s1 + " " + filler + " " + s2),
-        (1, s1 + " completely other middle text here now " + s2),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    spans = [
-        (r.doc_id, r.span_start, r.span_end, r.n_windows)
-        for r in dedup.duplicate_spans(df, window=5).collect()
-    ]
-    d0 = sorted(s for s in spans if s[0] == 0)
-    assert d0 == [(0, 0, 4, 1), (0, 13, 17, 1)]
-
-
 def test_entity_cooccurrence(spark):
     from pignlproc_spark.operators import stats
 
@@ -771,24 +704,6 @@ def test_entity_pagerank(spark):
     assert got["A"] > got["B"] > 0
 
 
-def test_strip_duplicate_spans(spark):
-    shared = "one two three four five six seven eight nine ten"
-    rows = [
-        (0, "aaa bbb " + shared + " ccc"),
-        (1, "xxx " + shared + " yyy zzz"),
-        (2, "totally different content with many unique tokens here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in dedup.strip_duplicate_spans(df, window=5).collect()}
-    assert got[0].clean_text == "aaa bbb ccc"
-    assert (got[0].n_tokens_kept, got[0].n_tokens_dropped) == (3, 10)
-    assert got[1].clean_text == "xxx yyy zzz"
-    # untouched doc passes through verbatim (token-rejoined)
-    assert got[2].clean_text == rows[2][1]
-    assert got[2].n_tokens_dropped == 0
-    assert len(got) == 3
-
-
 def test_stratified_sample(spark):
     rows = [(i, "x y z", "en" if i % 2 == 0 else "de") for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
@@ -815,31 +730,6 @@ def test_global_token_stats(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.token: (r.doc_freq, r.total_cnt) for r in textstats.global_token_stats(df).collect()}
     assert got == {"a": (2, 3), "b": (1, 1), "c": (1, 1)}
-
-
-def test_contamination_counts(spark):
-    corpus = spark.createDataFrame(
-        [
-            (1, "one two three four five six seven eight tail moretail"),
-            # the eval window appears twice (positions 1 and 9)
-            (2, "x one two three four five six seven eight one two three four five six seven eight"),
-            (3, "totally unrelated content with plenty of words here indeed"),
-            (4, "tiny doc"),  # < n tokens: zero windows, never contaminated
-        ],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame(
-        [(100, "ZZZ one two three four five six seven eight qqq")], "doc_id long, text string"
-    )
-    out = {r.doc_id: r for r in dedup.contamination(corpus, ev, n=8).collect()}
-    assert len(out) == 4
-    assert (out[1].n_windows, out[1].n_hit_windows, out[1].n_hit_grams, out[1].contaminated) == (3, 1, 1, 1)
-    assert (out[2].n_hit_windows, out[2].n_hit_grams, out[2].contaminated) == (2, 1, 1)
-    assert (out[3].n_hit_windows, out[3].contaminated) == (0, 0)
-    assert (out[4].n_windows, out[4].contaminated) == (0, 0)
-    # threshold: require >= 2 hit windows -> only the double-hit doc flags
-    out2 = {r.doc_id: r.contaminated for r in dedup.contamination(corpus, ev, n=8, min_hit_windows=2).collect()}
-    assert out2 == {1: 0, 2: 1, 3: 0, 4: 0}
 
 
 def test_pack_sequences_matches_reference(spark):
@@ -903,132 +793,21 @@ def test_contamination_spans_and_strip(spark):
     assert (got[1].n_tokens_kept, got[1].n_tokens_dropped) == (4, 8)
     assert got[2].clean_text == corpus.collect()[1].text  # token-identical passthrough
     assert got[2].n_tokens_dropped == 0
-
-
-def test_tf_cosine_pairs(spark, docs):
-    # identical docs: dot == norm_a == norm_b -> cos exactly 1
-    rows = {(r.id_a, r.id_b): r for r in dedup.tf_cosine_pairs(docs, min_cos_pct=99).collect()}
-    assert (0, 1) in rows
-    r = rows[(0, 1)]
-    assert r.dot == r.norm_a == r.norm_b == 8  # 8 distinct tokens, tf=1 each
-    # tf weighting: repeated tokens raise the weight (multiset, not set)
-    rep = spark.createDataFrame(
-        [(10, "apple apple apple banana"), (11, "apple banana banana banana"), (12, "apple banana")],
+    # hit windows merge into maximal spans, a gap wider than the window
+    # splits them, and a doc shorter than the window never emits
+    s0 = "one two three four five six seven eight nine ten"
+    s1, s2 = "alpha beta gamma delta epsilon", "zeta eta theta iota kappa"
+    corpus = spark.createDataFrame(
+        [
+            (3, "aaa bbb " + s0 + " ccc"),
+            (4, s1 + " " + " ".join(f"u{i}" for i in range(8)) + " " + s2),
+            (5, "a b c"),
+        ],
         "doc_id long, text string",
     )
-    got = {(r.id_a, r.id_b): r for r in dedup.tf_cosine_pairs(rep, min_cos_pct=0).collect()}
-    # vectors (3,1) and (1,3): dot=6, norms 10,10 -> cos=0.6
-    assert got[(10, 11)].dot == 6 and got[(10, 11)].norm_a == got[(10, 11)].norm_b == 10
-    # (3,1)·(1,1)=4, norms 10,2 -> cos=4/sqrt(20)=0.894...
-    assert got[(10, 12)].dot == 4 and got[(10, 12)].norm_b == 2
-    # threshold filters: at 80% only the (10,12)/(11,12) pairs survive
-    hi = {(r.id_a, r.id_b) for r in dedup.tf_cosine_pairs(rep, min_cos_pct=80).collect()}
-    assert hi == {(10, 12), (11, 12)}
-    # max_df candidate pruning is a documented-recall subset, with
-    # dot/norms still computed over the FULL vectors
-    sub = {(r.id_a, r.id_b): r for r in dedup.tf_cosine_pairs(docs, min_cos_pct=99, max_df=3).collect()}
-    assert set(sub) <= set(rows)
-    for k, v in sub.items():
-        assert (v.dot, v.norm_a, v.norm_b) == (rows[k].dot, rows[k].norm_a, rows[k].norm_b)
-    # int64 overflow guard trips on degenerate token repetition — at
-    # EXECUTION time (construction is lazy; the guard is a raise_error
-    # branch folded into the norm column)
-    degen = spark.createDataFrame([(0, "x " * 6000), (1, "x y")], "doc_id long, text string")
-    lazy_plan = dedup.tf_cosine_pairs(degen)  # must NOT raise or run a job
-    with pytest.raises(Exception, match="overflows the int64 cosine test"):
-        lazy_plan.collect()
-
-
-def test_entity_triangles(spark):
-    import itertools
-    import random
-
-    from pignlproc_spark.operators import stats
-
-    # p1..p3 close the (A,B,C) triangle; C-D is a dangling edge
-    rows = [("p1", "A"), ("p1", "B"), ("p2", "A"), ("p2", "C"),
-            ("p3", "B"), ("p3", "C"), ("p4", "C"), ("p4", "D")]
-    m = spark.createDataFrame(rows, "url string, uri string")
-    got = {r.uri: r.n_triangles for r in stats.entity_triangles(m).collect()}
-    assert got == {"A": 1, "B": 1, "C": 1}
-
-    # brute-force parity on a random graph fed via the cooc override
-    rng = random.Random(7)
-    nodes = [f"n{i}" for i in range(9)]
-    edges = sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(18)})
-    cooc = spark.createDataFrame(
-        [(a, b, 1) for a, b in edges], "uri_a string, uri_b string, cnt long"
-    )
-    got = {r.uri: r.n_triangles for r in stats.entity_triangles(m, cooc=cooc).collect()}
-    es = set(edges)
-    want = {}
-    for t in itertools.combinations(nodes, 3):
-        if all(tuple(sorted(p)) in es for p in itertools.combinations(t, 2)):
-            for u in t:
-                want[u] = want.get(u, 0) + 1
-    assert got == want
-
-
-def test_related_entities(spark):
-    from pignlproc_spark.operators import stats
-
-    rows = [
-        ("p1", "A"), ("p1", "B"),
-        ("p2", "A"), ("p2", "B"),
-        ("p3", "A"), ("p3", "C"),
-        ("p4", "C"), ("p4", "B"),
-    ]
-    m = spark.createDataFrame(rows, "url string, uri string")
-    got = {(r.uri, r.rank): r for r in stats.related_entities(m, k=2).collect()}
-    # A: cnt_x=3; B co-occurs 2x (cnt_y=3) score 2/9; C 1x (cnt_y=2) score 1/6
-    a1 = got[("A", 1)]
-    assert (a1.related_uri, a1.cnt_xy, a1.cnt_x, a1.cnt_y) == ("B", 2, 3, 3)
-    assert got[("A", 2)].related_uri == "C"
-    # symmetric: B sees A at the same counts
-    b = {got[("B", i)].related_uri for i in (1, 2)}
-    assert b == {"A", "C"}
-    # k caps the per-entity fanout
-    assert all(r.rank <= 2 for r in got.values())
-
-
-def test_sf_ambiguity(spark):
-    from pignlproc_spark.operators import stats
-
-    pc = spark.createDataFrame(
-        [("jaguar", "u:Cat", 3), ("jaguar", "u:Car", 1), ("paris", "u:Paris", 5)],
-        "surface_form string, uri string, cnt long",
-    )
-    got = {r.surface_form: r for r in stats.sf_ambiguity(pc).collect()}
-    j = got["jaguar"]
-    assert (j.n_targets, j.total_cnt, j.top_cnt) == (2, 4, 3)
-    assert j.top_share_mille == 750
-    assert j.gini_mille == (16 - 10) * 1000 // 16  # 375
-    p = got["paris"]
-    assert (p.n_targets, p.top_share_mille, p.gini_mille) == (1, 1000, 0)
-
-
-def test_link_reciprocity_and_degree_histogram(spark):
-    from pignlproc_spark.operators import stats
-
-    e = spark.createDataFrame(
-        [("a", "b", 3), ("b", "a", 1), ("a", "c", 2), ("c", "d", 1),
-         ("a", "a", 9),  # self loop dropped
-         ("a", "b", 7)],  # duplicate edge deduped
-        "src_host string, dst_host string, n_links long",
-    )
-    got = {r.host: r for r in stats.link_reciprocity(e).collect()}
-    assert (got["a"].n_out, got["a"].n_in, got["a"].n_reciprocal) == (2, 1, 1)
-    assert got["a"].reciprocity_mille == 500
-    assert (got["b"].n_out, got["b"].n_reciprocal, got["b"].reciprocity_mille) == (1, 1, 1000)
-    assert (got["c"].n_out, got["c"].n_reciprocal) == (1, 0)
-    # pure sink: appears via the full join with n_out=0
-    assert (got["d"].n_out, got["d"].n_in, got["d"].reciprocity_mille) == (0, 1, 0)
-
-    und = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("c", "d")], "a string, b string"
-    )
-    hist = {r.deg: r.n_nodes for r in stats.degree_histogram(und, src="a", dst="b").collect()}
-    assert hist == {1: 2, 2: 2}
+    ev = spark.createDataFrame([(100, s0), (101, s1), (102, s2)], "doc_id long, text string")
+    spans = sorted(tuple(r) for r in dedup.contamination_spans(corpus, ev, n=5).collect())
+    assert spans == [(3, 2, 11, 6), (4, 0, 4, 1), (4, 13, 17, 1)]
 
 
 def test_link_prediction(spark):
@@ -1054,6 +833,11 @@ def test_link_prediction(spark):
     assert set(got) == {("A", 1), ("B", 1), ("D", 1), ("D", 2)}
     # hub exclusion: dropping C (deg 3) as intermediary removes every wedge
     assert stats.link_prediction(m, k=10, max_hub_deg=2).count() == 0
+    # relational end to end: no Python eval, and the wedge fanout is an
+    # equi-join on the common neighbor, never a cartesian product
+    plan = stats.link_prediction(m, k=10)._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan
+    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
 
 def test_link_prediction_hub_cap_recall_bound(spark):
@@ -1094,47 +878,6 @@ def test_link_prediction_hub_cap_recall_bound(spark):
     assert capped[("H", "W")] == exact[("H", "W")]
 
 
-def test_entity_salience(spark):
-    from pignlproc_spark.operators import stats
-
-    m = spark.createDataFrame(
-        [
-            ("u1", "A", "Alpha met Beta.", "Alpha"),
-            ("u1", "B", "Alpha met Beta.", "Beta"),
-            ("u1", "A", "Alpha won.", "Alpha"),
-            # non-ASCII prefix: offsets must count characters, not bytes
-            ("u2", "B", "héé Beta x", "Beta"),
-        ],
-        "url string, uri string, context string, surface_form string",
-    )
-    t = spark.createDataFrame(
-        [("u1", "Alpha met Beta. Alpha won."), ("u2", "héé Beta x")],
-        "url string, text string",
-    )
-    got = {(r.url, r.uri): r for r in stats.entity_salience(m, t).collect()}
-    a = got[("u1", "A")]
-    assert (a.n_mentions, a.n_contexts, a.first_off, a.doc_len, a.first_off_mille) == (
-        2, 2, 1, 26, 0,
-    )
-    b = got[("u1", "B")]
-    assert (b.n_mentions, b.n_contexts, b.first_off) == (1, 1, 11)
-    assert b.first_off_mille == (11 - 1) * 1000 // 26
-    u = got[("u2", "B")]
-    assert (u.first_off, u.doc_len, u.first_off_mille) == (5, 10, 400)
-    # a surface absent from the text contributes no offset: with one
-    # found + one missing surface the found one wins; with none found
-    # the position columns are NULL, never a fake 0/negative
-    m2 = spark.createDataFrame(
-        [("u3", "C", "s1", "Ghost"), ("u3", "C", "s1", "won"),
-         ("u4", "D", "s1", "Ghost")],
-        "url string, uri string, context string, surface_form string",
-    )
-    t2 = spark.createDataFrame([("u3", "it won"), ("u4", "it won")], "url string, text string")
-    g2 = {r.url: r for r in stats.entity_salience(m2, t2).collect()}
-    assert (g2["u3"].first_off, g2["u3"].first_off_mille) == (4, 500)
-    assert g2["u4"].first_off is None and g2["u4"].first_off_mille is None
-
-
 def test_positional_index(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta alpha gamma"), (2, "beta beta"), (3, "")],
@@ -1164,34 +907,6 @@ def test_collocations(spark):
     # ranking: higher cnt_xy/(cnt_x*cnt_y) first
     scores = [r.cnt_xy / (r.cnt_x * r.cnt_y) for r in rows]
     assert scores == sorted(scores, reverse=True)
-
-
-def test_simhash_hamming_pairs_vs_bruteforce(spark, docs):
-    # banding must find EXACTLY the brute-force pairs (recall 1 within
-    # the radius; the bit_count verify kills banding false positives)
-    extra = spark.createDataFrame(
-        [(10 + i, f"alpha beta gamma delta epsilon zeta eta word{i}") for i in range(8)],
-        "doc_id long, text string",
-    )
-    df = docs.unionByName(extra)
-    sh = {r.doc_id: r.simhash for r in dedup.simhash(df).collect()}
-    brute = {
-        (a, b, bin(sh[a] ^ sh[b]).count("1"))
-        for a in sh
-        for b in sh
-        if a < b and bin(sh[a] ^ sh[b]).count("1") <= 3
-    }
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.simhash_hamming_pairs(df, max_hamming=3).collect()
-    }
-    assert brute and got == brute
-    # exact duplicates collide on every band but emit one pair
-    assert (0, 1, 0) in got
-    with pytest.raises(ValueError):
-        dedup.simhash_hamming_pairs(df, max_hamming=3, bands=3)
-    with pytest.raises(ValueError):
-        dedup.simhash_hamming_pairs(df, max_hamming=4, bands=5)  # 5 ∤ 16
 
 
 def test_phrase_search(spark):
@@ -1283,127 +998,6 @@ def test_bm25_topk_matches_reference(spark):
         textstats.bm25_topk(df, [])
 
 
-def test_kcore_members(spark):
-    import random
-
-    from pignlproc_spark.operators import stats
-
-    # triangle + pendant: 2-core is exactly the triangle at degree 2
-    cooc = spark.createDataFrame(
-        [("A", "B", 1), ("A", "C", 1), ("B", "C", 1), ("C", "D", 1)],
-        "uri_a string, uri_b string, cnt long",
-    )
-    m = spark.createDataFrame([("p", "A")], "url string, uri string")  # unused with cooc
-    got = {r.uri: r.deg_in_core for r in stats.kcore_members(m, k=2, cooc=cooc).collect()}
-    assert got == {"A": 2, "B": 2, "C": 2}
-    # no 3-core exists in that graph
-    assert stats.kcore_members(m, k=3, cooc=cooc).count() == 0
-
-    # brute-force peel parity on random graphs
-    rng = random.Random(11)
-    for trial in range(3):
-        nodes = [f"n{i}" for i in range(12)]
-        edges = sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(26)})
-        adj = {}
-        for a, b in edges:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        k = 3
-        alive = set(adj)
-        while True:
-            drop = {u for u in alive if sum(v in alive for v in adj[u]) < k}
-            if not drop:
-                break
-            alive -= drop
-        want = {u: sum(v in alive for v in adj[u]) for u in alive}
-        c = spark.createDataFrame([(a, b, 1) for a, b in edges], "uri_a string, uri_b string, cnt long")
-        got = {r.uri: r.deg_in_core for r in stats.kcore_members(m, k=k, cooc=c).collect()}
-        assert got == want, (trial, got, want)
-
-
-def test_hop_distances(spark):
-    import random
-    from collections import deque
-
-    from pignlproc_spark.operators import stats
-
-    m = spark.createDataFrame([("p", "A")], "url string, uri string")  # unused with cooc
-    rng = random.Random(13)
-    nodes = [f"n{i}" for i in range(14)]
-    edges = sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(16)})
-    cooc = spark.createDataFrame([(a, b, 1) for a, b in edges], "uri_a string, uri_b string, cnt long")
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    seed = min(adj)
-    want, q = {seed: 0}, deque([seed])
-    while q:
-        u = q.popleft()
-        for v in adj[u]:
-            if v not in want:
-                want[v] = want[u] + 1
-                q.append(v)
-    cap = 3
-    got = {r.uri: r.dist for r in stats.hop_distances(m, max_hops=cap, cooc=cooc).collect()}
-    assert got == {u: d for u, d in want.items() if d <= cap}
-    # explicit seed + empty graph
-    g2 = {r.uri: r.dist for r in stats.hop_distances(m, seed_uri=seed, max_hops=99, cooc=cooc).collect()}
-    assert g2 == want
-    empty = spark.createDataFrame([], "uri_a string, uri_b string, cnt long")
-    assert stats.hop_distances(m, cooc=empty).count() == 0
-
-
-def test_label_propagation(spark):
-    import random
-    from collections import Counter
-
-    from pignlproc_spark.operators import stats
-
-    def brute(nodes, edges, rounds):
-        adj = {u: set() for u in nodes}
-        for a, b in edges:
-            adj[a].add(b)
-            adj[b].add(a)
-        lbl = {u: u for u in nodes}
-        for _ in range(rounds):
-            new = {}
-            for u in nodes:
-                if not adj[u]:
-                    new[u] = lbl[u]
-                    continue
-                cnt = Counter(lbl[v] for v in adj[u])
-                best = max(cnt.values())
-                new[u] = min(l for l, c in cnt.items() if c == best)
-            lbl = new
-        return lbl
-
-    # two disconnected triangles + an isolated vertex: each triangle
-    # converges to its min label; the isolate keeps its own
-    edges = [("A", "B"), ("A", "C"), ("B", "C"), ("D", "E"), ("D", "F"), ("E", "F")]
-    nodes = ["A", "B", "C", "D", "E", "F", "Z"]
-    m = spark.createDataFrame([("p", n) for n in nodes], "url string, uri string")
-    cooc = spark.createDataFrame([(a, b, 1) for a, b in edges], "uri_a string, uri_b string, cnt long")
-    got = {r.uri: r.community for r in stats.label_propagation(m, rounds=4, cooc=cooc).collect()}
-    assert got == {"A": "A", "B": "A", "C": "A", "D": "D", "E": "D", "F": "D", "Z": "Z"}
-
-    # rounds=0 is the identity labelling
-    got0 = {r.uri: r.community for r in stats.label_propagation(m, rounds=0, cooc=cooc).collect()}
-    assert got0 == {n: n for n in nodes}
-
-    # synchronous-update parity vs a brute-force replay on random
-    # graphs (catches any accidental asynchronous/in-place update)
-    rng = random.Random(7)
-    for trial in range(3):
-        ns = [f"n{i}" for i in range(10)]
-        es = sorted({tuple(sorted(rng.sample(ns, 2))) for _ in range(14)})
-        want = brute(ns, es, rounds=3)
-        m2 = spark.createDataFrame([("p", n) for n in ns], "url string, uri string")
-        c2 = spark.createDataFrame([(a, b, 1) for a, b in es], "uri_a string, uri_b string, cnt long")
-        got = {r.uri: r.community for r in stats.label_propagation(m2, rounds=3, cooc=c2).collect()}
-        assert got == want, (trial, got, want)
-
-
 def test_merge_snapshot(spark):
     base = spark.createDataFrame(
         [("a", "p", "x", 1), ("b", "p", "y", 2), ("c", "p", "z", 3)],
@@ -1475,46 +1069,6 @@ def test_chunk_token_windows(spark):
     assert cover == set(range(8))
     with pytest.raises(ValueError):
         textstats.chunk_token_windows(d, window=4, stride=0)
-
-
-def test_entity_pagerank_q_exact_fixedpoint(spark):
-    # path graph a-b-c (two pages): hand-computed fixed-point values.
-    # r0 = 10^9 div 3; base = 10^9*15 div 300 = 5e7;
-    # iter1: a,c get floor(r0*85/200)=141666666 from b -> 191666666;
-    # b gets 2*floor(r0*85/100)=2*283333333 -> 616666666
-    from pignlproc_spark.operators import stats
-
-    m = spark.createDataFrame(
-        [("u1", "a"), ("u1", "b"), ("u2", "b"), ("u2", "c")], "url string, uri string"
-    )
-    r1 = {x.uri: x.rank_q for x in stats.entity_pagerank_q(m, iterations=1).collect()}
-    assert r1 == {"a": 191666666, "b": 616666666, "c": 191666666}
-    r3 = {x.uri: x.rank_q for x in stats.entity_pagerank_q(m, iterations=3).collect()}
-    assert r3["b"] > r3["a"] == r3["c"]
-    # floors only ever shave mass: total stays just under SCALE
-    assert 0 < 10**9 - sum(r3.values()) < 100
-
-
-def test_containment_pairs_random_bruteforce(spark):
-    import random
-
-    for seed in (3, 77):
-        rng = random.Random(seed)
-        vocab = ["w%d" % i for i in range(12)]
-        rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(1, 15)))) for i in range(25)]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {
-            (r.id_a, r.id_b): (r.inter_cnt, r.size_a, r.size_b)
-            for r in dedup.containment_pairs(df, min_containment_pct=70).collect()
-        }
-        sets = {i: set(t.split()) for i, t in rows}
-        want = {}
-        for a in range(25):
-            for b in range(a + 1, 25):
-                inter = len(sets[a] & sets[b])
-                if inter * 100 >= min(len(sets[a]), len(sets[b])) * 70:
-                    want[(a, b)] = (inter, len(sets[a]), len(sets[b]))
-        assert got == want, f"seed {seed}"
 
 
 def test_quality_gate_random_bruteforce(spark):
@@ -1862,54 +1416,6 @@ def test_dsir_logweights_bruteforce_and_selection(spark):
     empty = target.where("doc_id < 0")
     out = textstats.dsir_logweights(raw, empty, n_buckets=B).collect()
     assert len(out) == 3
-
-
-def test_winnowing_guarantee_and_density(spark):
-    """The winnowing guarantee: documents sharing a token run of
-    length >= w+k-1 (= 8 at defaults) share at least one identical
-    fingerprint hash; selection density stays within the algorithm's
-    bounds; sub-threshold docs select nothing."""
-    from pignlproc_spark.operators.dedup import winnowing_fingerprints
-
-    shared = "alpha bravo charlie delta echo foxtrot golf hotel"  # 8 tokens
-    df = spark.createDataFrame(
-        [
-            (1, f"intro words before the common part {shared} and then a different tail"),
-            (2, f"{shared} appears immediately here with other following content entirely"),
-            (3, "completely unrelated text with no overlap whatsoever in any window"),
-            (4, "too short"),  # < w+k-1 tokens: no full window-of-windows
-        ],
-        "doc_id long, text string",
-    )
-    fps = winnowing_fingerprints(df).collect()
-    by_doc = {}
-    for r in fps:
-        by_doc.setdefault(r.doc_id, set()).add(r.fp_hash)
-    assert by_doc[1] & by_doc[2], "guaranteed shared fingerprint missing"
-    assert not (by_doc[1] & by_doc.get(3, set()))
-    assert 4 not in by_doc
-    # density bounds: between one-per-w-windows and every gram
-    for doc_id, text in [(1, None), (2, None)]:
-        n_tokens = len([t for r in df.where(F.col("doc_id") == doc_id).collect() for t in r.text.split()])
-        n_grams = n_tokens - 4  # k=5
-        n_starts = n_grams - 3  # w=4
-        n_sel = len(by_doc[doc_id])
-        assert n_sel <= n_grams
-        assert n_sel >= (n_starts + 3) // 4  # ceil(n_starts / w)
-    # positions point inside the gram range
-    assert all(0 <= r.fp_pos for r in fps)
-
-
-def test_winnowing_single_shuffle_plan(spark):
-    """One exchange (the per-doc window), nothing else — the operator
-    must not re-shuffle for the distinct (AQE may coalesce but the
-    distinct reuses the doc_id partitioning only when Spark keeps the
-    window's hash partitioning; assert no Python eval either way)."""
-    from pignlproc_spark.operators.dedup import winnowing_fingerprints
-
-    df = spark.createDataFrame([(1, "a b c d e f g h i j")], "doc_id long, text string")
-    plan = winnowing_fingerprints(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_readability_signals_known_text(spark):
